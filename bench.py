@@ -90,13 +90,13 @@ def main() -> None:
 
     relations: dict[str, float] = {}
     if (SHARED_SHINGLES | POS_SHINGLES) & set(queries):
+        from data_warehouse_product_mix_clustering_spark import state
         from data_warehouse_product_mix_clustering_spark.plans.dedup import (
-            invalidate_shingle_cache,
             shared_pos_shingles,
             shared_shingles,
         )
 
-        invalidate_shingle_cache(SF_DIR)
+        state.invalidate(SF_DIR, kind="shingles")
         if SHARED_SHINGLES & set(queries):
             t0 = time.perf_counter()
             _force(shared_shingles(spark, SF_DIR))

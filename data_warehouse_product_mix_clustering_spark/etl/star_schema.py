@@ -40,58 +40,25 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehouse_product_mix_clustering_spark import state
 from data_warehouse_product_mix_clustering_spark.sources.registry import table
-
-# (applicationId, sf_dir, builder) → built DataFrame. Star-schema builders
-# are pure plan constructors over the (cached) table scans, but analysis of
-# the join/window subtrees still costs driver time on every call; a real
-# warehouse resolves a named view once per session. Same lifecycle rules as
-# the scan cache: DataFrames are immutable plans, entries from other
-# sessions are evicted on insert. Bounded by construction (builders ×
-# sf_dirs), so no LRU cap is needed.
-_STAR_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-# Downstream caches derived from the star schema (e.g. the fitted-cluster
-# cache in plans/ml.py) register a clearer here so one invalidate call
-# propagates; a plain list avoids a circular import (plans → etl).
-_DOWNSTREAM_INVALIDATORS: list = []
-
-
-def register_downstream_invalidator(fn) -> None:
-    """Register a ``fn(sf_dir | None)`` called by invalidate_star_cache."""
-    _DOWNSTREAM_INVALIDATORS.append(fn)
 
 
 def invalidate_star_cache(sf_dir: str | None = None) -> None:
-    """Drop cached builder plans for one sf_dir (or all), plus any
-    registered downstream caches built on them (fitted clusterings).
-    Callers that rewrite testdata mid-session must invalidate BOTH this
-    cache and the scan cache (sources.registry.invalidate)."""
-    if sf_dir is None:
-        _STAR_CACHE.clear()
-    else:
-        for key in [k for k in _STAR_CACHE if k[1] == sf_dir]:
-            del _STAR_CACHE[key]
-    for fn in _DOWNSTREAM_INVALIDATORS:
-        fn(sf_dir)
+    """Drop everything built from ``sf_dir`` (or everything): see ``state``."""
+    state.invalidate(sf_dir)
 
 
 def _per_session(fn):
-    """Memoize a (spark, sf_dir) → DataFrame builder per session."""
+    """Memoize a (spark, sf_dir) → DataFrame builder per session.
+
+    Builders are pure plan constructors over the cached table scans, but
+    analysis of their join/window subtrees still costs driver time on
+    every call; a warehouse resolves a named view once per session."""
 
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        app_id = spark.sparkContext.applicationId
-        key = (app_id, sf_dir, fn.__name__)
-        hit = _STAR_CACHE.get(key)
-        if hit is not None:
-            return hit
-        df = fn(spark, sf_dir)
-        for stale in [k for k in _STAR_CACHE if k[0] != app_id]:
-            del _STAR_CACHE[stale]
-        _STAR_CACHE[key] = df
-        return df
+        return state.cached(spark, "star", sf_dir, fn.__name__, lambda: fn(spark, sf_dir))
 
     return wrapper
 

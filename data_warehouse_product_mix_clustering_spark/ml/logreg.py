@@ -180,63 +180,61 @@ def train_logreg(
     acc: dict[str, float] = {}
 
     losses: list[float] = []
-    aqe = _no_aqe(spark)
-    aqe.__enter__()
     try:
-        for _ in range(n_iter):
-            wdf = _weights_df(spark, list(w.items()), "bucket string, w double")
-            # Per-id margin/probability/residual: the broadcast join
-            # preserves the cached id-partitioning and the groupBy key
-            # matches it, so this agg is exchange-free (y rides as min
-            # — constant per id; grouping on (__id, y) would defeat the
-            # partitioning match).
-            per_id = (
-                base.join(F.broadcast(wdf), "bucket")
-                .groupBy("__id")
-                .agg(
-                    F.min("y").alias("y"),
-                    ratio_round(F.sum(F.col("x") * F.col("w"))).alias("m"),
-                )
-                .select(
-                    "__id",
-                    "y",
-                    ratio_round(_sigmoid(F.col("m"))).alias("p"),
-                )
-                .withColumn("resid", F.col("p") - F.col("y"))
-            )
-            # Gradient SUM per bucket — ≤ buckets+1 rows; with track_loss
-            # the per-iteration loss scalar rides the SAME collect as a
-            # tagged extra row (r19, guide §5: one driver action per
-            # iteration instead of two — the aggregates themselves are
-            # unchanged, so the snapped values are bit-identical).
-            grad_rows = (
-                base.join(
-                    per_id.select("__id", "resid"), "__id"
-                )  # both sides partitioned by __id — no exchange on base
-                .groupBy("bucket")
-                .agg(ratio_round(F.sum(F.col("x") * F.col("resid"))).alias("g"))
-            )
-            if track_loss:
-                pc = F.least(
-                    F.greatest(F.col("p"), F.lit(_P_CLIP)),
-                    F.lit(1.0 - _P_CLIP),
-                )
-                ll = -(
-                    F.col("y") * F.log(pc)
-                    + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - pc)
-                )
-                grad_rows = grad_rows.unionByName(
-                    per_id.agg(ratio_round(F.avg(ll)).alias("g")).select(
-                        F.lit(_LOSS_TAG).alias("bucket"), "g"
+        with _no_aqe(spark):
+            for _ in range(n_iter):
+                wdf = _weights_df(spark, list(w.items()), "bucket string, w double")
+                # Per-id margin/probability/residual: the broadcast join
+                # preserves the cached id-partitioning and the groupBy key
+                # matches it, so this agg is exchange-free (y rides as min
+                # — constant per id; grouping on (__id, y) would defeat the
+                # partitioning match).
+                per_id = (
+                    base.join(F.broadcast(wdf), "bucket")
+                    .groupBy("__id")
+                    .agg(
+                        F.min("y").alias("y"),
+                        ratio_round(F.sum(F.col("x") * F.col("w"))).alias("m"),
                     )
+                    .select(
+                        "__id",
+                        "y",
+                        ratio_round(_sigmoid(F.col("m"))).alias("p"),
+                    )
+                    .withColumn("resid", F.col("p") - F.col("y"))
                 )
-            collected = grad_rows.collect()
-            grad = {r["bucket"]: r["g"] for r in collected}
-            if track_loss:
-                losses.append(grad.pop(_LOSS_TAG))
-            w = _update(w, acc, grad, n_docs, lr, l2)
+                # Gradient SUM per bucket — ≤ buckets+1 rows; with track_loss
+                # the per-iteration loss scalar rides the SAME collect as a
+                # tagged extra row (r19, guide §5: one driver action per
+                # iteration instead of two — the aggregates themselves are
+                # unchanged, so the snapped values are bit-identical).
+                grad_rows = (
+                    base.join(
+                        per_id.select("__id", "resid"), "__id"
+                    )  # both sides partitioned by __id — no exchange on base
+                    .groupBy("bucket")
+                    .agg(ratio_round(F.sum(F.col("x") * F.col("resid"))).alias("g"))
+                )
+                if track_loss:
+                    pc = F.least(
+                        F.greatest(F.col("p"), F.lit(_P_CLIP)),
+                        F.lit(1.0 - _P_CLIP),
+                    )
+                    ll = -(
+                        F.col("y") * F.log(pc)
+                        + (F.lit(1.0) - F.col("y")) * F.log(F.lit(1.0) - pc)
+                    )
+                    grad_rows = grad_rows.unionByName(
+                        per_id.agg(ratio_round(F.avg(ll)).alias("g")).select(
+                            F.lit(_LOSS_TAG).alias("bucket"), "g"
+                        )
+                    )
+                collected = grad_rows.collect()
+                grad = {r["bucket"]: r["g"] for r in collected}
+                if track_loss:
+                    losses.append(grad.pop(_LOSS_TAG))
+                w = _update(w, acc, grad, n_docs, lr, l2)
     finally:
-        aqe.__exit__()
         base.unpersist()
     return w, losses
 
@@ -428,95 +426,93 @@ def train_softmax(
 
     losses: list[float] = []
     probs = None
-    aqe = _no_aqe(spark)
-    aqe.__enter__()
     try:
-        for _ in range(n_iter):
-            wdf = _weights_df(
-                spark,
-                [(c, b, wb) for c, ws in w.items() for b, wb in ws.items()],
-                "cls string, bucket string, w double",
-            )
-            margins = (
-                base.join(F.broadcast(wdf), "bucket")
-                .groupBy("__id", "y", "cls")
-                .agg(ratio_round(F.sum(F.col("x") * F.col("w"))).alias("m"))
-            )
-            stats = margins.groupBy("__id").agg(F.max("m").alias("__mx"))
-            e = margins.join(stats, "__id").select(
-                "__id",
-                "y",
-                "cls",
-                ratio_round(F.exp(F.col("m") - F.col("__mx"))).alias("e"),
-            )
-            z = e.groupBy("__id").agg(ratio_round(F.sum("e")).alias("__z"))
-            probs = (
-                e.join(z, "__id")
-                .select(
+        with _no_aqe(spark):
+            for _ in range(n_iter):
+                wdf = _weights_df(
+                    spark,
+                    [(c, b, wb) for c, ws in w.items() for b, wb in ws.items()],
+                    "cls string, bucket string, w double",
+                )
+                margins = (
+                    base.join(F.broadcast(wdf), "bucket")
+                    .groupBy("__id", "y", "cls")
+                    .agg(ratio_round(F.sum(F.col("x") * F.col("w"))).alias("m"))
+                )
+                stats = margins.groupBy("__id").agg(F.max("m").alias("__mx"))
+                e = margins.join(stats, "__id").select(
                     "__id",
                     "y",
                     "cls",
-                    ratio_round(F.col("e") / F.col("__z")).alias("p"),
+                    ratio_round(F.exp(F.col("m") - F.col("__mx"))).alias("e"),
                 )
-                .withColumn(
-                    "resid",
-                    F.col("p") - (F.col("y") == F.col("cls")).cast("double"),
-                )
-            )
-            if track_loss:
-                # persist, not localCheckpoint: read twice (grad + loss)
-                # so it must be materialized once either way, but a cache
-                # can be UNPERSISTED — checkpointed RDDs would accumulate
-                # for the life of the session, one per iteration (ADVICE
-                # r14). Partitioning is NOT the reason here: the grad
-                # join broadcasts this model-output-sized relation, so
-                # its outputPartitioning never matters (verified in the
-                # PERF_NOTES r15 exchange-profile read). The fused
-                # collect below is the first consumer and materializes
-                # the cache inside its own job — no count() job (r19);
-                # without track_loss there is ONE consumer and the
-                # persist itself is skipped.
-                probs = probs.persist()
-            # Gradient SUMS per (class, bucket) — ≤ |classes|·(buckets+1)
-            # rows; with track_loss the per-iteration loss scalar rides
-            # the SAME collect as a tagged extra row (r19, guide §5: one
-            # driver action per iteration instead of three — the
-            # aggregates are unchanged, so the snapped values are
-            # bit-identical).
-            grad_rows = (
-                base.join(
-                    probs.select("__id", "cls", "resid"), "__id"
-                )  # id-partitioned join; the (cls, bucket) agg shuffles
-                .groupBy("cls", "bucket")
-                .agg(ratio_round(F.sum(F.col("x") * F.col("resid"))).alias("g"))
-            )
-            if track_loss:
-                own = probs.filter(F.col("y") == F.col("cls"))
-                pc = F.least(
-                    F.greatest(F.col("p"), F.lit(_P_CLIP)),
-                    F.lit(1.0 - _P_CLIP),
-                )
-                grad_rows = grad_rows.unionByName(
-                    own.agg(ratio_round(F.avg(-F.log(pc))).alias("g")).select(
-                        F.lit(_LOSS_TAG).alias("cls"),
-                        F.lit(_LOSS_TAG).alias("bucket"),
-                        "g",
+                z = e.groupBy("__id").agg(ratio_round(F.sum("e")).alias("__z"))
+                probs = (
+                    e.join(z, "__id")
+                    .select(
+                        "__id",
+                        "y",
+                        "cls",
+                        ratio_round(F.col("e") / F.col("__z")).alias("p"),
+                    )
+                    .withColumn(
+                        "resid",
+                        F.col("p") - (F.col("y") == F.col("cls")).cast("double"),
                     )
                 )
-            collected = grad_rows.collect()
-            grad = {(r["cls"], r["bucket"]): r["g"] for r in collected}
-            if track_loss:
-                losses.append(grad.pop((_LOSS_TAG, _LOSS_TAG)))
-            for c in classes:
-                gc = {b: grad.get((c, b), 0.0) for b in w[c]}
-                ac = {b: acc.get((c, b), 0.0) for b in w[c]}
-                w[c] = _update(w[c], ac, gc, n_docs, lr, l2)
-                for b, v in ac.items():
-                    acc[(c, b)] = v
-            if track_loss:
-                probs.unpersist()
+                if track_loss:
+                    # persist, not localCheckpoint: read twice (grad + loss)
+                    # so it must be materialized once either way, but a cache
+                    # can be UNPERSISTED — checkpointed RDDs would accumulate
+                    # for the life of the session, one per iteration (ADVICE
+                    # r14). Partitioning is NOT the reason here: the grad
+                    # join broadcasts this model-output-sized relation, so
+                    # its outputPartitioning never matters (verified in the
+                    # PERF_NOTES r15 exchange-profile read). The fused
+                    # collect below is the first consumer and materializes
+                    # the cache inside its own job — no count() job (r19);
+                    # without track_loss there is ONE consumer and the
+                    # persist itself is skipped.
+                    probs = probs.persist()
+                # Gradient SUMS per (class, bucket) — ≤ |classes|·(buckets+1)
+                # rows; with track_loss the per-iteration loss scalar rides
+                # the SAME collect as a tagged extra row (r19, guide §5: one
+                # driver action per iteration instead of three — the
+                # aggregates are unchanged, so the snapped values are
+                # bit-identical).
+                grad_rows = (
+                    base.join(
+                        probs.select("__id", "cls", "resid"), "__id"
+                    )  # id-partitioned join; the (cls, bucket) agg shuffles
+                    .groupBy("cls", "bucket")
+                    .agg(ratio_round(F.sum(F.col("x") * F.col("resid"))).alias("g"))
+                )
+                if track_loss:
+                    own = probs.filter(F.col("y") == F.col("cls"))
+                    pc = F.least(
+                        F.greatest(F.col("p"), F.lit(_P_CLIP)),
+                        F.lit(1.0 - _P_CLIP),
+                    )
+                    grad_rows = grad_rows.unionByName(
+                        own.agg(ratio_round(F.avg(-F.log(pc))).alias("g")).select(
+                            F.lit(_LOSS_TAG).alias("cls"),
+                            F.lit(_LOSS_TAG).alias("bucket"),
+                            "g",
+                        )
+                    )
+                collected = grad_rows.collect()
+                grad = {(r["cls"], r["bucket"]): r["g"] for r in collected}
+                if track_loss:
+                    losses.append(grad.pop((_LOSS_TAG, _LOSS_TAG)))
+                for c in classes:
+                    gc = {b: grad.get((c, b), 0.0) for b in w[c]}
+                    ac = {b: acc.get((c, b), 0.0) for b in w[c]}
+                    w[c] = _update(w[c], ac, gc, n_docs, lr, l2)
+                    for b, v in ac.items():
+                        acc[(c, b)] = v
+                if track_loss:
+                    probs.unpersist()
     finally:
-        aqe.__exit__()
         base.unpersist()
         if probs is not None:
             probs.unpersist()  # no-op when the loop already released it

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,9 +78,26 @@ MAX_BLOCKS = 4096
 # the default is derived from measured fixed costs (~1-1.5 s of driver
 # passes vs a vectorized scan rate of tens of millions of postings/s),
 # not from any local core count.
-WAND_MIN_TOTAL_DL = int(
-    os.environ.get("SPARK_GRAFT_WAND_MIN_TOTAL_DL", 50_000_000)
-)
+_WAND_MIN_TOTAL_DL_DEFAULT = 50_000_000
+
+
+def _wand_min_total_dl() -> int:
+    raw = os.environ.get("SPARK_GRAFT_WAND_MIN_TOTAL_DL")
+    if raw is None:
+        return _WAND_MIN_TOTAL_DL_DEFAULT
+    try:
+        return int(raw)
+    except ValueError:
+        warnings.warn(
+            f"SPARK_GRAFT_WAND_MIN_TOTAL_DL={raw!r} is not an integer; "
+            f"using the default {_WAND_MIN_TOTAL_DL_DEFAULT}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return _WAND_MIN_TOTAL_DL_DEFAULT
+
+
+WAND_MIN_TOTAL_DL = _wand_min_total_dl()
 
 # Completion-marker discipline (ADVICE r8): shared with every persisted
 # index family since r10 — the canonical definitions live in

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_warehouse_product_mix_clustering_spark import state
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -98,43 +100,6 @@ def plan_size_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-# (applicationId, caller-supplied key, how, threshold) → choice string.
-# Catalyst plan-size measurement runs an optimizer pass ON THE DRIVER
-# (~0.1-0.2 s fixed latency per plan_size_bytes call — VERDICT r11 #1:
-# two such passes inside nation_revenue's 0.4 s serving path tripped its
-# bench budget). Table stats do not change within a session, so the
-# DECISION is memoized per session exactly like the star-builder cache
-# (etl/star_schema.py::_per_session): first call measures, every later
-# call applies the remembered hint for free. Entries from dead sessions
-# are evicted on insert; `invalidate_advice` is the explicit hook for
-# callers that rewrite data mid-session (wired into
-# sources.registry.invalidate alongside the scan cache).
-_ADVICE_CACHE: dict[tuple, str] = {}
-
-
-def invalidate_advice(path: str | None = None) -> None:
-    """Drop memoized advisor decisions related to ``path`` (or all,
-    when None). The scan cache's ``invalidate`` calls this with table
-    FILE paths (``{sf_dir}/customer.parquet``) while advisor cache keys
-    carry the bare sf_dir, so the match is SUBSTRING containment in
-    either direction — a key whose string element is a prefix of the
-    path (the sf_dir of the rewritten file) or contains it is dropped
-    (review r12: the first cut compared tuple elements by equality, so
-    no real path-scoped invalidate ever dropped a memo and a rewritten
-    table could keep serving its stale broadcast hint). Over-dropping
-    is safe — the next call re-measures; the cache is bounded (one
-    entry per advised join site per session)."""
-    if path is None:
-        _ADVICE_CACHE.clear()
-        return
-    for k in [
-        k
-        for k in _ADVICE_CACHE
-        if any(isinstance(e, str) and (e in path or path in e) for e in k)
-    ]:
-        del _ADVICE_CACHE[k]
-
-
 def _apply_choice(
     left: DataFrame, right: DataFrame, on: list[str], how: str, choice: str
 ) -> DataFrame:
@@ -173,18 +138,34 @@ def advise_broadcast_join(
     broadcast build side — left-ish joins may broadcast only the right
     input, right joins only the left, full outer neither.
 
-    ``cache_key``: when supplied, the decision is memoized per
-    (applicationId, cache_key, how, threshold) — see ``_ADVICE_CACHE``.
-    Only stable serving-path joins should pass one (the key asserts
-    "these inputs' stats are session-constant"); ad-hoc calls omit it
-    and measure every time."""
-    full_key = None
-    if cache_key is not None:
-        app_id = left.sparkSession.sparkContext.applicationId
-        full_key = (app_id, *cache_key, how, threshold_bytes)
-        hit = _ADVICE_CACHE.get(full_key)
-        if hit is not None:
-            return _apply_choice(left, right, on, how, hit), hit
+    ``cache_key``: a ``(site, src)`` pair naming the join site and the
+    data path its inputs are read from. When supplied, the decision is
+    memoized in the session store per (session, src, site, how,
+    threshold). Plan-size measurement runs a Catalyst optimizer pass ON
+    THE DRIVER (~0.1-0.2 s per ``plan_size_bytes`` call — VERDICT r11 #1:
+    two such passes inside nation_revenue's 0.4 s serving path tripped
+    its bench budget), and table stats do not change within a session,
+    so the first call measures and every later call applies the
+    remembered hint for free. ``sources.registry.invalidate`` of ``src``,
+    or of any table file under it, drops the decision with the data it
+    was measured from. Only stable serving-path joins should pass one
+    (the key asserts "these inputs' stats are session-constant"); ad-hoc
+    calls omit it and measure every time."""
+    if cache_key is None:
+        choice = _advise(left, right, how, threshold_bytes)
+    else:
+        site, src = cache_key
+        choice = state.cached(
+            left.sparkSession,
+            "advice",
+            src,
+            (site, how, threshold_bytes),
+            lambda: _advise(left, right, how, threshold_bytes),
+        )
+    return _apply_choice(left, right, on, how, choice), choice
+
+
+def _advise(left: DataFrame, right: DataFrame, how: str, threshold_bytes: int) -> str:
     h = how.lower().replace("_", "")
     if h in ("inner", "cross"):
         eligible = {"left", "right"}
@@ -199,11 +180,5 @@ def advise_broadcast_join(
         [(sz, side) for sz, side in ((lb, "left"), (rb, "right")) if side in eligible]
     )
     if candidates and candidates[0][0] <= threshold_bytes:
-        choice = "broadcast_" + candidates[0][1]
-    else:
-        choice = "shuffle"
-    if full_key is not None:
-        for stale in [k for k in _ADVICE_CACHE if k[0] != full_key[0]]:
-            del _ADVICE_CACHE[stale]
-        _ADVICE_CACHE[full_key] = choice
-    return _apply_choice(left, right, on, how, choice), choice
+        return "broadcast_" + candidates[0][1]
+    return "shuffle"

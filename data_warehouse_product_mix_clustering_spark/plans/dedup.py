@@ -8,9 +8,12 @@ check, as the driver contract allows for non-SQL-expressible ops).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehouse_product_mix_clustering_spark import state
 from data_warehouse_product_mix_clustering_spark.functions.numeric import (
     ratio_round,
     sql_ratio_round,
@@ -41,57 +44,36 @@ from data_warehouse_product_mix_clustering_spark.operators.dedup import (
 from data_warehouse_product_mix_clustering_spark.plans.registry import register
 from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
-# (applicationId, sf_dir, n) → session-persisted distinct (doc_id, shingle)
-# relation over ``documents``. The whole dedup family starts from this one
-# relation (tokenize → n-gram → explode-distinct — the dominant cost of
-# every shingle-based query), so a session running several dedup queries
-# back-to-back (exactly what a dedup PIPELINE does: Jaccard + containment +
-# LSH over one corpus) should materialize it once, the same catalog-layer
-# trade as sources/registry's scan cache and text.py's postings index.
-# MEMORY_AND_DISK: the relation is narrow (id + one string) and spills
-# rather than OOMs; at 100 TB the equivalent is a materialized shingle
-# table maintained alongside the corpus (the persist is the session-scoped
-# stand-in). Bounded + other-session entries evicted, like _TABLE_CACHE.
-from collections import OrderedDict
-
-# Key: (applicationId, sf_dir, variant) where variant is the shingle
-# width n (distinct-set relation) or "pos{n}" (positional relation). The
-# cap is 8 entries = 4 corpora × the 2 relation flavours a full dedup
-# pipeline touches.
-_SHINGLE_CACHE: "OrderedDict[tuple[str, str, int | str], DataFrame]" = OrderedDict()
-_SHINGLE_CACHE_MAX = 8
-
-
-def _drop_shingle_entry(key: tuple[str, str, int | str]) -> None:
-    df = _SHINGLE_CACHE.pop(key)
+def _unpersist_quietly(df: DataFrame) -> None:
     try:
         df.unpersist()
     except Exception:
         pass  # session already stopped; nothing to release
 
 
-def invalidate_shingle_cache(sf_dir: str | None = None) -> None:
-    """Release persisted shingle relations for one sf_dir, or all."""
-    for key in [k for k in _SHINGLE_CACHE if sf_dir is None or k[1] == sf_dir]:
-        _drop_shingle_entry(key)
-
-
 def _shared_relation(spark: SparkSession, sf_dir: str, variant, build) -> DataFrame:
-    """LRU-cached session persist of one derived-from-``documents`` relation."""
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None:
-        _SHINGLE_CACHE.move_to_end(key)
-        return hit
+    """Session persist of one derived-from-``documents`` relation, held in
+    the session store under ``variant``: the shingle width n (distinct-set
+    relation) or "pos{n}" (positional relation).
+
+    The whole dedup family starts from one such relation (tokenize →
+    n-gram → explode-distinct — the dominant cost of every shingle-based
+    query), so a session running several dedup queries back-to-back
+    (exactly what a dedup PIPELINE does: Jaccard + containment + LSH over
+    one corpus) materializes it once. MEMORY_AND_DISK: the relation is
+    narrow (id + one string) and spills rather than OOMs; at 100 TB the
+    equivalent is a materialized shingle table maintained alongside the
+    corpus (the persist is the session-scoped stand-in)."""
     from pyspark import StorageLevel
 
-    sh = build().persist(StorageLevel.MEMORY_AND_DISK)
-    for stale in [k for k in _SHINGLE_CACHE if k[0] != key[0]]:
-        _drop_shingle_entry(stale)
-    _SHINGLE_CACHE[key] = sh
-    while len(_SHINGLE_CACHE) > _SHINGLE_CACHE_MAX:
-        _drop_shingle_entry(next(iter(_SHINGLE_CACHE)))
-    return sh
+    return state.cached(
+        spark,
+        "shingles",
+        os.path.join(sf_dir, "documents.parquet"),
+        variant,
+        lambda: build().persist(StorageLevel.MEMORY_AND_DISK),
+        release=_unpersist_quietly,
+    )
 
 
 def shared_shingles(spark: SparkSession, sf_dir: str, n: int = 2) -> DataFrame:
@@ -1122,7 +1104,6 @@ def dedup_minhash_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``torn_index_refused``: maintenance refuses an index without its
       commit marker.
     """
-    import os
     import shutil
     import tempfile
 

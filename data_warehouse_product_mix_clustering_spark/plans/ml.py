@@ -9,11 +9,10 @@ assertions in unit tests.
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_warehouse_product_mix_clustering_spark import state
 from data_warehouse_product_mix_clustering_spark.functions.numeric import ratio_round, sql_ratio_round
 from data_warehouse_product_mix_clustering_spark.ml.pipelines import (
     assign_vectors,
@@ -85,29 +84,9 @@ def features_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) → fitted cluster assignment. Mirrors the scan /
-# star-schema cache lifecycle: other-session keys evicted on insert, small
-# LRU bound. See product_clusters' docstring for why this is parity (the
-# reference st.cache_data's its fit) and why audits bypass it.
-_CLUSTER_CACHE: "OrderedDict[tuple[str, str], DataFrame]" = OrderedDict()
-_CLUSTER_CACHE_MAX = 8
-
-
 def invalidate_cluster_cache(sf_dir: str | None = None) -> None:
-    """Drop cached fitted clusterings for one sf_dir (or all). Registered
-    with the star-schema invalidator, so the documented rewrite protocol
-    (sources.registry.invalidate + invalidate_star_cache) also clears the
-    fit built on that data."""
-    if sf_dir is None:
-        _CLUSTER_CACHE.clear()
-        return
-    for key in [k for k in _CLUSTER_CACHE if k[1] == sf_dir]:
-        del _CLUSTER_CACHE[key]
-
-
-from data_warehouse_product_mix_clustering_spark.etl import star_schema as _star_schema  # noqa: E402
-
-_star_schema.register_downstream_invalidator(invalidate_cluster_cache)
+    """Drop cached fitted clusterings for one sf_dir (or all)."""
+    state.invalidate(sf_dir, kind="clusters")
 
 
 @register("product_clusters", headline=True)
@@ -127,21 +106,14 @@ def product_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     `cluster_quality_audit` calls ``kmeans_assign`` DIRECTLY (never this
     cache), so its double-fit determinism contract stays a real double fit.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CLUSTER_CACHE.get(key)
-    if hit is not None:
-        _CLUSTER_CACHE.move_to_end(key)
-        return hit
-    feats = product_features(spark, sf_dir)
-    out = kmeans_assign(feats, MATRIX_FEATURES, order_col="product_id").select(
-        "product_id", F.col("cluster").cast("int").alias("cluster"), *MATRIX_FEATURES
-    )
-    for k in [k for k in _CLUSTER_CACHE if k[0] != key[0]]:
-        del _CLUSTER_CACHE[k]  # stopped sessions must not pin checkpoints
-    _CLUSTER_CACHE[key] = out
-    while len(_CLUSTER_CACHE) > _CLUSTER_CACHE_MAX:
-        _CLUSTER_CACHE.popitem(last=False)
-    return out
+
+    def fit() -> DataFrame:
+        feats = product_features(spark, sf_dir)
+        return kmeans_assign(feats, MATRIX_FEATURES, order_col="product_id").select(
+            "product_id", F.col("cluster").cast("int").alias("cluster"), *MATRIX_FEATURES
+        )
+
+    return state.cached(spark, "clusters", sf_dir, (), fit)
 
 
 @register("cluster_profile")

@@ -7,10 +7,12 @@ SQL expressions (functions/text.py), each with a mirrored DuckDB oracle.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehouse_product_mix_clustering_spark import state
 from data_warehouse_product_mix_clustering_spark.functions.numeric import ratio_round, sql_ratio_round
 from data_warehouse_product_mix_clustering_spark.functions.text import (
     STOPWORDS,
@@ -880,36 +882,16 @@ def doc_bm25_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # value-identical to the one-pass scorer by sharing its oracle.
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) → built index dir. Same lifecycle discipline as
-# the scan/star/fit caches: other-session keys evicted on insert, bounded,
-# and part of the documented rewrite protocol — a caller that rewrites the
-# documents parquet mid-session calls sources.registry.invalidate(path) AND
-# invalidate_postings_cache(sf_dir), else the index serves the old corpus.
-_POSTINGS_CACHE: dict[tuple[str, str], str] = {}
-_POSTINGS_CACHE_MAX = 4
-
-
-def _drop_postings_entry(key) -> None:
-    # Unlike the in-memory caches this mirrors, each entry OWNS an
-    # on-disk index — eviction must reclaim the directory or every
-    # drop strands a corpus-sized index under /tmp (review r8).
-    import shutil
-
-    path = _POSTINGS_CACHE.pop(key)
-    shutil.rmtree(path, ignore_errors=True)
-
-
-def invalidate_postings_cache(sf_dir: str | None = None) -> None:
-    """Drop built postings indexes (dict entry AND index directory) for
-    one sf_dir, or all."""
-    for key in [
-        k for k in _POSTINGS_CACHE if sf_dir is None or k[1] == sf_dir
-    ]:
-        _drop_postings_entry(key)
+def _remove_index(index_dir: str) -> None:
+    # Each postings entry OWNS an on-disk index: dropping the entry must
+    # reclaim the directory or it strands a corpus-sized index under /tmp.
+    shutil.rmtree(index_dir, ignore_errors=True)
 
 
 def _postings_index_for(spark: SparkSession, sf_dir: str) -> str:
-    import os
+    """The session's postings index over ``sf_dir``'s documents, built on
+    first use and held in the session store (so rewriting the documents
+    file and invalidating it rebuilds the index)."""
     import tempfile
 
     from data_warehouse_product_mix_clustering_spark.operators.postings import (
@@ -917,25 +899,25 @@ def _postings_index_for(spark: SparkSession, sf_dir: str) -> str:
         index_is_committed,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _POSTINGS_CACHE.get(key)
-    if hit is not None:
-        # The commit marker (not just stats/ existing) decides freshness:
-        # a torn build/update leaves the marker absent, forcing a rebuild
-        # instead of serving mutually inconsistent relations (ADVICE r8).
-        if index_is_committed(hit):
-            return hit
-        # stale entry (partial build / external cleanup): reclaim the
-        # old directory before rebuilding, or it strands under /tmp
-        _drop_postings_entry(key)
-    index_dir = tempfile.mkdtemp(prefix="spark_graft_postings_")
-    docs = table(spark, "documents", sf_dir).select("doc_id", "text")
-    build_postings_index(docs, index_dir, tokens(F.col("text")))
-    for k in [k for k in _POSTINGS_CACHE if k[0] != key[0]]:
-        _drop_postings_entry(k)
-    _POSTINGS_CACHE[key] = index_dir
-    while len(_POSTINGS_CACHE) > _POSTINGS_CACHE_MAX:
-        _drop_postings_entry(next(iter(_POSTINGS_CACHE)))
+    docs_path = os.path.join(sf_dir, "documents.parquet")
+
+    def build() -> str:
+        index_dir = tempfile.mkdtemp(prefix="spark_graft_postings_")
+        docs = table(spark, "documents", sf_dir).select("doc_id", "text")
+        build_postings_index(docs, index_dir, tokens(F.col("text")))
+        return index_dir
+
+    def lookup() -> str:
+        return state.cached(spark, "postings", docs_path, (), build, release=_remove_index)
+
+    index_dir = lookup()
+    # The commit marker (not just stats/ existing) decides freshness: a
+    # torn build/update or an external cleanup leaves the marker absent,
+    # forcing a rebuild instead of serving mutually inconsistent
+    # relations (ADVICE r8).
+    if not index_is_committed(index_dir):
+        state.invalidate(docs_path, kind="postings")
+        index_dir = lookup()
     return index_dir
 
 
@@ -1028,7 +1010,6 @@ def postings_incremental_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     change, drifted stats — flips a boolean or a count and hash-fails the
     driver row.
     """
-    import shutil
     import tempfile
 
     from data_warehouse_product_mix_clustering_spark.operators.postings import (
@@ -1297,60 +1278,28 @@ def bm25_wand_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_N_MERGES = 20
 _BPE_AUDIT_VOCAB_CAP = 2000
 
-# (applicationId, sf_dir, n_merges) → trained merge table. The
-# product_clusters fit-cache lifecycle exactly (plans/ml.py): training is
-# the expensive iterative stage (20 merge rounds ≈ 32 s at sf0.1), the
-# result is O(n_merges) driver state, and every consumer — the merge
-# table query, tokenizer-true context windows, their audit — needs the
-# SAME table, so a pipeline trains once per (session, corpus). Safe
-# because train_bpe is deterministic on fixed input; `bpe_train_audit`
-# and the property tests call train_bpe DIRECTLY (never this cache), so
-# the training-rule contracts stay real training runs. Chained into the
-# star-schema invalidation protocol: a documented corpus rewrite drops
-# the memo with the data it was mined from (the advisor-memo rule).
-from collections import OrderedDict as _OrderedDict
-
-_MERGES_CACHE: "_OrderedDict[tuple[str, str, int], list]" = _OrderedDict()
-_MERGES_CACHE_MAX = 8
-
-
-def invalidate_bpe_merges_cache(sf_dir: str | None = None) -> None:
-    """Drop cached merge tables for one sf_dir (or all). Registered with
-    the star-schema invalidator so the documented rewrite protocol
-    (sources.registry.invalidate + invalidate_star_cache) also clears
-    tokenizers trained on that data."""
-    if sf_dir is None:
-        _MERGES_CACHE.clear()
-        return
-    for key in [k for k in _MERGES_CACHE if k[1] == sf_dir]:
-        del _MERGES_CACHE[key]
-
-
-from data_warehouse_product_mix_clustering_spark.etl import star_schema as _star_schema  # noqa: E402
-
-_star_schema.register_downstream_invalidator(invalidate_bpe_merges_cache)
-
-
 def corpus_bpe_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = _BPE_N_MERGES
 ) -> list:
-    """The trained merge table for ``sf_dir``'s documents, session-memoized
-    (see ``_MERGES_CACHE``'s comment for the lifecycle and why audits
-    bypass it)."""
+    """The trained merge table for ``sf_dir``'s documents, memoized per
+    (session, corpus, n_merges) — the ``product_clusters`` fit-cache
+    parity. Training is the expensive iterative stage (20 merge rounds ≈
+    32 s at sf0.1), the result is O(n_merges) driver state, and every
+    consumer — the merge table query, tokenizer-true context windows,
+    their audit — needs the SAME table, so a pipeline trains once per
+    (session, corpus). Safe because train_bpe is deterministic on fixed
+    input; ``bpe_train_audit`` and the property tests call train_bpe
+    DIRECTLY (never this memo), so the training-rule contracts stay real
+    training runs."""
     from data_warehouse_product_mix_clustering_spark.operators.bpe import train_bpe, word_counts
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    hit = _MERGES_CACHE.get(key)
-    if hit is not None:
-        _MERGES_CACHE.move_to_end(key)
-        return hit
-    merges = train_bpe(word_counts(table(spark, "documents", sf_dir)), n_merges)
-    for k in [k for k in _MERGES_CACHE if k[0] != key[0]]:
-        del _MERGES_CACHE[k]  # stopped sessions' state must not linger
-    _MERGES_CACHE[key] = merges
-    while len(_MERGES_CACHE) > _MERGES_CACHE_MAX:
-        _MERGES_CACHE.popitem(last=False)
-    return merges
+    return state.cached(
+        spark,
+        "merges",
+        os.path.join(sf_dir, "documents.parquet"),
+        n_merges,
+        lambda: train_bpe(word_counts(table(spark, "documents", sf_dir)), n_merges),
+    )
 
 
 @register("bpe_merge_table")

@@ -37,7 +37,12 @@ class no_adaptive_execution:
     runtime join-strategy conversion — a loop that joins
     checkpoint-backed relations WITHOUT an explicit broadcast hint must
     keep AQE (the static planner sees unknown sizes and would pick a
-    sort-merge join)."""
+    sort-merge join).
+
+    Use it as a ``with`` block. It flips a SESSION-GLOBAL conf, so it
+    assumes the session is used from one thread: a query planned on
+    another thread while the scope is open also runs without AQE, and
+    overlapping scopes on two threads can restore each other's value."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark

@@ -8,12 +8,12 @@ but the expected schemas live in ``schemas.py`` for validation.
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_warehouse_product_mix_clustering_spark import state
 from data_warehouse_product_mix_clustering_spark.schemas import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -43,34 +43,9 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# (applicationId, path) → resolved scan DataFrame. ``spark.read.parquet``
-# lists the path and reads footers for schema on EVERY call — driver-side
-# metadata work a real engine caches in its catalog. DataFrames are
-# immutable plans, so reusing one is safe. Bounded: entries from sessions
-# other than the inserting one are evicted on insert (a stopped session's
-# DataFrames would otherwise be pinned forever), and the dict is LRU-capped
-# so a long-lived process scanning many paths can't grow it without bound.
-_TABLE_CACHE: "OrderedDict[tuple[str, str], DataFrame]" = OrderedDict()
-_TABLE_CACHE_MAX = 64
-
-
 def invalidate(path: str | None = None) -> None:
-    """Drop cached scans for ``path`` (every sf_dir), or everything.
-
-    Callers that rewrite a testdata path mid-session must invalidate it:
-    the cached DataFrame pins the file listing resolved at first read, so a
-    changed directory would otherwise keep serving the stale listing.
-    """
-    # Advisor decisions are derived from these scans' stats — a rewrite
-    # invalidates the memoized broadcast choice too (stats.py r12).
-    from data_warehouse_product_mix_clustering_spark.operators.stats import invalidate_advice
-
-    invalidate_advice(path)
-    if path is None:
-        _TABLE_CACHE.clear()
-        return
-    for key in [k for k in _TABLE_CACHE if k[1] == path]:
-        del _TABLE_CACHE[key]
+    """Drop everything built from ``path`` (or everything): see ``state``."""
+    state.invalidate(path)
 
 
 def _unlink_quietly(path: str) -> None:
@@ -179,30 +154,21 @@ def table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFram
     timestamp regardless of the file's encoding (see normalize_events_ts).
     The resolved scan is cached per (session, path) — repeated plan
     construction over the same table skips the file-listing/footer read.
+    The cached DataFrame pins the file listing resolved at first read, so
+    a caller that rewrites the path mid-session must ``invalidate`` it.
     """
     _ensure_worker_imports(spark)
     sf_dir = sf_dir or DEFAULT_SF_DIR
     path = os.path.join(sf_dir, f"{name}.parquet")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, path)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        _TABLE_CACHE.move_to_end(key)
-        return hit
-    if name == "events":
+
+    def build() -> DataFrame:
+        if name != "events":
+            return spark.read.parquet(path)
         # Harmless for µs files; required in case ts is TIMESTAMP(NANOS).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_events_ts(spark.read.parquet(path))
-    else:
-        df = spark.read.parquet(path)
-    # Evict other sessions' entries: their DataFrames (and the sessions
-    # they pin) are unusable here and would never age out on their own.
-    for stale in [k for k in _TABLE_CACHE if k[0] != app_id]:
-        del _TABLE_CACHE[stale]
-    _TABLE_CACHE[key] = df
-    while len(_TABLE_CACHE) > _TABLE_CACHE_MAX:
-        _TABLE_CACHE.popitem(last=False)
-    return df
+        return normalize_events_ts(spark.read.parquet(path))
+
+    return state.cached(spark, "table", path, (), build)
 
 
 def load_testdata(

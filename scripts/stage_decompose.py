@@ -106,13 +106,13 @@ def main() -> None:
 
     # bench-identical preconditioning: warm-up + shared relations
     _force(qs["pricing_summary"].fn(spark, SF_DIR))
+    from data_warehouse_product_mix_clustering_spark import state
     from data_warehouse_product_mix_clustering_spark.plans.dedup import (
-        invalidate_shingle_cache,
         shared_pos_shingles,
         shared_shingles,
     )
 
-    invalidate_shingle_cache(SF_DIR)
+    state.invalidate(SF_DIR, kind="shingles")
     sc.setJobGroup("relations", "shared relations")
     _force(shared_shingles(spark, SF_DIR))
     _force(shared_pos_shingles(spark, SF_DIR))

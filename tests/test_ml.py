@@ -202,42 +202,17 @@ def test_lstm_reference_config_keeps_descending():
     assert late < early, f"late mean {late:.5f} not below early mean {early:.5f}"
 
 
-def test_product_clusters_fit_cached_per_session(spark):
-    """product_clusters serves the SAME fitted plan on repeat calls (the
-    engine-side @st.cache_data of reference Clustering_Analysis.py:24),
-    keyed per (session, sf_dir); dead-session keys are evicted on insert,
-    and the audit path never reads the cache (it fits via kmeans_assign
-    directly, keeping the double-fit determinism contract real)."""
-    from data_warehouse_product_mix_clustering_spark.plans import ml as ml_plans
-
-    ml_plans._CLUSTER_CACHE.clear()
-    a = ml_plans.product_clusters(spark, "/root/testdata/sf0.001")
-    b = ml_plans.product_clusters(spark, "/root/testdata/sf0.001")
-    assert a is b, "same (session, sf_dir) must reuse the fitted assignment"
-    ml_plans._CLUSTER_CACHE[("dead-app-id", "/x")] = a
-    ml_plans._CLUSTER_CACHE.pop(
-        (spark.sparkContext.applicationId, "/root/testdata/sf0.001")
-    )
-    c = ml_plans.product_clusters(spark, "/root/testdata/sf0.001")
-    assert ("dead-app-id", "/x") not in ml_plans._CLUSTER_CACHE, (
-        "stale-session entries must be evicted on insert"
-    )
-    assert c is not a
-
-
 def test_star_invalidation_clears_cluster_cache(spark):
     """invalidate_star_cache must also drop fitted clusterings built on
-    that data (the downstream-invalidator chain), so the documented
-    testdata-rewrite protocol leaves no stale fit behind."""
+    that data, so the documented testdata-rewrite protocol leaves no
+    stale fit behind."""
     from data_warehouse_product_mix_clustering_spark.etl.star_schema import invalidate_star_cache
     from data_warehouse_product_mix_clustering_spark.plans import ml as ml_plans
 
-    ml_plans._CLUSTER_CACHE.clear()
-    a = ml_plans.product_clusters(spark, "/root/testdata/sf0.001")
-    assert len(ml_plans._CLUSTER_CACHE) == 1
-    invalidate_star_cache("/root/testdata/sf0.001")
-    assert len(ml_plans._CLUSTER_CACHE) == 0
-    b = ml_plans.product_clusters(spark, "/root/testdata/sf0.001")
+    a = ml_plans.product_clusters(spark, SF_SMOKE)
+    assert ml_plans.product_clusters(spark, SF_SMOKE) is a
+    invalidate_star_cache(SF_SMOKE)
+    b = ml_plans.product_clusters(spark, SF_SMOKE)
     assert b is not a, "post-invalidate call must refit, not reuse"
 
 

@@ -1080,6 +1080,28 @@ def test_postings_index_incremental_update(spark, tmp_path):
     assert not os.path.exists(dead)
 
 
+def test_wand_gate_env_malformed_falls_back_to_default(monkeypatch):
+    """A malformed SPARK_GRAFT_WAND_MIN_TOTAL_DL must not break importing
+    operators/postings.py: it warns and keeps the default gate."""
+    import importlib
+
+    from data_warehouse_product_mix_clustering_spark.operators import postings
+
+    default = postings.WAND_MIN_TOTAL_DL
+    try:
+        monkeypatch.setenv("SPARK_GRAFT_WAND_MIN_TOTAL_DL", "5e7")
+        with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_WAND_MIN_TOTAL_DL"):
+            importlib.reload(postings)
+        assert postings.WAND_MIN_TOTAL_DL == 50_000_000
+        monkeypatch.setenv("SPARK_GRAFT_WAND_MIN_TOTAL_DL", "1234")
+        importlib.reload(postings)
+        assert postings.WAND_MIN_TOTAL_DL == 1234
+    finally:
+        monkeypatch.undo()
+        importlib.reload(postings)
+    assert postings.WAND_MIN_TOTAL_DL == default
+
+
 def test_postings_index_commit_marker_and_empty_terms(spark, tmp_path):
     """ADVICE r8 guards: searches with no terms fail with a clear
     ValueError (not an opaque py4j isin() error); a build/update writes

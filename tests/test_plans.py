@@ -801,6 +801,64 @@ def test_bm25_indexed_matches_adhoc(spark):
     ]
 
 
+def test_postings_index_rebuilt_after_documents_rewrite(spark, tmp_path):
+    """Rewriting documents.parquet and invalidating that one path must
+    rebuild the postings index (and remove the old one): the served
+    top-k may only name documents of the rewritten table."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from data_warehouse_product_mix_clustering_spark.plans.text import _postings_index_for
+    from data_warehouse_product_mix_clustering_spark.sources import registry
+
+    sf = str(tmp_path)
+    docs = os.path.join(sf, "documents.parquet")
+    shutil.copyfile(os.path.join(SF_SMOKE, "documents.parquet"), docs)
+    search = QUERIES["doc_bm25_indexed_search"].fn
+    old_index = _postings_index_for(spark, sf)
+    keep = [r.doc_id for r in search(spark, sf).collect()][:5]
+    full = pq.read_table(docs)
+    assert full.num_rows > len(keep) == 5
+    pq.write_table(full.filter(pc.is_in(full["doc_id"], value_set=pa.array(keep))), docs)
+
+    registry.invalidate(docs)
+    assert _postings_index_for(spark, sf) != old_index
+    assert not os.path.exists(old_index)
+    got = {r.doc_id for r in search(spark, sf).collect()}
+    assert got and got <= set(keep), got - set(keep)
+
+
+def test_postings_index_removed_at_exit():
+    """An index the session store still holds when the interpreter exits
+    is removed with it, not left behind in the temp dir."""
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "import os\n"
+        "from data_warehouse_product_mix_clustering_spark.session import get_spark\n"
+        "from data_warehouse_product_mix_clustering_spark.plans.text import _postings_index_for\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=2)\n"
+        f"index_dir = _postings_index_for(spark, {SF_SMOKE!r})\n"
+        "print(os.path.isdir(index_dir), index_dir)\n"
+    )
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": "1g"}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    built, index_dir = out.stdout.strip().splitlines()[-1].split(" ", 1)
+    assert built == "True" and "spark_graft_postings_" in index_dir
+    assert not os.path.exists(index_dir)
+
+
 def test_ivf_indexed_search_prunes_to_probe_cells(spark, tmp_path):
     """Persisted-IVF search must show literal partition pruning on the
     cell column — the seek contract of build_ivf_index/search_ivf_index."""
@@ -1020,11 +1078,12 @@ def test_advisor_decision_memoized_per_session(spark, monkeypatch):
     driver (~0.1-0.2 s), and nation_revenue paid TWO per serving call —
     tripping its bench budget. The decision must be measured once per
     (session, cache_key) and applied for free afterwards; invalidation
-    (scan-cache invalidate / invalidate_advice) forces a re-measure."""
+    forces a re-measure."""
+    from data_warehouse_product_mix_clustering_spark import state
     from data_warehouse_product_mix_clustering_spark.operators import stats
     from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
-    stats.invalidate_advice()
+    state.invalidate(kind="advice")
     calls = {"n": 0}
     real = stats.plan_size_bytes
 
@@ -1048,7 +1107,7 @@ def test_advisor_decision_memoized_per_session(spark, monkeypatch):
         "n_nationkey", "s_nationkey"), ["s_nationkey"])
     assert calls["n"] == 4
     # invalidation by sf_dir drops the entry → next call re-measures
-    stats.invalidate_advice(SF_SMOKE)
+    state.invalidate(SF_SMOKE, kind="advice")
     stats.advise_broadcast_join(sup, nat.withColumnRenamed(
         "n_nationkey", "s_nationkey"), ["s_nationkey"], cache_key=key)
     assert calls["n"] == 6
@@ -1063,11 +1122,12 @@ def test_advisor_memo_dropped_by_table_path_invalidate(spark, monkeypatch):
     The wired integration must force a re-measure."""
     import os
 
+    from data_warehouse_product_mix_clustering_spark import state
     from data_warehouse_product_mix_clustering_spark.operators import stats
     from data_warehouse_product_mix_clustering_spark.sources import registry
     from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
-    stats.invalidate_advice()
+    state.invalidate(kind="advice")
     calls = {"n": 0}
     real = stats.plan_size_bytes
 

@@ -4,9 +4,19 @@ the columns we declare) — catches silent testdata drift between rounds."""
 
 from __future__ import annotations
 
+import os
+from types import SimpleNamespace
+
 import pytest
 
 from data_warehouse_product_mix_clustering_spark import schemas as S
+from data_warehouse_product_mix_clustering_spark import state
+from data_warehouse_product_mix_clustering_spark.etl.star_schema import dim_product
+from data_warehouse_product_mix_clustering_spark.operators.stats import advise_broadcast_join
+from data_warehouse_product_mix_clustering_spark.plans.dedup import shared_shingles
+from data_warehouse_product_mix_clustering_spark.plans.ml import product_clusters
+from data_warehouse_product_mix_clustering_spark.plans.text import _postings_index_for, corpus_bpe_merges
+from data_warehouse_product_mix_clustering_spark.sources import registry
 from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
 from conftest import SF_SMOKE
@@ -98,47 +108,180 @@ def test_table_scan_metadata_cached(spark):
     )
 
 
-def test_table_scan_cache_bounded_and_invalidatable(spark):
-    """The scan cache must not grow without bound, must forget stale
-    sessions, and must honor explicit invalidation for rewritten paths."""
-    import os
+def _advice(spark, sf):
+    nat = table(spark, "nation", sf).withColumnRenamed("n_nationkey", "s_nationkey")
+    sup = table(spark, "supplier", sf)
+    return advise_broadcast_join(sup, nat, ["s_nationkey"], cache_key=("test_store", sf))[1]
 
-    from data_warehouse_product_mix_clustering_spark.sources import registry
-    from data_warehouse_product_mix_clustering_spark.sources.registry import (
-        _TABLE_CACHE,
-        invalidate,
-        table,
-    )
 
-    app_id = spark.sparkContext.applicationId
-    a = table(spark, "orders", "/root/testdata/sf0.001")
+# kind → (getter, a table file whose invalidation must drop the entry, a
+# table file whose invalidation must keep it or None, "was the value
+# released" probe or None for kinds that hold nothing to release).
+STORE_KINDS = {
+    "table": (lambda sp, sf: table(sp, "orders", sf), "orders.parquet", "nation.parquet", None),
+    "star": (dim_product, "part.parquet", None, None),
+    "clusters": (product_clusters, "lineitem.parquet", None, None),
+    "shingles": (shared_shingles, "documents.parquet", "nation.parquet", lambda df: not df.is_cached),
+    "postings": (_postings_index_for, "documents.parquet", "nation.parquet", lambda d: not os.path.exists(d)),
+    "merges": (corpus_bpe_merges, "documents.parquet", "nation.parquet", None),
+    "advice": (_advice, "nation.parquet", None, None),
+}
 
-    # Entries keyed to a session other than the inserting one are evicted
-    # on the next insert — a restarted session never reuses (or pins) the
-    # old session's DataFrames.
-    path = os.path.join("/root/testdata/sf0.001", "orders.parquet")
-    _TABLE_CACHE[("dead-app-id", path)] = a
-    # Eviction happens on INSERT, so force a cache miss for the probe read.
-    invalidate(os.path.join("/root/testdata/sf0.001", "lineitem.parquet"))
-    table(spark, "lineitem", "/root/testdata/sf0.001")
-    assert ("dead-app-id", path) not in _TABLE_CACHE
-    assert all(k[0] == app_id for k in _TABLE_CACHE)
 
-    # invalidate(path) drops that path only; the next call re-resolves.
-    invalidate(path)
-    assert all(k[1] != path for k in _TABLE_CACHE)
-    a2 = table(spark, "orders", "/root/testdata/sf0.001")
-    assert a2 is not a, "invalidated path must be re-resolved from disk"
+@pytest.mark.parametrize("kind", sorted(STORE_KINDS))
+def test_store_entry_lifecycle(spark, monkeypatch, kind):
+    """Every memoized kind goes through the one session store: a hit
+    returns the same object; only invalidating a path the entry was built
+    from (or its sf_dir) drops it; the LRU bound, the bound on entries
+    that own storage and other-session eviction on insert hold; and an evicted or invalidated entry is
+    released (persisted relations unpersisted, index dirs removed)."""
+    get, drop_file, keep_file, released = STORE_KINDS[kind]
+    built: list[str] = []
+    real_cached = state.cached
 
-    # LRU bound: the cache never exceeds its cap.
-    old_max = registry._TABLE_CACHE_MAX
-    registry._TABLE_CACHE_MAX = 2
+    def spy(spark_, kind_, src, params, build, release=None):
+        def recorded():
+            built.append(kind_)
+            return build()
+
+        return real_cached(spark_, kind_, src, params, recorded, release)
+
+    monkeypatch.setattr(state, "cached", spy)
+
+    def fetch():
+        built.clear()
+        value = get(spark, SF_SMOKE)
+        return value, kind in built
+
+    def probe(session, release=None):
+        real_cached(session, "probe", "/probe", (), object, release)
+
+    def is_released(value):
+        return released is None or released(value)
+
+    state.invalidate()
+    a, new = fetch()
+    assert new
+    b, new = fetch()
+    assert b is a and not new, "a hit must return the same object"
+
+    # Unrelated paths keep it: a sibling sf_dir whose name only extends
+    # this one's, and (for per-file kinds) another table of the same dir.
+    registry.invalidate(SF_SMOKE + "0")
+    if keep_file:
+        registry.invalidate(os.path.join(SF_SMOKE, keep_file))
+    b, new = fetch()
+    assert b is a and not new
+
+    # Entries that own storage have their own bound; the others do not
+    # count against it.
+    held = state.MAX_HELD
+    monkeypatch.setattr(state, "MAX_HELD", 1)
+    probe(spark, [].append)
+    monkeypatch.setattr(state, "MAX_HELD", held)
+    state.invalidate(kind="probe")
+    b, new = fetch()
+    if released is None:
+        assert b is a and not new, "an entry that owns nothing must survive the held bound"
+    else:
+        assert new and released(a), "the held bound must evict and release the entry"
+    a = b
+
+    # The LRU bound holds, and eviction releases the entry.
+    bound = state.MAX_ENTRIES
+    monkeypatch.setattr(state, "MAX_ENTRIES", 1)
+    probe(spark)
+    assert len(state._entries) == 1
+    assert is_released(a)
+    monkeypatch.setattr(state, "MAX_ENTRIES", bound)
+    b, new = fetch()
+    assert new, "an evicted entry must be rebuilt"
+
+    # Inserting evicts (and releases) every other session's entries.
+    dead = []
+    probe(SimpleNamespace(sparkContext=SimpleNamespace(applicationId="dead-app-id")), dead.append)
+    assert is_released(b)
+    c, new = fetch()
+    assert new and dead, "another session's entry must be evicted on insert"
+
+    # Invalidating a table FILE the entry was built from drops it.
+    registry.invalidate(os.path.join(SF_SMOKE, drop_file))
+    assert is_released(c)
+    d, new = fetch()
+    assert new, "path-scoped invalidation must force a rebuild"
+
+    # Invalidating the sf_dir drops it too, also where the entry was
+    # built from one file under that dir.
+    registry.invalidate(SF_SMOKE)
+    assert is_released(d)
+    _, new = fetch()
+    assert new, "invalidating the sf_dir must drop entries built from its files"
+
+
+def test_store_concurrent_inserts_release_every_loser(monkeypatch):
+    """Threads racing on overlapping keys under a tight bound: every
+    built value is either live in the store or released exactly once."""
+    import sys
+    import threading
+
+    session = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="stress-app"))
+    monkeypatch.setattr(state, "MAX_ENTRIES", 4)
+    built, released = [], []
+
+    def build():
+        value = object()
+        built.append(value)
+        return value
+
+    def worker(w):
+        for n in range(300):
+            state.cached(session, "probe", f"/stress/{(n + w) % 6}", (), build, released.append)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
     try:
-        invalidate()  # start empty so all three reads below are inserts
-        table(spark, "region", "/root/testdata/sf0.001")
-        table(spark, "nation", "/root/testdata/sf0.001")
-        table(spark, "customer", "/root/testdata/sf0.001")
-        assert len(_TABLE_CACHE) <= 2
+        threads = [threading.Thread(target=worker, args=(w,)) for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
     finally:
-        registry._TABLE_CACHE_MAX = old_max
-        invalidate()
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(state._entries) <= 4
+    state.invalidate(kind="probe")
+    assert len({id(v) for v in released}) == len(released) == len(built)
+
+
+def test_no_cache_outside_the_store():
+    """The session store (state.py) is the package's only memo: no other
+    module may define a module-level OrderedDict() or a ``_*_CACHE``
+    global."""
+    import ast
+    import pathlib
+    import re
+
+    import data_warehouse_product_mix_clustering_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "state.py" and path.parent == root:
+            continue
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign):
+                targets, value = [node.target], node.value
+            else:
+                continue
+            names = [t.id for t in targets if isinstance(t, ast.Name)]
+            calls = [n.func for n in ast.walk(value) if isinstance(n, ast.Call)] if value else []
+            ordered = any(
+                (isinstance(f, ast.Name) and f.id.endswith("OrderedDict"))
+                or (isinstance(f, ast.Attribute) and f.attr == "OrderedDict")
+                for f in calls
+            )
+            if ordered or any(re.fullmatch(r"_\w*_CACHE", n) for n in names):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders

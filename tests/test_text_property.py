@@ -1040,31 +1040,26 @@ def test_corpus_bpe_merges_cached_and_invalidated(spark):
     table on repeat calls (the product_clusters fit-cache lifecycle for
     the tokenizer: training is the expensive iterative stage, every
     consumer — merge table query, tokenizer-true windows, their audit —
-    reads one table per (session, corpus)); dead-session keys evict on
-    insert, and invalidate_star_cache drops tokenizers trained on the
-    rewritten data (the downstream-invalidator chain)."""
+    reads one table per (session, corpus)); invalidating the documents
+    file or the whole sf_dir drops it, and retraining reproduces the same
+    table."""
+    import os
+
+    from conftest import SF_SMOKE as sf
     from data_warehouse_product_mix_clustering_spark.etl.star_schema import invalidate_star_cache
     from data_warehouse_product_mix_clustering_spark.plans import text as text_plans
+    from data_warehouse_product_mix_clustering_spark.sources import registry
 
-    sf = "/root/testdata/sf0.001"
-    text_plans._MERGES_CACHE.clear()
     a = text_plans.corpus_bpe_merges(spark, sf)
     b = text_plans.corpus_bpe_merges(spark, sf)
     assert a is b, "same (session, sf_dir, n_merges) must reuse the table"
     assert len(a) == text_plans._BPE_N_MERGES
-    text_plans._MERGES_CACHE[("dead-app-id", "/x", 20)] = a
-    text_plans._MERGES_CACHE.pop(
-        (spark.sparkContext.applicationId, sf, text_plans._BPE_N_MERGES)
-    )
+    registry.invalidate(os.path.join(sf, "documents.parquet"))
     c = text_plans.corpus_bpe_merges(spark, sf)
-    assert ("dead-app-id", "/x", 20) not in text_plans._MERGES_CACHE, (
-        "stale-session entries must be evicted on insert"
-    )
     assert c is not a and c == a, "retrain reproduces the same table"
     invalidate_star_cache(sf)
-    assert not [k for k in text_plans._MERGES_CACHE if k[1] == sf], (
-        "invalidation must drop tokenizers trained on the rewritten data"
-    )
+    d = text_plans.corpus_bpe_merges(spark, sf)
+    assert d is not c, "invalidating the sf_dir must drop tokenizers trained on its documents"
 
 
 @settings(
