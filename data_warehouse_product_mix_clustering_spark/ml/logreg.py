@@ -398,6 +398,20 @@ def train_softmax(
     snapped, every division replayed identically by the twin."""
     spark = feats.sparkSession
     ids = labels.select("__id", "y")
+    # one labels-sized job for the doc count, the labeled count and the
+    # class set (r19). collect_set skips NULL labels while n counts their
+    # rows, so a NULL label is refused here, before anything is persisted.
+    idrow = ids.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count("y").alias("n_labeled"),
+        F.sort_array(F.collect_set("y")).alias("cs"),
+    ).first()
+    n_docs, classes = int(idrow["n"]), list(idrow["cs"])
+    if idrow["n_labeled"] < n_docs:
+        raise ValueError(
+            f"train_softmax: {n_docs - idrow['n_labeled']} of {n_docs} label "
+            "rows have a NULL class"
+        )
     # persist, not localCheckpoint — train_logreg's reason: the cache
     # keeps the id-partitioning, and hash partitioning on a SUBSET of
     # the grouping keys satisfies the (id, …) clusterings below, so the
@@ -413,13 +427,8 @@ def train_softmax(
         .repartition("__id")
         .persist()
     )
-    # one labels-sized job for BOTH the doc count and the class set (r19);
-    # the bucket collect below doubles as the cache materializer (a
-    # distinct over base computes every partition) — no count() job
-    idrow = ids.agg(
-        F.count(F.lit(1)).alias("n"), F.sort_array(F.collect_set("y")).alias("cs")
-    ).first()
-    n_docs, classes = int(idrow["n"]), list(idrow["cs"])
+    # the bucket collect doubles as the cache materializer (a distinct
+    # over base computes every partition) — no count() job
     buckets = [r["bucket"] for r in base.select("bucket").distinct().collect()]
     w = {c: {b: 0.0 for b in buckets} for c in classes}
     acc: dict[tuple[str, str], float] = {}

@@ -23,13 +23,16 @@ reference implementation's word-level merge.
 
 Known scale limit, stated honestly: each merge is one Spark job (pair
 aggregate + 1-row argmax), so a production 32k-merge vocabulary means
-32k sequential rounds — job latency, not data volume, dominates. The
-published mitigations (select the top-K pairwise-disjoint pairs per
-round, or train on a frequency-capped word sample) trade exactness
-against the sequential-argmax reference semantics this module pins, so
-they belong behind an explicit opt-in variant rather than silently
-replacing the exact trainer; at the 20-merge scale the audits exercise,
-exact is the right default.
+32k sequential rounds — job latency, not data volume, dominates.
+Measured at 64 merges on the sf0.1 corpus, local[32] (PERF_NOTES r11):
+323 ms/merge for this exact trainer, 28 ms/merge for a batched variant
+that applied 16 mutually disjoint pairs per round, and 547 ms/merge for
+an incremental variant that maintained pair counts from per-merge
+deltas. Only the exact trainer is kept: the batched one is not
+equivalent to the sequential argmax (a pair minted in round N waits a
+round), the incremental one only pays where recounting every pair is
+the cost (10-100M distinct words, far beyond any corpus here), and
+production trains 20 merges, where the exact trainer costs seconds.
 """
 
 from __future__ import annotations
@@ -50,30 +53,24 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _merge_fold_multi(syms: F.Column, pairs: list[tuple[str, str]]) -> F.Column:
-    """Greedy left-to-right one-pass replacement of each adjacent pair in
-    ``pairs`` with its concatenation — non-overlapping (after a merge the
-    cursor skips the consumed right symbol, so 'aaa' under (a,a) →
-    [aa, a]). Multi-pair batches must be mutually DISJOINT
-    (``_select_disjoint``), which makes the single pass order-independent.
+def _merge_fold(syms: F.Column, a: str, b: str) -> F.Column:
+    """Greedy left-to-right one-pass replacement of each adjacent (a, b)
+    with ``a + b`` — non-overlapping (after a merge the cursor skips the
+    consumed right symbol, so 'aaa' under (a,a) → [aa, a]).
 
-    Shape: the K-way match chain runs ONCE per element in a pre-zipped
+    Shape: the match test runs ONCE per element in a pre-zipped
     (symbol, match) array built OUTSIDE the aggregate — embedding it in
-    the fold step would re-evaluate the chain per element per reference
-    (no CSE in interpreted higher-order functions). try_element_at: the
+    the fold step would re-evaluate it per element per reference (no CSE
+    in interpreted higher-order functions). try_element_at: the
     past-the-end lookahead yields NULL (→ no match) instead of the ANSI
     element_at out-of-bounds error."""
     el = lambda i: F.try_element_at(syms, i)  # noqa: E731 - 1-based
-
-    def matched(i: F.Column) -> F.Column:
-        m: F.Column = F.lit(None).cast("string")
-        for a, b in reversed(pairs):
-            m = F.when((el(i) == a) & (el(i + 1) == b), F.lit(a + b)).otherwise(m)
-        return m
-
     zipped = F.zip_with(
         syms,
-        F.transform(F.sequence(F.lit(1), F.size(syms)), matched),
+        F.transform(
+            F.sequence(F.lit(1), F.size(syms)),
+            lambda i: F.when((el(i) == a) & (el(i + 1) == b), F.lit(a + b)),
+        ),
         lambda s, m: F.struct(s.alias("sym"), m.alias("m")),
     )
     zero = F.struct(
@@ -96,12 +93,6 @@ def _merge_fold_multi(syms: F.Column, pairs: list[tuple[str, str]]) -> F.Column:
         )
     )
     return F.aggregate(zipped, zero, step, lambda acc: acc["r"])
-
-
-def _merge_fold(syms: F.Column, a: str, b: str) -> F.Column:
-    """Single-pair greedy rewrite — the K=1 case of ``_merge_fold_multi``
-    (one definition of the cursor/skip logic)."""
-    return _merge_fold_multi(syms, [(a, b)])
 
 
 def _char_syms(word_col: str) -> F.Column:
@@ -128,8 +119,9 @@ def _guarded_fold(syms: F.Column, a: str, b: str) -> F.Column:
 
 def _pair_counts(cur: DataFrame) -> DataFrame:
     """Weighted adjacent-pair counts (a, b, cnt) over the working
-    (__c, __syms) relation — THE pair-count definition both trainers
-    rank (drift here is drift in the audited contract)."""
+    (__c, __syms) relation — THE pair-count definition the trainer
+    ranks and ``_pair_counts_py`` mirrors (drift here is drift in the
+    audited contract)."""
     return (
         cur.filter(F.size("__syms") >= 2)
         .select(
@@ -308,223 +300,6 @@ def encode_py(word: str, merges: list[tuple[str, str, int]]) -> list[str]:
     for a, b, _ in merges:
         syms = _merge_py(syms, a, b)
     return syms
-
-
-# ---------------------------------------------------------------------------
-# Batched training — the opt-in scale variant the module docstring names
-# ---------------------------------------------------------------------------
-
-
-def _select_disjoint(
-    ranked: list[tuple[str, str, int]], k: int
-) -> list[tuple[str, str, int]]:
-    """Greedy prefix of a ranked pair list such that selected pairs are
-    mutually non-interacting within one round: no shared symbol (an
-    overlap at a position would need one), and no symbol of a candidate
-    equals an accepted pair's MERGED string (applying that pair mints
-    new such symbols, which would change the candidate's count
-    mid-round), nor vice versa. Under this rule every selected pair's
-    pre-round count is its exact round count and application order
-    cannot matter."""
-    out: list[tuple[str, str, int]] = []
-    used: set[str] = set()
-    minted: set[str] = set()
-    for a, b, c in ranked:
-        if len(out) >= k:
-            break
-        m = a + b
-        if {a, b} & (used | minted) or m in used or m in minted:
-            continue
-        out.append((a, b, c))
-        used |= {a, b}
-        minted.add(m)
-    return out
-
-
-def train_bpe_batched(
-    vocab: DataFrame,
-    n_merges: int,
-    batch: int = 8,
-    word_col: str = "word",
-    count_col: str = "count",
-) -> list[tuple[str, str, int]]:
-    """The scale variant of ``train_bpe``: per round, select up to
-    ``batch`` mutually-disjoint pairs (``_select_disjoint`` over the
-    round's ranked pair counts) and apply them in ONE fold pass —
-    ~``batch``× fewer Spark rounds for a large merge budget, the
-    published batching trick. NOT equivalent to the sequential exact
-    trainer in general (round N+1 of the exact trainer may pick a pair
-    minted in round N; the batch defers it one round), which is why this
-    is an opt-in variant with its own reference twin
-    (``train_bpe_batched_py``) rather than a silent replacement.
-    ``batch=1`` degenerates to the exact trainer's selection rule.
-    Recorded counts are exact for the round they were selected in
-    (disjointness — see ``_select_disjoint``)."""
-    if batch < 1:
-        raise ValueError(f"train_bpe_batched: batch must be >= 1, got {batch}")
-    cur = (
-        vocab.filter(F.col(word_col).isNotNull())
-        .select(
-            F.col(count_col).cast("long").alias("__c"),
-            _char_syms(word_col).alias("__syms"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    merges: list[tuple[str, str, int]] = []
-    while len(merges) < n_merges:
-        k = min(batch, n_merges - len(merges))
-        # 8k candidates bound the collect while leaving room for the
-        # disjointness filter to skip conflicting high-rank pairs.
-        ranked = [
-            (r["a"], r["b"], int(r["cnt"]))
-            for r in _pair_counts(cur)
-            .orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(8 * k)
-            .collect()
-        ]
-        picked = _select_disjoint(ranked, k)
-        if not picked:
-            break
-        merges.extend(picked)
-        cur = (
-            cur.filter(F.size("__syms") >= 2)
-            .select(
-                "__c",
-                _merge_fold_multi(
-                    F.col("__syms"), [(a, b) for a, b, _ in picked]
-                ).alias("__syms"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return merges
-
-
-def train_bpe_batched_py(
-    counts: dict[str, int], n_merges: int, batch: int = 8
-) -> list[tuple[str, str, int]]:
-    """Driver-side reference twin of ``train_bpe_batched``."""
-    if batch < 1:
-        raise ValueError(f"train_bpe_batched_py: batch must be >= 1, got {batch}")
-    vocab: list[tuple[list[str], int]] = [
-        (list(w), c) for w, c in counts.items()
-    ]
-    merges: list[tuple[str, str, int]] = []
-    while len(merges) < n_merges:
-        k = min(batch, n_merges - len(merges))
-        pc = _pair_counts_py(vocab)
-        ranked = [
-            (a, b, c)
-            for (a, b), c in sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        ][: 8 * k]
-        picked = _select_disjoint(ranked, k)
-        if not picked:
-            break
-        merges.extend(picked)
-        for a, b, _ in picked:
-            # disjoint ⇒ sequential per-pair application ≡ one multi-pass
-            vocab = [(_merge_py(syms, a, b), c) for syms, c in vocab]
-    return merges
-
-
-def _has_adjacent_pair(syms: F.Column, a: str, b: str) -> F.Column:
-    """True iff ``syms`` contains ``b`` immediately after ``a``. Built
-    with the Column API (never string-interpolated SQL — symbols can
-    contain quotes); callers guarantee size ≥ 2, matching the working
-    relation's invariant, so sequence(1, size-1) cannot count down."""
-    idx = F.sequence(F.lit(1), F.size(syms) - 1)
-    return F.exists(
-        idx,
-        lambda j: (F.element_at(syms, j) == F.lit(a))
-        & (F.element_at(syms, j + 1) == F.lit(b)),
-    )
-
-
-def train_bpe_incremental(
-    vocab: DataFrame,
-    n_merges: int,
-    word_col: str = "word",
-    count_col: str = "count",
-) -> list[tuple[str, str, int]]:
-    """EXACT-equivalent trainer with incremental pair-count maintenance
-    (VERDICT r10 #4): ``train_bpe`` recounts every adjacent pair of every
-    word each round, but a merge of (a, b) only changes the pair counts
-    of words that CONTAIN adjacent (a, b) — so this variant materializes
-    the pair-count relation once and per round (1) subtracts the affected
-    words' old pairs, (2) adds their rewritten pairs, (3) folds the delta
-    into the maintained relation. Merge-table output is IDENTICAL to
-    ``train_bpe`` by induction (maintained counts ≡ recount; same
-    argmax, same tie-break, zero-count pairs drop out exactly like pairs
-    that no longer occur) — pinned by a hypothesis property test.
-
-    Scale trade, measured honestly (PERF_NOTES r11): per round the
-    explode+shuffle volume drops from O(Σ|word|) over the whole
-    vocabulary to O(Σ|word| over affected words) + O(|pairs|) for the
-    delta fold — the win at web-scale vocabularies where each merge
-    touches a shrinking fraction of words. The round is still one
-    sequential argmax (job latency unchanged), and each round runs MORE
-    jobs (affected filter, two delta counts, two checkpoints) than the
-    exact trainer's one — so at driver/test vocab sizes, where job
-    latency dominates, this variant is SLOWER; it exists for the data-
-    volume regime, not the latency regime. ``train_bpe_batched`` attacks
-    the orthogonal axis (fewer rounds).
-
-    Counts must be positive (the ``word_counts`` contract): a zero-count
-    word's pairs occur-but-count-zero, where 'pair exists in the
-    relation' and 'maintained count > 0' would diverge from the exact
-    trainer's recount."""
-    cur = (
-        vocab.filter(F.col(word_col).isNotNull())
-        .select(
-            F.col(count_col).cast("long").alias("__c"),
-            _char_syms(word_col).alias("__syms"),
-        )
-        .filter(F.size("__syms") >= 2)
-        .localCheckpoint(eager=True)
-    )
-    # The per-round cur is a UNION of two checkpointed relations — with no
-    # shuffle between rounds the partition count would grow by ~|rewritten
-    # partitions| every merge (round 64 was launching thousands of tasks
-    # per job; measured 10×+ slowdown). Coalesce back to the input's
-    # partition count before each checkpoint to keep rounds O(1) tasks.
-    # (pc needs no coalesce: its groupBy re-shuffles to a fixed count.)
-    n_part = max(1, cur.rdd.getNumPartitions())
-    pc = _pair_counts(cur).localCheckpoint(eager=True)
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        best = pc.orderBy(F.col("cnt").desc(), "a", "b").limit(1).collect()
-        if not best:
-            break
-        a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["cnt"])
-        merges.append((a, b, cnt))
-        hit = _has_adjacent_pair(F.col("__syms"), a, b)
-        affected = cur.filter(hit).localCheckpoint(eager=True)
-        rewritten = (
-            affected.select("__c", _merge_fold(F.col("__syms"), a, b).alias("__syms"))
-            .localCheckpoint(eager=True)
-        )
-        delta_old = _pair_counts(affected).withColumn("cnt", -F.col("cnt"))
-        delta_new = _pair_counts(rewritten.filter(F.size("__syms") >= 2))
-        pc = (
-            pc.unionByName(delta_old)
-            .unionByName(delta_new)
-            .groupBy("a", "b")
-            .agg(F.sum("cnt").alias("cnt"))
-            .filter(F.col("cnt") > 0)
-            .localCheckpoint(eager=True)
-        )
-        cur = (
-            cur.filter(~hit)
-            .unionByName(rewritten.filter(F.size("__syms") >= 2))
-            .coalesce(n_part)
-            .localCheckpoint(eager=True)
-        )
-        # No explicit unpersist: Dataset.unpersist does NOT release
-        # localCheckpoint blocks (verified on this PySpark — review r11).
-        # Rebinding affected/rewritten/pc/cur each round drops the last
-        # references; ContextCleaner reclaims the superseded rounds'
-        # blocks, the same GC-based lifecycle every per-iteration
-        # checkpoint in this repo (train_bpe, pagerank) relies on.
-    return merges
 
 
 def bpe_token_counts(

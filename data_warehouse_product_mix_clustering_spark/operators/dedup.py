@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_warehouse_product_mix_clustering_spark.functions.numeric import ratio_round
@@ -131,67 +131,16 @@ def _jaccard_from_intersections(
     )
 
 
-def group_pairs(
-    df: DataFrame, id_col: str, group_cols: list[str],
-    out_a: str = "doc_a", out_b: str = "doc_b",
-    pin_width: bool = False,
-) -> DataFrame:
-    """All ordered id pairs (a < b) co-occurring under one group key —
-    the aggregate-then-expand replacement for the group-key SELF-JOIN
-    (guide §2.4 remove-shuffles / §2.3 shuffle-fewer-bytes): ONE
-    exchange of the input on the group key plus a per-group JVM pair
-    expansion replace the two-sided join, which either shuffles the
-    relation twice or (as AQE picks at bench SF) broadcast-builds the
-    ENTIRE relation — measured the single most expensive step of the
-    shingle family. Emits exactly the multiset the self-join +
-    ``a < b`` filter yields: per group the (distinct — caller contract)
-    ids are collected once, sorted, and expanded to the C(k,2) ordered
-    pairs; a group of k rows still contributes k(k-1)/2 rows, so the
-    quadratic-in-co-occurrence output (and any ``max_shingle_freq``-style
-    cap a caller applies first) is unchanged."""
-    ids = F.sort_array(F.collect_list(F.col(id_col))).alias("__ids")
-    pairs = F.flatten(
-        F.transform(
-            F.col("__ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("__ids"), i + F.lit(2), F.size(F.col("__ids"))),
-                lambda y: F.struct(x.alias(out_a), y.alias(out_b)),
-            ),
-        )
-    )
-    # pin_width: explicit hash repartition on the group key, which the
-    # groupBy reuses (same keys ⇒ no second exchange). For EXPANSIVE
-    # group distributions the pair expansion is the stage's real output,
-    # but AQE sizes post-shuffle partitions by the PRE-expansion bytes
-    # (a few MB of id lists) and coalesces the whole expansion onto one
-    # task — measured 34 s single-task at sf0.1 on the shingle key.
-    # For near-unit groups (LSH buckets: k≈2) the expansion is
-    # output-sized and AQE's coalescing is exactly right — leave False.
-    # The pinned width follows defaultParallelism, so it scales with the
-    # cluster rather than hard-coding a local constant.
-    grouped = df
-    if pin_width:
-        p = df.sparkSession.sparkContext.defaultParallelism
-        grouped = df.repartition(p, *group_cols)
-    return (
-        grouped.groupBy(*group_cols)
-        .agg(ids)
-        .filter(F.size("__ids") >= 2)
-        .select(F.explode(pairs).alias("__p"))
-        .select(f"__p.{out_a}", f"__p.{out_b}")
-    )
-
-
 def pair_intersections(sh: DataFrame, id_col: str) -> DataFrame:
     """(doc_a, doc_b, __inter): shared-shingle counts for every
     co-occurring doc pair — the shingle SELF-JOIN formulation, shared by
     the exact-Jaccard and overlap-coefficient plans so the intersection
     machinery has one definition.
 
-    Deliberately a self-join, not ``group_pairs`` (A/B'd r19 at sf0.1,
-    best-of-3): the broadcast self-join runs 1.85 s vs 4.1 s for the
-    shingle-grouped pair expansion and 6-8 s for its shuffled variants.
-    The join's stream side keeps the shingle relation's doc-contiguous
+    Deliberately a self-join (A/B'd r19 at sf0.1, best-of-3): the
+    broadcast self-join runs 1.85 s vs 4.1 s for an aggregate-then-expand
+    rewrite (collect each shingle's doc ids, expand them to pairs) and
+    6-8 s for its shuffled variants. The join's stream side keeps the shingle relation's doc-contiguous
     partitioning, so every pair (a, b) of a fixed doc_a materializes in
     one task and the map-side partial aggregate collapses the k² pair
     stream to the distinct-pair counts BEFORE the exchange (88.6 MB);
@@ -218,8 +167,9 @@ def _pair_jaccard(
     the plan is candidate-centric: candidates ⋈ shingles(doc_a) ⋈
     shingles(doc_b, same shingle) — linear in |candidates| × doc size, never
     touching the quadratic shingle pair expansion. Without it, the exact
-    formulation: ``pair_intersections`` (one shingle-key exchange +
-    per-group pair expansion; k docs sharing a shingle → k(k-1)/2 rows).
+    formulation: ``pair_intersections`` (the shingle self-join filtered to
+    a < b, then counted per pair; k docs sharing a shingle → k(k-1)/2
+    rows before the count).
     """
     # Lazy checkpoint: the per-doc size relation is consumed by BOTH size
     # joins, and exchange reuse does not fire across the two branches
@@ -366,12 +316,12 @@ def minhash_lsh_pairs(
     # relation is narrow (id, band:int, key:int — N×bands rows, no text),
     # MEMORY_AND_DISK, so it spills rather than OOMs at corpus scale.
     # Optimization r19 left this shape ALONE after measuring both
-    # alternatives worse in bench context: a group_pairs (collect_list +
-    # expand per bucket) rewrite benched 2.34 → 3.07 s, and dropping the
-    # persist in favor of exchange reuse recomputed the signature
-    # pipeline twice (the r19 decomposition shows shuffle-exchange reuse
-    # NOT firing across the aliased branches: two (band, key) exchange
-    # writes, 10.7 s + 4.6 s run).
+    # alternatives worse in bench context: an aggregate-then-expand
+    # rewrite (collect_list + expand per bucket) benched 2.34 → 3.07 s,
+    # and dropping the persist in favor of exchange reuse recomputed the
+    # signature pipeline twice (the r19 decomposition shows
+    # shuffle-exchange reuse NOT firing across the aliased branches: two
+    # (band, key) exchange writes, 10.7 s + 4.6 s run).
     buckets = sig.select(F.col(id_col), F.explode(band_structs).alias("bk")).select(
         id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     ).persist()

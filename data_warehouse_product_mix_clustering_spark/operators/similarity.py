@@ -1528,35 +1528,6 @@ def _small_cell_pairs(
     return scored.select("vec_a", "vec_b")
 
 
-def semantic_dedup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = 8,
-    threshold: float = 0.95,
-    seed: int = 42,
-    round_out: int = 6,
-    giant_cell_rows: int = 8192,
-    n_blocks: int = 8,
-) -> DataFrame:
-    """(vec_a, vec_b) — every within-cell pair at rounded cosine ≥
-    ``threshold``, vec_a < vec_b, under the same frozen clustering and
-    skew routing as ``semantic_dedup`` (small cells per-pair JVM, giant
-    cells blocked GEMM with ``emit_pairs=True``). This is the EDGE
-    relation the group-semantics consumer needs; plain dedup should call
-    ``semantic_dedup`` instead, whose giant-cell kernel emits only
-    unique duplicate ids (≤ n_c rows where the pair relation can
-    approach n_c² on dup-heavy cells)."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    _, assigned = fit_ivf_codebook(df, id_col, vec_col, nlist, seed)
-    small, giant = _route_cells(assigned, giant_cell_rows)
-    return _small_cell_pairs(small, id_col, threshold, round_out).unionByName(
-        _giant_cell_pairs(
-            giant, id_col, id_type, threshold, round_out, n_blocks, emit_pairs=True
-        )
-    )
-
-
 def semantic_dedup_groups(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -1571,8 +1542,9 @@ def semantic_dedup_groups(
 ) -> DataFrame:
     """GROUP-semantics SemDeDup — the alternative ``semantic_dedup``'s
     docstring names for callers who need every removed row to share a
-    group with its survivor: the within-cell threshold pairs
-    (``semantic_dedup_pairs``) feed ``connected_components`` label
+    group with its survivor: every within-cell pair at rounded cosine ≥
+    ``threshold`` (small cells per-pair JVM, giant cells blocked GEMM
+    with ``emit_pairs=True``) feeds ``connected_components`` label
     propagation, and each row gets its component's minimum member id as
     ``group_id`` (unpaired rows are their own group). Returns
     (id, __cell, group_id) for EVERY input row; keep-one-per-group =
@@ -1584,7 +1556,9 @@ def semantic_dedup_groups(
     threshold witnesses are HIGHER ids. What groups buy is the
     audit-trail semantics: every removed row names a surviving
     representative via group_id, which the greedy chain rule cannot
-    promise. Scale: pairs as in semantic_dedup_pairs; label propagation is
+    promise. Scale: the pair relation can approach n_c² rows on
+    dup-heavy cells (plain ``semantic_dedup`` emits only unique
+    duplicate ids instead); label propagation is
     O(component diameter) small shuffles over the pairs-sized edge
     relation (components are duplicate clusters — shallow)."""
     from data_warehouse_product_mix_clustering_spark.operators.dedup import connected_components

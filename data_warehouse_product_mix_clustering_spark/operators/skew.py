@@ -1,113 +1,15 @@
-"""Skew-mitigation operators: salted aggregation and salted shuffle join.
+"""Parallelism repair for under-split inputs: ``fan_out``.
 
-At 100 TB a handful of hot keys (one viral product, one default user id)
-can pin an entire stage on one reducer. AQE's skew-join splitting handles
-sort-merge joins; for hash AGGREGATION over skewed keys the standard fix is
-salting: shard each key into ``n_salts`` sub-keys, aggregate partials per
-shard (map-side combine still applies), then merge shards in a second,
-cardinality-×-salts-sized agg. Results are bit-identical for algebraic
-aggregates (sum/count/min/max); means are derived from sum+count after the
-merge.
+Key skew in sort-merge joins is left to AQE's skew-join splitting
+(``spark.sql.adaptive.skewJoin``, pinned by tests/test_plans.py). What
+AQE cannot repair is an input that scans as too few partitions for the
+expansion-heavy operators downstream of it; ``fan_out`` repartitions such
+an input up to cluster parallelism before the expansion.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str]],
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-stage salted groupBy for skewed keys.
-
-    ``aggs`` maps output column → (input column, fn) with fn ∈
-    {sum, count, min, max, avg}. avg is decomposed into sum+count across
-    the two stages, so every result is exactly what the unsalted plan
-    yields (no FP caveat beyond normal partial-agg reordering).
-    """
-    salt = (F.rand(seed=7) * n_salts).cast("int").alias("__salt")
-    stage1_aggs = []
-    stage2_aggs = []
-    finals = []
-    for out, (col, fn) in aggs.items():
-        if fn == "sum":
-            stage1_aggs.append(F.sum(col).alias(f"__p_{out}"))
-            stage2_aggs.append(F.sum(f"__p_{out}").alias(out))
-            finals.append(F.col(out))
-        elif fn == "count":
-            stage1_aggs.append(F.count(col).alias(f"__p_{out}"))
-            stage2_aggs.append(F.sum(f"__p_{out}").cast("long").alias(out))
-            finals.append(F.col(out))
-        elif fn == "min":
-            stage1_aggs.append(F.min(col).alias(f"__p_{out}"))
-            stage2_aggs.append(F.min(f"__p_{out}").alias(out))
-            finals.append(F.col(out))
-        elif fn == "max":
-            stage1_aggs.append(F.max(col).alias(f"__p_{out}"))
-            stage2_aggs.append(F.max(f"__p_{out}").alias(out))
-            finals.append(F.col(out))
-        elif fn == "avg":
-            stage1_aggs.append(F.sum(col).alias(f"__ps_{out}"))
-            stage1_aggs.append(F.count(col).alias(f"__pc_{out}"))
-            stage2_aggs.append(F.sum(f"__ps_{out}").alias(f"__s_{out}"))
-            stage2_aggs.append(F.sum(f"__pc_{out}").alias(f"__c_{out}"))
-            finals.append((F.col(f"__s_{out}") / F.col(f"__c_{out}")).alias(out))
-        else:
-            raise ValueError(f"unsupported salted agg fn: {fn}")
-    stage1 = df.withColumn("__salt", salt).groupBy(*keys, "__salt").agg(*stage1_aggs)
-    stage2 = stage1.groupBy(*keys).agg(*stage2_aggs)
-    return stage2.select(*keys, *finals)
-
-
-def broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Plain broadcast join of a big table against a broadcastable small one.
-
-    Broadcasting avoids the key-based shuffle of the big side entirely, so
-    key skew cannot pin a reducer — no salting involved or needed. For a
-    skewed join where NEITHER side broadcasts, use ``salted_shuffle_join``
-    (explicit mitigation) or rely on AQE's skew-join splitting
-    (``spark.sql.adaptive.skewJoin``, pinned by tests/test_plans.py).
-    """
-    return big.join(F.broadcast(small), key, how)
-
-
-def salted_shuffle_join(
-    big: DataFrame,
-    medium: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-proof shuffle join: salt the big side, replicate the other.
-
-    For a hot key that would pin one reducer in a shuffled join when the
-    other side is too large to broadcast: the big side gets a random salt
-    in [0, n_salts), the medium side is replicated once per salt value, and
-    the join key becomes (key, salt) — the hot key's rows spread over
-    ``n_salts`` reducers. Cost: medium side shuffled ``n_salts`` ×, so
-    size(medium) × n_salts should stay well under size(big).
-
-    Results equal the unsalted join exactly (each big row meets each
-    matching medium row exactly once — at the big row's own salt).
-    ``how`` supports inner/left (the replicated side cannot drive
-    right/full-outer semantics).
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_shuffle_join supports inner/left, got: {how}")
-    bs = big.withColumn("__salt", (F.rand(seed=7) * n_salts).cast("int"))
-    ms = medium.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return bs.join(ms, [key, "__salt"], how).drop("__salt")
+from pyspark.sql import DataFrame
 
 
 def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from data_warehouse_product_mix_clustering_spark.etl.star_schema import star_sql
 from data_warehouse_product_mix_clustering_spark.functions.numeric import (
-    money_round,
     ratio_round,
     sql_money_round,
     sql_ratio_round,
@@ -71,24 +70,6 @@ def quarterly_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sequence_arrays_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M4's true shape: one row per product with the ordered struct array.
-
-    sort_array(collect_list(struct(quarter_key, …))) — the quarter key
-    leads the struct so the sort is by time. Library form; the registered
-    query serializes the array (below) so the driver can canonicalize it.
-    """
-    q = quarter_rollup(spark, sf_dir)
-    return q.groupBy("product_id").agg(
-        F.count(F.lit(1)).cast("long").alias("seq_len"),
-        F.sort_array(
-            F.collect_list(
-                F.struct("quarter_key", "order_frequency", "total_quantity", "revenue")
-            )
-        ).alias("sequence"),
-    )
-
-
 @register(
     "sequence_arrays",
     oracle=star_sql(
@@ -110,10 +91,10 @@ def sequence_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each element is ``quarter_key:order_frequency:total_quantity:cents``
     (integers only — float→string formatting differs across engines, so
-    revenue rides as exact cents), joined time-ordered with ';'. The
-    nested array-of-struct shape stays available via
-    ``sequence_arrays_nested``; this boundary form is hashable by the
-    driver's canonicalizer AND oracle-checkable in DuckDB via string_agg.
+    revenue rides as exact cents), joined time-ordered with ';'. A
+    string rather than the nested array-of-struct, because this boundary
+    form is hashable by the driver's canonicalizer AND oracle-checkable
+    in DuckDB via string_agg.
     """
     q = quarter_rollup(spark, sf_dir)
     elem = F.array_join(

@@ -1580,9 +1580,10 @@ def training_corpus_lm_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic without interpolated-percentile FP hazards. Scale
     note: the global rank is one single-partition window over the
     SURVIVORS' narrow (doc_id, bits) relation — the Pareto/Gini bounded
-    class; ``training_corpus_lm_filtered_approx`` is the 100 TB variant
-    (approx-percentile threshold, one sketch agg + broadcast scalar).
-    Registered r12 with ``training_corpus_lm_oracle``.
+    class; at 100 TB the threshold would come from one
+    ``percentile_approx`` sketch agg broadcast back as a scalar, which
+    trades oracle exactness for no global sort. Registered r12 with
+    ``training_corpus_lm_oracle``.
     """
     from pyspark.sql import Window
 
@@ -1597,50 +1598,6 @@ def training_corpus_lm_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ranked.filter(F.col("__pr") <= _LM_KEEP_FRAC).select(
         "doc_id", "lang", "n_tokens", "quality_score", "bits_per_token"
-    )
-
-
-def training_corpus_lm_filtered_approx(
-    spark: SparkSession,
-    sf_dir: str,
-    keep_frac: float = _LM_KEEP_FRAC,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """The 100 TB variant of ``training_corpus_lm_filtered`` (VERDICT
-    r11 #4, the ``quantile_segment`` exact/approx knob discipline): the
-    single-partition percent_rank window is replaced by ONE
-    ``percentile_approx`` sketch aggregate over the survivors'
-    bits-per-token (mergeable state, no global sort, no single reducer)
-    whose threshold rides back as a broadcast scalar — keep rows with
-    bits_per_token ≤ threshold. Semantic delta vs exact, stated
-    precisely: the sketch's rank error (≤ rows/accuracy) can move the
-    cut by that many ranks, and a tie GROUP at the boundary is kept
-    whole (the threshold gate cannot split equal values, where
-    percent_rank keeps a tie group iff its min-rank qualifies) — the
-    keep-set agreement test pins the symmetric difference to the
-    boundary neighborhood. Not oracle-exact by construction, so it is
-    the unregistered scale twin of the registered exact query."""
-    from data_warehouse_product_mix_clustering_spark.operators.lm import unigram_logprob_scores
-
-    surviving = training_corpus(spark, sf_dir)
-    scores = unigram_logprob_scores(table(spark, "documents", sf_dir)).select(
-        "doc_id", "bits_per_token"
-    )
-    # Materialize the narrow survivors-with-scores relation ONCE
-    # (review r12: without this, the threshold agg and the gated scan
-    # each re-executed the full dedup+quality+LM pipeline — one extra
-    # full-corpus pass, the very cost this variant exists to remove).
-    # The checkpoint holds survivor-count rows of five scalars — the
-    # same bounded-narrow-relation class as fit_ivf_codebook's
-    # assignment checkpoint.
-    joined = surviving.join(scores, "doc_id").localCheckpoint(eager=True)
-    bound = joined.agg(
-        F.percentile_approx("bits_per_token", keep_frac, accuracy).alias("__thr")
-    )
-    return (
-        joined.crossJoin(F.broadcast(bound))
-        .filter(F.col("bits_per_token") <= F.col("__thr"))
-        .select("doc_id", "lang", "n_tokens", "quality_score", "bits_per_token")
     )
 
 
@@ -1715,11 +1672,9 @@ def training_corpus_lm_by_lang_oracle() -> str:
 
 def _lm_by_lang_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multilingual survivors-with-scores relation (doc_id, lang,
-    n_tokens, quality_score, bits_per_token) both per-lang LM gates cut:
+    n_tokens, quality_score, bits_per_token) the per-lang LM gate cuts:
     dedup → non-empty → quality → token budget (NO language filter),
-    each doc scored against its own language's LM. Shared by the
-    registered exact gate and the approx scale twin so the base cannot
-    drift between them."""
+    each doc scored against its own language's LM."""
     from pyspark.sql import Window
 
     from data_warehouse_product_mix_clustering_spark.functions.text import (
@@ -1769,9 +1724,9 @@ def training_corpus_lm_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     caveat: the rank window distributes across languages instead of
     running single-partition (each partition is one language's
     survivors — the same bounded class, now parallel, though a corpus
-    dominated by ONE language still funnels; the approx twin below is
-    that case's escape). Registered r13 with
-    ``training_corpus_lm_by_lang_oracle``."""
+    dominated by ONE language still funnels; a per-language
+    ``percentile_approx`` threshold would be that case's escape).
+    Registered r13 with ``training_corpus_lm_by_lang_oracle``."""
     from pyspark.sql import Window
 
     ranked = _lm_by_lang_scored(spark, sf_dir).withColumn(
@@ -1782,38 +1737,6 @@ def training_corpus_lm_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ranked.filter(F.col("__pr") <= _LM_KEEP_FRAC).select(
         "doc_id", "lang", "n_tokens", "quality_score", "bits_per_token"
-    )
-
-
-def training_corpus_lm_by_lang_approx(
-    spark: SparkSession,
-    sf_dir: str,
-    keep_frac: float = _LM_KEEP_FRAC,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """The 100 TB variant of ``training_corpus_lm_by_lang`` — the
-    per-language escape the registered query's docstring points to for
-    a corpus dominated by one language (its per-lang rank window then
-    funnels most of the corpus through one partition): the percent_rank
-    windows are replaced by ONE ``groupBy(lang).percentile_approx``
-    sketch aggregate (mergeable state, |languages| threshold rows)
-    broadcast-joined back on lang — keep rows with bits_per_token ≤
-    their language's threshold. Same semantic delta as the corpus-wide
-    ``training_corpus_lm_filtered_approx``, now PER LANGUAGE: the
-    sketch's rank error (≤ rows_lang/accuracy) can move each language's
-    cut by that many ranks, and a boundary tie group is kept whole.
-    The agreement test pins every disagreement to each language's
-    boundary neighborhood. Not oracle-exact by construction — the
-    unregistered scale twin of the registered exact query (the
-    exact/approx knob discipline)."""
-    joined = _lm_by_lang_scored(spark, sf_dir).localCheckpoint(eager=True)
-    bounds = joined.groupBy("lang").agg(
-        F.percentile_approx("bits_per_token", keep_frac, accuracy).alias("__thr")
-    )
-    return (
-        joined.join(F.broadcast(bounds), "lang")
-        .filter(F.col("bits_per_token") <= F.col("__thr"))
-        .select("doc_id", "lang", "n_tokens", "quality_score", "bits_per_token")
     )
 
 
@@ -2116,8 +2039,7 @@ def doc_quality_lm_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: the decile ntile is a single global-order window over
     per-doc scalars — the registered Pareto/percent_rank class; the
     coded escape hatch at 1e9+ docs is decile edges from ONE
-    percentile_approx sketch + a broadcast bucket join (the
-    ``training_corpus_lm_filtered_approx`` move), or exact edges via
+    percentile_approx sketch + a broadcast bucket join, or exact edges via
     ``with_rank_and_running``. Everything upstream is the proven LM
     relation (two word-key shuffles) + one quality-expression scan.
     Pre-staged with ``_quality_lm_calibration_oracle()``."""

@@ -250,3 +250,24 @@ def test_lstm_fit_empty_corpus_raises():
     m = LSTMAutoencoderNP(input_size=4, hidden_size=8, seed=0)
     with pytest.raises(ValueError, match="at least one training sequence"):
         m.fit([])
+
+
+def test_train_softmax_rejects_null_labels(spark):
+    """A NULL class label fails loudly. collect_set would drop it from
+    the class set while its row still counted in the gradient's doc
+    count, silently diluting every update."""
+    import pytest
+
+    from data_warehouse_product_mix_clustering_spark.ml.logreg import train_softmax
+
+    feats = spark.createDataFrame(
+        [(1, "b0", 1.0), (2, "b0", 1.0), (3, "b1", 1.0)],
+        "__id long, bucket string, x double",
+    )
+    labels = spark.createDataFrame(
+        [(1, "en"), (2, None), (3, "de")], "__id long, y string"
+    )
+    with pytest.raises(ValueError, match="1 of 3 label rows have a NULL class"):
+        train_softmax(feats, labels, n_iter=1)
+    w, _ = train_softmax(feats, labels.fillna("en", ["y"]), n_iter=1)
+    assert sorted(w) == ["de", "en"]

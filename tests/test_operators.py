@@ -87,27 +87,6 @@ def test_ivf_recall_vs_brute_force(spark):
     )
 
 
-def test_salted_shuffle_join_matches_plain(spark):
-    """Salted shuffle join must equal the unsalted join exactly, on a
-    fixture with one hot key, for inner and left (incl. unmatched rows)."""
-    from data_warehouse_product_mix_clustering_spark.operators.skew import salted_shuffle_join
-
-    big = spark.range(0, 5000).select(
-        F.when(F.col("id") % 2 == 0, 0).otherwise(F.col("id")).alias("k"),
-        F.col("id").alias("v"),
-    )
-    other = spark.range(0, 3000).select(  # keys ≥ 3000 unmatched on left join
-        F.col("id").alias("k"), (F.col("id") * 10).alias("w")
-    )
-    for how in ("inner", "left"):
-        plain = {(r.k, r.v, r.w) for r in big.join(other, "k", how).collect()}
-        salted = {
-            (r.k, r.v, r.w)
-            for r in salted_shuffle_join(big, other, "k", n_salts=8, how=how).collect()
-        }
-        assert salted == plain, how
-
-
 def test_block_cosine_pairs_matches_exact(spark):
     """Blocked-matmul cosine join must equal the naive crossJoin exactly,
     for any block count (1 = single matmul, 3 = uneven blocks, 8 = default)."""
@@ -238,39 +217,6 @@ def test_approx_stats_error_bounds(spark):
         assert abs(amed - med) / max(abs(med), 1) < 0.05, f"{et}: median err"
 
 
-def test_salted_aggregate_matches_unsalted(spark):
-    """Salted two-stage agg must equal the plain groupBy exactly."""
-    from data_warehouse_product_mix_clustering_spark.operators.skew import salted_aggregate
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-    plain = {
-        r.l_returnflag: (r.n, round(r.s, 2), r.mn, round(r.av, 6))
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.count("l_quantity").alias("n"),
-            F.sum("l_quantity").alias("s"),
-            F.min("l_quantity").alias("mn"),
-            F.avg("l_quantity").alias("av"),
-        )
-        .collect()
-    }
-    salted = {
-        r.l_returnflag: (r.n, round(r.s, 2), r.mn, round(r.av, 6))
-        for r in salted_aggregate(
-            li,
-            ["l_returnflag"],
-            {
-                "n": ("l_quantity", "count"),
-                "s": ("l_quantity", "sum"),
-                "mn": ("l_quantity", "min"),
-                "av": ("l_quantity", "avg"),
-            },
-        ).collect()
-    }
-    assert plain == salted
-
-
 def test_media_resize_and_frame_sampling(spark):
     """Resize: every payload lands at exactly the target byte size,
     deterministically. Sampling: every-2nd-frame output is exactly the
@@ -361,7 +307,6 @@ def test_operator_api_contracts(spark):
     import pytest
 
     from data_warehouse_product_mix_clustering_spark.operators.asof_join import asof_join
-    from data_warehouse_product_mix_clustering_spark.operators.skew import salted_shuffle_join
     from data_warehouse_product_mix_clustering_spark.operators.split import split_boundaries
 
     df = spark.createDataFrame([(1, 2)], ["a", "b"])
@@ -371,8 +316,6 @@ def test_operator_api_contracts(spark):
         asof_join(df, df, "a", "b", disjoint=True)
     with pytest.raises(ValueError, match="bucket must be one of"):
         asof_join(df, df, "a", "b", end_col="b", bucket="fortnight")
-    with pytest.raises(ValueError, match="inner/left"):
-        salted_shuffle_join(df, df, "a", how="right")
     with pytest.raises(ValueError, match="sum to 1"):
         split_boundaries({"train": 0.5, "test": 0.1})
 
@@ -3686,37 +3629,6 @@ def test_ann_cosine_topk_matches_numpy(spark):
     }
     assert got == want
     assert len(got) == N_QUERIES * TOP_K
-
-
-def test_group_pairs_emits_the_self_join_multiset(spark):
-    """operators/dedup.py::group_pairs — the documented (A/B'd, not
-    adopted for the hot paths) aggregate-then-expand alternative to the
-    group-key self-join must emit EXACTLY the multiset the self-join +
-    (a < b) filter yields, on a fixture with singleton groups (dropped),
-    duplicate pairs across groups (kept as multiset), and a hot key
-    (C(4,2) expansion) — for both the AQE-coalesced and the
-    pin_width=True exchange shapes."""
-    from data_warehouse_product_mix_clustering_spark.operators.dedup import group_pairs
-
-    rows = [
-        (1, "g1"), (2, "g1"), (3, "g1"), (4, "g1"),  # hot key: 6 pairs
-        (1, "g2"), (2, "g2"),                        # duplicate pair (1,2)
-        (5, "g3"),                                   # singleton: no pairs
-        (2, "g4"), (6, "g4"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, grp string")
-    a = df.select(F.col("doc_id").alias("doc_a"), "grp")
-    b = df.select(F.col("doc_id").alias("doc_b"), "grp")
-    want = sorted(
-        (r["doc_a"], r["doc_b"])
-        for r in a.join(b, "grp").filter(F.col("doc_a") < F.col("doc_b")).collect()
-    )
-    for pin in (False, True):
-        got = sorted(
-            (r["doc_a"], r["doc_b"])
-            for r in group_pairs(df, "doc_id", ["grp"], pin_width=pin).collect()
-        )
-        assert got == want, (pin, got, want)
 
 
 def test_dedup_jaccard_pairs_match_independent_python(spark):

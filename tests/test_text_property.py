@@ -344,80 +344,6 @@ def test_encode_words_matches_python_reference(spark, words, n_merges):
         assert got[w] == encode_py(w, merges), (w, merges, got[w])
 
 
-@pytest.mark.heavy_sweep
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    words=st.dictionaries(
-        st.text(alphabet="abcd", min_size=0, max_size=6),  # INCLUDES ''
-        st.integers(1, 9),
-        min_size=1,
-        max_size=12,
-    ),
-    n_merges=st.integers(1, 5),
-)
-def test_train_bpe_incremental_equals_exact(spark, words, n_merges):
-    """operators/bpe.py::train_bpe_incremental ≡ train_bpe on arbitrary
-    word-count relations: the maintained pair-count relation (subtract
-    affected words' old pairs, add their rewritten pairs, fold the
-    delta) must reproduce the recount trainer's merge table EXACTLY —
-    sequence, spellings, weighted counts, early stop. Any drift in the
-    delta rule, the affected-word predicate, or the count>0 drop-out
-    diverges here."""
-    from data_warehouse_product_mix_clustering_spark.operators.bpe import (
-        train_bpe,
-        train_bpe_incremental,
-    )
-
-    vocab = spark.createDataFrame(
-        [(w, c) for w, c in sorted(words.items())], "word string, count long"
-    )
-    assert train_bpe_incremental(vocab, n_merges) == train_bpe(vocab, n_merges)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    words=st.dictionaries(
-        st.text(alphabet="abcd", min_size=0, max_size=6),  # INCLUDES ''
-        st.integers(1, 9),
-        min_size=1,
-        max_size=12,
-    ),
-    n_merges=st.integers(1, 6),
-    batch=st.integers(1, 3),
-)
-def test_train_bpe_batched_matches_python_reference(spark, words, n_merges, batch):
-    """The opt-in batched trainer ≡ its reference twin: per-round
-    disjoint top-K selection, one-pass multi-pair application (proven
-    order-independent by the disjointness rule — the twin applies the
-    batch sequentially, so any one-pass/sequential divergence fails
-    here), and batch=1 must degenerate to the exact trainer."""
-    from data_warehouse_product_mix_clustering_spark.operators.bpe import (
-        train_bpe,
-        train_bpe_batched,
-        train_bpe_batched_py,
-    )
-
-    vocab = spark.createDataFrame(
-        [(w, c) for w, c in sorted(words.items())], "word string, count long"
-    )
-    got = train_bpe_batched(vocab, n_merges, batch=batch)
-    assert got == train_bpe_batched_py(words, n_merges, batch=batch)
-    # (NB: globally-unique merged strings is NOT an invariant — two
-    # different pairs can mint the same string via different
-    # decompositions, e.g. ("ab","c") and ("a","bc") — so only the
-    # twin equality and the batch=1 degeneration are asserted.)
-    if batch == 1:
-        assert got == train_bpe(vocab, n_merges)
-
-
 @settings(
     max_examples=6,
     deadline=None,
@@ -798,50 +724,6 @@ def test_training_corpus_lm_filtered_matches_duckdb_twin(spark):
     from data_warehouse_product_mix_clustering_spark.plans.text import training_corpus
 
     assert len(g) < training_corpus(spark, SF_SMOKE).count()
-
-
-def test_lm_filter_approx_agrees_with_exact_within_envelope(spark):
-    """VERDICT r11 #4 (the ``value_segments_audit`` mold): the LM
-    filter's ``exact=False`` twin — one percentile_approx sketch agg +
-    broadcast threshold instead of the single-partition percent_rank
-    window — must reproduce the exact keep-set up to the sketch's
-    documented semantic delta: (a) keep-set size within rank error
-    (≤ N/accuracy) plus the boundary tie group; (b) every disagreement
-    lives AT the boundary (its bits_per_token between the two paths'
-    kept maxima) — a disagreement in the body of the distribution means
-    the sketch or the gate is wrong, not the documented tie/rank slack;
-    (c) the approx path's threshold-gate monotonicity: max kept bits <
-    min dropped bits among scored survivors."""
-    from data_warehouse_product_mix_clustering_spark.plans.text import (
-        training_corpus_lm_filtered,
-        training_corpus_lm_filtered_approx,
-    )
-    from conftest import SF_SMOKE
-
-    exact = {
-        r["doc_id"]: r["bits_per_token"]
-        for r in training_corpus_lm_filtered(spark, SF_SMOKE).collect()
-    }
-    approx = {
-        r["doc_id"]: r["bits_per_token"]
-        for r in training_corpus_lm_filtered_approx(spark, SF_SMOKE).collect()
-    }
-    assert exact and approx
-    n = len(exact)
-    boundary_exact = max(exact.values())
-    boundary_approx = max(approx.values())
-    lo, hi = sorted((boundary_exact, boundary_approx))
-    # (a) size agreement: rank error + boundary tie group + 1 slack
-    ties = sum(1 for b in approx.values() if b == boundary_approx)
-    assert abs(len(approx) - n) <= n / 10000 + ties + 1
-    # (b) disagreements only at the boundary
-    for d in set(exact) ^ set(approx):
-        b = exact.get(d, approx.get(d))
-        assert lo <= b <= hi, (d, b, lo, hi)
-    # (c) threshold-gate monotonicity: no dropped doc scores below a kept one
-    dropped = set(exact) - set(approx)
-    if dropped:
-        assert min(exact[d] for d in dropped) >= boundary_approx
 
 
 def test_corpus_filter_waterfall_matches_duckdb_twin(spark):
@@ -1317,46 +1199,6 @@ def test_target_keep_rates_raise_on_uncovered_source(spark):
         .toString()
     )
     assert "LeftOuter" in optimized, optimized
-
-
-def test_lm_by_lang_approx_agrees_with_exact_within_envelope(spark):
-    """The per-language LM gate's approx scale twin
-    (plans/text.py::training_corpus_lm_by_lang_approx) must reproduce
-    the exact per-lang keep-sets up to the documented sketch delta,
-    LANGUAGE BY LANGUAGE: per-lang size within rank error + boundary
-    tie group, every disagreement at that language's boundary, and
-    per-lang threshold-gate monotonicity."""
-    from collections import defaultdict
-
-    from data_warehouse_product_mix_clustering_spark.plans.text import (
-        training_corpus_lm_by_lang,
-        training_corpus_lm_by_lang_approx,
-    )
-    from conftest import SF_SMOKE
-
-    def by_lang(df):
-        out = defaultdict(dict)
-        for r in df.collect():
-            out[r["lang"]][r["doc_id"]] = r["bits_per_token"]
-        return out
-
-    exact = by_lang(training_corpus_lm_by_lang(spark, SF_SMOKE))
-    approx = by_lang(training_corpus_lm_by_lang_approx(spark, SF_SMOKE))
-    assert exact and set(exact) == set(approx)
-    for lang in exact:
-        ex, ap = exact[lang], approx[lang]
-        assert ex and ap, lang
-        boundary_exact = max(ex.values())
-        boundary_approx = max(ap.values())
-        lo, hi = sorted((boundary_exact, boundary_approx))
-        ties = sum(1 for b in ap.values() if b == boundary_approx)
-        assert abs(len(ap) - len(ex)) <= len(ex) / 10000 + ties + 1, lang
-        for d in set(ex) ^ set(ap):
-            b = ex.get(d, ap.get(d))
-            assert lo <= b <= hi, (lang, d, b, lo, hi)
-        dropped = set(ex) - set(ap)
-        if dropped:
-            assert min(ex[d] for d in dropped) >= boundary_approx, lang
 
 
 @pytest.mark.heavy_sweep
