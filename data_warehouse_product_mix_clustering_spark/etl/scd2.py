@@ -51,7 +51,7 @@ def scd2_merge(
         open row's ``start_col``. Applying it would close the open row at
         or before its own start — an inverted/overlapping validity interval
         that corrupts every downstream as-of join (especially the
-        ``disjoint=True`` fast path, whose contract is well-formed
+        bucketed ``bucket=`` fast path, whose contract is non-overlapping
         intervals). ``"error"`` (default) raises ValueError (one extra
         dimension-sized job); ``"drop"`` discards those updates.
     Semantics: a key whose attrs differ from its open row closes that row
@@ -61,7 +61,7 @@ def scd2_merge(
     row; an identical update is ignored (idempotence). Closing at ts
     itself would make consecutive intervals overlap at exactly ts under
     the engine's INCLUSIVE-end interval joins, double-matching every
-    fact dated on a change day through the trusted ``disjoint=True``
+    fact dated on a change day through the trusted bucketed (``bucket=``)
     as-of fast path (review r9). NULL business keys are first-class: the
     merge joins null-safe, so an 'unknown member' row updates instead of
     silently vanishing from the output.

@@ -156,6 +156,19 @@ def train_logreg(
     """
     spark = feats.sparkSession
     ids = labels.select("__id", "y")
+    # one labels-sized job (not a distinct over base) for the doc count and
+    # the labeled count: the gradient sum skips a NULL label's residual
+    # while n_docs would count its row, so a NULL label is refused here,
+    # before anything is persisted.
+    idrow = ids.agg(
+        F.count(F.lit(1)).alias("n"), F.count("y").alias("n_labeled")
+    ).first()
+    n_docs = int(idrow["n"])
+    if idrow["n_labeled"] < n_docs:
+        raise ValueError(
+            f"train_logreg: {n_docs - idrow['n_labeled']} of {n_docs} label "
+            "rows have a NULL label"
+        )
     # persist, not localCheckpoint: the cached InMemoryTableScan KEEPS
     # the repartition's outputPartitioning, so every iteration's per-id
     # agg and residual join reuse it exchange-free; a checkpoint drops
@@ -172,7 +185,6 @@ def train_logreg(
         .repartition("__id")  # one shuffle, reused by every iteration
         .persist()
     )
-    n_docs = ids.count()  # labels-sized job — not a distinct over base
     # the bucket collect doubles as the cache materializer (a distinct
     # over base computes every partition) — no separate count() job (r19)
     buckets = [r["bucket"] for r in base.select("bucket").distinct().collect()]

@@ -1,11 +1,8 @@
-from data_warehouse_product_mix_clustering_spark.operators.asof_join import asof_join, interval_join
-from data_warehouse_product_mix_clustering_spark.operators.keys import with_surrogate_key
+from data_warehouse_product_mix_clustering_spark.operators.asof_join import asof_join
 from data_warehouse_product_mix_clustering_spark.operators.pagination import paginate, top_k
 
 __all__ = [
     "asof_join",
-    "interval_join",
-    "with_surrogate_key",
     "paginate",
     "top_k",
 ]

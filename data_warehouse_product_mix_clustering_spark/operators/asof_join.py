@@ -1,13 +1,13 @@
-"""As-of and interval joins (SURVEY.md §2.3 J4/J5 — the one custom operator).
+"""As-of joins (SURVEY.md §2.3 J4 — the one custom operator).
 
 The reference implements a backward as-of join with pandas ``merge_asof``
 (reference src/pipelines/etl.py:27-42): each fact row is matched to the
 latest validity interval with ``StartDate <= OrderDate``, then post-filtered
 to ``OrderDate <= EndDate`` where a NULL EndDate means an open interval.
-It separately implements a per-product interval join
-(reference notebooks/etl_transform.ipynb cell 28) and a hand-rolled
-driver-dict "broadcast join" probed per row
-(reference src/pipelines/clustering.py:24-54, O(rows x intervals)).
+Its per-product interval join (reference notebooks/etl_transform.ipynb
+cell 28) and the hand-rolled driver-dict "broadcast join" probed per row
+(reference src/pipelines/clustering.py:24-54, O(rows x intervals)) are
+served by ``etl/star_schema.py::fact_priced``.
 
 Vanilla PySpark has no native as-of join, so this module provides two
 distributed strategies behind one API:
@@ -17,6 +17,8 @@ distributed strategies behind one API:
    For backward-asof semantics a window keeps only the latest matching
    StartDate per left row. Correct + fast when the right side is dimension-
    sized (reference DimDate is dozens of rows; anything < ~100 MB).
+   With ``bucket=`` the caller states its intervals cannot overlap, and the
+   join becomes a broadcast HASH join on a calendar-bucket key.
 
 2. ``strategy="union"`` — sort-merge as-of for large-large joins: union the
    two inputs tagged by origin, window over (by-keys) ordered by event time,
@@ -29,14 +31,7 @@ interval, and rows matching no interval come out with NULL right columns
 (caller drops them, as reference etl.py:88 does). With OVERLAPPING
 intervals that means "latest START, then end post-filter" — an expired
 latest interval masks an older covering one (pandas merge_asof +
-post-filter, pinned in test_asof.py). The one documented deviation: the
-BUCKETED path with end_col and disjoint=False implements "latest
-COVERING interval" instead — its bucket expansion is bounded by each
-interval's end, so expired intervals structurally cannot reach later
-buckets to act as masks; for overlapping calendars where the reference
-masking behavior matters, use the plain broadcast or union strategy
-(or disjoint=True when intervals cannot overlap, where all strategies
-coincide).
+post-filter, pinned in test_asof.py).
 """
 
 from __future__ import annotations
@@ -70,7 +65,6 @@ def asof_join(
     how: str = "left",
     strategy: str = "broadcast",
     tolerance: str | None = None,
-    disjoint: bool = False,
     bucket: str | None = None,
     horizon: DataFrame | None = None,
     direction: str = "backward",
@@ -94,19 +88,20 @@ def asof_join(
     tolerance : optional INTERVAL string (e.g. ``'30 days'``), pandas
          merge_asof semantics: matches older than ``left_on − tolerance``
          are discarded. Applied as a post-condition in both strategies.
-    disjoint : caller asserts right intervals cannot overlap (requires
-         ``end_col``). Each left row then matches ≤ 1 interval by
-         construction, so the per-row latest-match dedup window — a full
-         re-shuffle of the joined fact — is skipped entirely.
-    bucket : calendar unit (year/quarter/month/week/day/hour). When given,
-         the broadcast strategy derives an equi key — ``date_trunc(bucket,
-         time)`` — and intervals are exploded over the buckets they span,
-         turning the BroadcastNestedLoopJoin (row-at-a-time, no codegen)
-         into a broadcast HASH join with the range predicate as an in-join
-         post-filter. Semantics are unchanged for any input (the exploded
-         coverage is exhaustive: open intervals span to max(left_on));
-         pick a unit near the typical interval length so the explosion
-         stays ~1-2 rows per interval.
+    bucket : calendar unit (year/quarter/month/week/day/hour), broadcast
+         strategy only; requires ``end_col``. CONTRACT: the caller states
+         that the right intervals cannot overlap (per by-key), so each left
+         row matches ≤ 1 interval by construction. The strategy then
+         derives an equi key — ``date_trunc(bucket, time)`` — and explodes
+         each interval over the buckets it spans, turning the
+         BroadcastNestedLoopJoin (row-at-a-time, no codegen) into a
+         broadcast HASH join with the range predicate, end included, as an
+         in-join filter; the per-row latest-match dedup window — a full
+         re-shuffle of the joined fact — is skipped. The coverage is
+         exhaustive (open intervals span to max(left_on)); pick a unit near
+         the typical interval length so the explosion stays ~1-2 rows per
+         interval. Overlapping intervals would match a left row once per
+         covering interval: use the plain broadcast or union strategy.
     horizon : optional 1-row, 1-column DataFrame whose value is an upper
          bound on ``max(left_on)`` (bucketed strategy only). Open intervals
          are exploded up to this bound instead of a ``max`` aggregate over
@@ -124,12 +119,11 @@ def asof_join(
     if direction != "backward":
         # Interval semantics are inherently backward (an interval CONTAINS
         # the event time); forward/nearest are plain as-of joins. Nearest
-        # additionally supports bucket= (reduced to a disjoint interval
-        # join over midpoint covers — see _nearest_bucketed).
-        if end_col is not None or disjoint:
+        # additionally supports bucket= (reduced to a non-overlapping
+        # interval join over midpoint covers — see _nearest_bucketed).
+        if end_col is not None:
             raise ValueError(
-                f"direction='{direction}' supports plain as-of only "
-                "(no end_col/disjoint)"
+                f"direction='{direction}' supports plain as-of only (no end_col)"
             )
         if direction == "forward":
             if bucket is not None:
@@ -141,34 +135,48 @@ def asof_join(
             left, right, left_on, right_on, by, how, strategy, tolerance,
             bucket, horizon,
         )
-    if disjoint and end_col is None:
-        raise ValueError("disjoint=True requires end_col (interval semantics)")
+    if bucket is not None and end_col is None:
+        raise ValueError(
+            "bucket= requires end_col (non-overlapping interval semantics)"
+        )
     if strategy == "broadcast":
         if bucket is not None:
             out = _asof_bucketed(
-                left, right, left_on, right_on, by, end_col, how, bucket, disjoint,
-                horizon,
+                left, right, left_on, right_on, by, end_col, how, bucket, horizon
             )
         else:
-            out = _asof_broadcast(
-                left, right, left_on, right_on, by, end_col, how, disjoint
-            )
+            out = _asof_broadcast(left, right, left_on, right_on, by, end_col, how)
     elif strategy == "union":
         out = _asof_union(left, right, left_on, right_on, by, end_col, how)
     else:
         raise ValueError(f"unknown asof strategy: {strategy}")
     if tolerance is not None:
-        rcols = _right_cols(right, right_on, by) + [right_on]
         fresh = F.col(right_on) >= F.col(left_on) - F.expr(f"INTERVAL {tolerance}")
-        out = out.select(
-            *[c for c in left.columns],
-            *[
-                F.when(fresh, F.col(c)).otherwise(F.lit(None)).alias(c)
-                for c in rcols
-            ],
-        )
-        if how == "inner":
-            out = out.filter(F.col(right_on).isNotNull())
+        out = _null_stale(out, left, right, right_on, by, fresh, how)
+    return out
+
+
+def _null_stale(
+    out: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    right_on: str,
+    by: list[str],
+    fresh: Column,
+    how: str,
+) -> DataFrame:
+    """The tolerance post-filter of every direction (pandas merge_asof
+    semantics): a match failing ``fresh`` keeps its left row with NULL
+    right columns, or is dropped on ``how='inner'``."""
+    out = out.select(
+        *left.columns,
+        *[
+            F.when(fresh, F.col(c)).otherwise(F.lit(None)).alias(c)
+            for c in _right_cols(right, right_on, by) + [right_on]
+        ],
+    )
+    if how == "inner":
+        out = out.filter(F.col(right_on).isNotNull())
     return out
 
 
@@ -208,22 +216,12 @@ def _asof_forward(
         how="left",  # tolerance nulls are applied here, on the originals
         strategy=strategy,
     )
-    rcols = [c for c in right.columns if c not in by]
     if tolerance is not None:
         fresh = F.col(right_on) <= F.col(left_on) + F.expr(f"INTERVAL {tolerance}")
-        out = out.select(
-            *[c for c in left.columns],
-            F.col(negr),
-            *[
-                F.when(fresh, F.col(c)).otherwise(F.lit(None)).alias(c)
-                for c in rcols
-            ],
-        )
-        if how == "inner":
-            out = out.filter(F.col(right_on).isNotNull())
+        out = _null_stale(out, left, right, right_on, by, fresh, how)
     elif how == "inner":
         out = out.filter(F.col(negr).isNotNull())
-    return out.select(*left.columns, *rcols)
+    return out.select(*left.columns, *[c for c in right.columns if c not in by])
 
 
 def _asof_nearest(
@@ -242,12 +240,10 @@ def _asof_nearest(
     row with the smallest |right_on − left_on|, ties won by the earlier
     (backward) row.
 
-    - broadcast: by-key equi join (cross for date-only) against the
-      broadcast right, then a per-left-row window ordered by absolute gap.
-    - broadcast + bucket: the hash-join variant (mirrors backward's
-      strategy matrix) — nearest reduced to a DISJOINT interval join over
-      midpoint covers, executed by the bucketed backward machinery as a
-      codegen'd BroadcastHashJoin (see _nearest_bucketed).
+    - broadcast (requires bucket=): the hash-join strategy — nearest
+      reduced to a NON-OVERLAPPING interval join over midpoint covers,
+      executed by the bucketed backward machinery as a codegen'd
+      BroadcastHashJoin (see _nearest_bucketed).
     - union: ONE shuffle + ONE Window operator holding BOTH carries — the
       preceding-frame ``last`` (backward candidate) and the following-frame
       ``first`` (forward candidate); the smaller gap wins per row. Same
@@ -257,31 +253,23 @@ def _asof_nearest(
     the interval in either direction are nulled.
     """
     if strategy == "broadcast":
-        if bucket is not None:
-            out = _nearest_bucketed(
-                left, right, left_on, right_on, by, bucket, horizon
+        if bucket is None:
+            raise ValueError(
+                "direction='nearest' with strategy='broadcast' requires bucket="
             )
-        else:
-            out = _nearest_broadcast(left, right, left_on, right_on, by)
+        out = _nearest_bucketed(left, right, left_on, right_on, by, bucket, horizon)
     elif strategy == "union":
         if bucket is not None:
             raise ValueError("bucket= applies to the broadcast strategy only")
         out = _nearest_union(left, right, left_on, right_on, by)
     else:
         raise ValueError(f"unknown asof strategy: {strategy}")
-    rcols = _right_cols(right, right_on, by) + [right_on]
     if tolerance is not None:
         tol = F.expr(f"INTERVAL {tolerance}")
         fresh = (F.col(right_on) >= F.col(left_on) - tol) & (
             F.col(right_on) <= F.col(left_on) + tol
         )
-        out = out.select(
-            *[c for c in left.columns],
-            *[
-                F.when(fresh, F.col(c)).otherwise(F.lit(None)).alias(c)
-                for c in rcols
-            ],
-        )
+        return _null_stale(out, left, right, right_on, by, fresh, how)
     if how == "inner":
         out = out.filter(F.col(right_on).isNotNull())
     return out
@@ -305,46 +293,6 @@ def _abs_gap(a: Column, b: Column, dtype_a: str, dtype_b: str) -> Column:
     return F.abs(_axis_num(a, dtype_a) - _axis_num(b, dtype_b))
 
 
-def _nearest_broadcast(
-    left: DataFrame,
-    right: DataFrame,
-    left_on: str,
-    right_on: str,
-    by: list[str],
-) -> DataFrame:
-    # Null-rejecting on BOTH event times, mirroring the backward range
-    # predicate's semantics: a NULL left_on row has no defined gap (pandas
-    # merge_asof refuses unsortable keys outright) so it must surface with
-    # NULL right columns, and a NULL right_on row can never be a match —
-    # without the pre-filter it would half-match (non-null payload, NULL
-    # right_on), which the union strategy can never produce.
-    cond = F.col(f"l.{left_on}").isNotNull()
-    for k in by:
-        cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
-    lid = "__asof_lid"
-    l = left.withColumn(lid, F.monotonically_increasing_id()).alias("l")
-    r = F.broadcast(right.filter(F.col(right_on).isNotNull())).alias("r")
-    joined = l.join(r, cond, "left")
-    gap = _abs_gap(
-        F.col(f"l.{left_on}"),
-        F.col(f"r.{right_on}"),
-        dict(left.dtypes)[left_on],
-        dict(right.dtypes)[right_on],
-    )
-    # smallest gap first; ties -> earlier right_on (the backward row)
-    w = Window.partitionBy(f"l.{lid}").orderBy(
-        gap.asc_nulls_last(), F.col(f"r.{right_on}").asc()
-    )
-    out_cols = [F.col(f"l.{c}") for c in left.columns] + [
-        F.col(f"r.{c}") for c in _right_cols(right, right_on, by)
-    ] + [F.col(f"r.{right_on}")]
-    return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*out_cols)
-    )
-
-
 def _nearest_bucketed(
     left: DataFrame,
     right: DataFrame,
@@ -354,7 +302,8 @@ def _nearest_bucketed(
     bucket: str,
     horizon: DataFrame | None,
 ) -> DataFrame:
-    """Nearest as-of as a DISJOINT interval join — the hash-join strategy.
+    """Nearest as-of as a NON-OVERLAPPING interval join — the hash-join
+    strategy.
 
     Reduction: per (by-key) the right rows split the time axis at the
     MIDPOINTS between consecutive event times; each right row's cover
@@ -362,10 +311,10 @@ def _nearest_bucketed(
     candidate, with the tie-at-midpoint landing on the EARLIER row (the
     documented backward tie rule: prev wins iff left − prev ≤ next − left,
     i.e. left ≤ floor((prev + next) / 2) in long microseconds — the same
-    exact axis the other nearest strategies compare on). The covers are
-    disjoint and exhaustive by construction, so the whole bucketed
-    backward machinery (_asof_bucketed, disjoint fast path, codegen'd
-    BroadcastHashJoin) runs unchanged over them.
+    exact axis the union strategy compares on). The covers are disjoint and
+    exhaustive by construction, which is the bucketed backward machinery's
+    contract, so _asof_bucketed (codegen'd BroadcastHashJoin, no dedup
+    window) runs unchanged over them.
 
     One window over the dimension-sized right derives the covers; right
     rows sharing (by, right_on) are merged first (max payload struct —
@@ -429,11 +378,97 @@ def _nearest_bucketed(
         "__cover_end",
         "left",
         bucket,
-        disjoint=True,
         horizon=bounds.select("__asof_hi"),
     )
-    # Canonical column order (matches the other nearest strategies).
+    # Canonical column order (matches the union strategy).
     return out.select(*left.columns, *rcols, right_on)
+
+
+# Column names of the union strategies' tagged relation.
+_TS = "__asof_ts"
+_SIDE = "__asof_side"  # 0 = right (sorts before left on ties → inclusive)
+_RSTRUCT = "__asof_r"
+_LSTRUCT = "__asof_l"
+
+
+def _tagged_union(
+    left: DataFrame,
+    right: DataFrame,
+    left_on: str,
+    right_on: str,
+    by: list[str],
+    rfields: list[Column],
+) -> DataFrame:
+    """Both sides as ONE relation for the union strategies' window walk:
+    (by..., _TS, _SIDE, [_RSTRUCT], _LSTRUCT). Each side's payload is
+    packed into a struct BEFORE the union: a NULL struct costs only a
+    null bit in the shuffled UnsafeRow, whereas flat null-padded
+    fixed-width columns (the obvious layout) still occupy their 8-byte
+    slots on every row of the OTHER side. The event times do not ride in
+    the structs — _TS holds left_on (side 1) / right_on (side 0). Empty
+    ``rfields`` (a payload-free right side) builds no right struct at all.
+
+    A NULL right_on row can never be an as-of match (the range predicate
+    is null-rejecting in the broadcast strategy); it is dropped here so
+    every carry over the walk stays row-consistent.
+    """
+    lcols = [c for c in left.columns if c not in by and c != left_on]
+    lfields = [F.col(c) for c in lcols] or [F.lit(True).alias("__asof_m")]
+    rpart = right.filter(F.col(right_on).isNotNull()).select(
+        *[F.col(k) for k in by],
+        F.col(right_on).alias(_TS),
+        F.lit(0).alias(_SIDE),
+        *([F.struct(*rfields).alias(_RSTRUCT)] if rfields else []),
+    )
+    rnull = (
+        [F.lit(None).cast(rpart.schema[_RSTRUCT].dataType).alias(_RSTRUCT)]
+        if rfields
+        else []
+    )
+    lpart = left.select(
+        *[F.col(k) for k in by],
+        F.col(left_on).alias(_TS),
+        F.lit(1).alias(_SIDE),
+        *rnull,
+        F.struct(*lfields).alias(_LSTRUCT),
+    )
+    ltype = lpart.schema[_LSTRUCT].dataType
+    rpart = rpart.withColumn(_LSTRUCT, F.lit(None).cast(ltype))
+    return lpart.unionByName(rpart.select(*lpart.columns))
+
+
+def _walk(unioned: DataFrame, by: list[str], carries: list[Column]) -> DataFrame:
+    """Evaluate the window ``carries`` over the tagged union and keep the
+    left rows. All carries go in ONE select so Catalyst plans a single
+    Window operator per frame spec (chained withColumns put a Project
+    between two same-spec Windows, which blocks CollapseWindow → two
+    walks per partition)."""
+    return (
+        unioned.select(
+            *[F.col(k) for k in by], F.col(_TS), F.col(_SIDE), F.col(_LSTRUCT),
+            *carries,
+        )
+        .filter(F.col(_SIDE) == 1)
+        .drop(_SIDE)
+    )
+
+
+def _left_out(left: DataFrame, left_on: str, by: list[str]) -> list[Column]:
+    """The left row's columns rebuilt after the window walk: by-keys as
+    they are, the rest from the packed struct, and left_on from _TS cast
+    back to its input type — the union widens _TS to the common
+    event-time type, and DATE must stay DATE, as in the broadcast
+    strategy's output on the same inputs."""
+    left_on_type = dict(left.dtypes)[left_on]
+
+    def col(c: str) -> Column:
+        if c in by:
+            return F.col(c)
+        if c == left_on:
+            return F.col(_TS).cast(left_on_type).alias(c)
+        return F.col(f"{_LSTRUCT}.{c}").alias(c)
+
+    return [col(c) for c in left.columns]
 
 
 def _nearest_union(
@@ -443,32 +478,12 @@ def _nearest_union(
     right_on: str,
     by: list[str],
 ) -> DataFrame:
-    ts = "__asof_ts"
-    side = "__asof_side"  # right rows sort before left on ties (inclusive)
-    rstruct = "__asof_r"
-    lstruct = "__asof_l"
+    ts, side = _TS, _SIDE
     rcols = _right_cols(right, right_on, by)
-    lcols = [c for c in left.columns if c not in by and c != left_on]
+    # A payload-free right side still carries a marker struct: a non-NULL
+    # carry is what tells "no candidate" apart below.
     rfields = [F.col(c) for c in rcols] or [F.lit(True).alias("__asof_m")]
-    lfields = [F.col(c) for c in lcols] or [F.lit(True).alias("__asof_m")]
-
-    rpart = right.filter(F.col(right_on).isNotNull()).select(
-        *[F.col(k) for k in by],
-        F.col(right_on).alias(ts),
-        F.lit(0).alias(side),
-        F.struct(*rfields).alias(rstruct),
-    )
-    rtype = rpart.schema[rstruct].dataType
-    lpart = left.select(
-        *[F.col(k) for k in by],
-        F.col(left_on).alias(ts),
-        F.lit(1).alias(side),
-        F.lit(None).cast(rtype).alias(rstruct),
-        F.struct(*lfields).alias(lstruct),
-    )
-    ltype = lpart.schema[lstruct].dataType
-    rpart = rpart.withColumn(lstruct, F.lit(None).cast(ltype))
-    unioned = lpart.unionByName(rpart.select(*lpart.columns))
+    unioned = _tagged_union(left, right, left_on, right_on, by, rfields)
 
     order = [F.col(ts).asc(), F.col(side).asc()]
     wb = (
@@ -486,19 +501,15 @@ def _nearest_union(
     # frames). The equal-ts right row sorts BEFORE the left row, so it is
     # captured by the backward frame with gap 0 — which wins every nearest
     # tie anyway (pandas resolves nearest ties backward).
-    carried = (
-        unioned.select(
-            *[F.col(k) for k in by],
-            F.col(ts),
-            F.col(side),
-            F.col(lstruct),
-            F.last(rstruct, ignorenulls=True).over(wb).alias("__b"),
+    carried = _walk(
+        unioned,
+        by,
+        [
+            F.last(_RSTRUCT, ignorenulls=True).over(wb).alias("__b"),
             F.last(r_ts, ignorenulls=True).over(wb).alias("__bts"),
-            F.first(rstruct, ignorenulls=True).over(wf).alias("__f"),
+            F.first(_RSTRUCT, ignorenulls=True).over(wf).alias("__f"),
             F.first(r_ts, ignorenulls=True).over(wf).alias("__fts"),
-        )
-        .filter(F.col(side) == 1)
-        .drop(side)
+        ],
     )
 
     ts_dt = dict(carried.dtypes)[ts]  # post-union widened axis type
@@ -516,99 +527,11 @@ def _nearest_union(
     chosen = F.when(pick_b, F.col("__b")).when(valid, F.col("__f"))
     chosen_ts = F.when(pick_b, F.col("__bts")).when(valid, F.col("__fts"))
 
-    # The union coerces __asof_ts to the wider of the two event-time types;
-    # cast back so left_on keeps its input type (DATE stays DATE) and the
-    # output schema matches the broadcast/bucket strategies on same inputs.
-    left_on_type = dict(left.dtypes)[left_on]
-
-    def _left_out(c: str) -> Column:
-        if c in by:
-            return F.col(c)
-        if c == left_on:
-            return F.col(ts).cast(left_on_type).alias(c)
-        return F.col(f"{lstruct}.{c}").alias(c)
-
     return carried.select(
-        *[_left_out(c) for c in left.columns],
+        *_left_out(left, left_on, by),
         *[chosen.getField(c).alias(c) for c in rcols],
         chosen_ts.alias(right_on),
     )
-
-
-def _asof_union_keys_only(
-    left: DataFrame,
-    right: DataFrame,
-    left_on: str,
-    right_on: str,
-    by: list[str],
-    how: str,
-) -> DataFrame:
-    """Union as-of for a PAYLOAD-FREE right side (by-keys + event time
-    only): one shuffle, one Window, ONE carry expression.
-
-    ``end_col`` can never route here (an end column is right payload, so
-    ``rcols`` is non-empty and the struct path runs instead). The carried
-    right event time doubles as the match indicator — NULL means no right
-    row at or before the left row.
-    """
-    ts = "__asof_ts"
-    side = "__asof_side"  # 0 = right (sorts before left on ties → inclusive)
-    lstruct = "__asof_l"
-    lcols = [c for c in left.columns if c not in by and c != left_on]
-    lfields = [F.col(c) for c in lcols] or [F.lit(True).alias("__asof_m")]
-
-    rpart = right.filter(F.col(right_on).isNotNull()).select(
-        *[F.col(k) for k in by],
-        F.col(right_on).alias(ts),
-        F.lit(0).alias(side),
-    )
-    lpart = left.select(
-        *[F.col(k) for k in by],
-        F.col(left_on).alias(ts),
-        F.lit(1).alias(side),
-        F.struct(*lfields).alias(lstruct),
-    )
-    ltype = lpart.schema[lstruct].dataType
-    rpart = rpart.withColumn(lstruct, F.lit(None).cast(ltype))
-    unioned = lpart.unionByName(rpart.select(*lpart.columns))
-
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(F.col(ts).asc(), F.col(side).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    rts = "__asof_rts"
-    carried = (
-        unioned.select(
-            *[F.col(k) for k in by],
-            F.col(ts),
-            F.col(side),
-            F.col(lstruct),
-            F.last(F.when(F.col(side) == 0, F.col(ts)), ignorenulls=True)
-            .over(w)
-            .alias(rts),
-        )
-        .filter(F.col(side) == 1)
-        .drop(side)
-    )
-
-    # Same type-restore as the struct path: the union widens __asof_ts, so
-    # cast the reconstructed left_on back to the left input's type.
-    left_on_type = dict(left.dtypes)[left_on]
-
-    def _left_out(c: str) -> Column:
-        if c in by:
-            return F.col(c)
-        if c == left_on:
-            return F.col(ts).cast(left_on_type).alias(c)
-        return F.col(f"{lstruct}.{c}").alias(c)
-
-    out = carried.select(
-        *[_left_out(c) for c in left.columns], F.col(rts).alias(right_on)
-    )
-    if how == "inner":
-        out = out.filter(F.col(right_on).isNotNull())
-    return out
 
 
 def _range_cond(
@@ -625,34 +548,14 @@ def _range_cond(
     return cond
 
 
-def _dedup_latest(
-    joined: DataFrame,
-    left: DataFrame,
-    right: DataFrame,
-    right_on: str,
-    by: list[str],
-    end_col: str | None,
-    lid: str,
-) -> DataFrame:
-    """Keep only the latest matching right row per left row.
-
-    Tie-break beyond right_on: an open-ended interval (NULL end) outranks a
-    closed one starting the same instant — deterministic across runs and
-    strategies (pandas merge_asof keeps the last row in sort order, which
-    for the reference's dim builder is the open interval).
-    """
-    order = [F.col(f"r.{right_on}").desc_nulls_last()]
-    if end_col is not None:
-        order.append(F.col(f"r.{end_col}").desc_nulls_first())
-    w = Window.partitionBy(lid).orderBy(*order)
-    out_cols = [F.col(f"l.{c}") for c in left.columns] + [
+def _joined_cols(
+    left: DataFrame, right: DataFrame, right_on: str, by: list[str]
+) -> list[Column]:
+    """Output columns of an ``l``/``r``-aliased join: the left row, then
+    the right payload, then right_on."""
+    return [F.col(f"l.{c}") for c in left.columns] + [
         F.col(f"r.{c}") for c in _right_cols(right, right_on, by)
     ] + [F.col(f"r.{right_on}")]
-    return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*out_cols)
-    )
 
 
 def _asof_broadcast(
@@ -663,32 +566,7 @@ def _asof_broadcast(
     by: list[str],
     end_col: str | None,
     how: str,
-    disjoint: bool = False,
 ) -> DataFrame:
-    out_cols = [F.col(f"l.{c}") for c in left.columns] + [
-        F.col(f"r.{c}") for c in _right_cols(right, right_on, by)
-    ] + [F.col(f"r.{right_on}")]
-
-    if disjoint:
-        # ≤ 1 match per left row by construction: no row-tag, no window,
-        # no second shuffle of the joined fact. With non-overlapping
-        # intervals "latest start then end-filter" ≡ "covering interval",
-        # so keeping end_col inside the join is both correct and the
-        # cheapest plan.
-        cond = _range_cond(left_on, right_on, by, end_col)
-        l = left.alias("l")
-        r = F.broadcast(right).alias("r")
-        return l.join(r, cond, "left" if how == "left" else "inner").select(*out_cols)
-
-    # Tag left rows so we can window per original row after the range join.
-    lid = "__asof_lid"
-    l = left.withColumn(lid, F.monotonically_increasing_id()).alias("l")
-    r = F.broadcast(right).alias("r")
-    if end_col is None:
-        cond = _range_cond(left_on, right_on, by, None)
-        joined = l.join(r, cond, "left" if how == "left" else "inner")
-        return _dedup_latest(joined, left, right, right_on, by, end_col, f"l.{lid}")
-
     # Reference semantics with OVERLAPPING intervals (review r8): pandas
     # merge_asof picks the LATEST START, then the end condition post-
     # filters — an expired latest interval masks an older covering one.
@@ -697,12 +575,32 @@ def _asof_broadcast(
     # closed interval overlaps an older open one). Join on start only,
     # dedup to the latest start, THEN null out expired matches. Cost:
     # expired intervals re-enter the candidate set — fine for the
-    # dimension-sized right side this strategy targets; pass
-    # disjoint=True for non-overlapping calendars to keep the
-    # end-in-join fast path.
+    # dimension-sized right side this strategy targets; pass bucket= for
+    # non-overlapping calendars to keep the end-in-join fast path.
+    # Left rows are tagged so the dedup windows per original row.
+    lid = "__asof_lid"
+    l = left.withColumn(lid, F.monotonically_increasing_id()).alias("l")
+    r = F.broadcast(right).alias("r")
     cond = _range_cond(left_on, right_on, by, None)
     joined = l.join(r, cond, "left" if how == "left" else "inner")
-    dedup = _dedup_latest(joined, left, right, right_on, by, end_col, f"l.{lid}")
+
+    # Keep only the latest matching right row per left row. Tie-break
+    # beyond right_on: an open-ended interval (NULL end) outranks a closed
+    # one starting the same instant — deterministic across runs and
+    # strategies (pandas merge_asof keeps the last row in sort order, which
+    # for the reference's dim builder is the open interval).
+    order = [F.col(f"r.{right_on}").desc_nulls_last()]
+    if end_col is not None:
+        order.append(F.col(f"r.{end_col}").desc_nulls_first())
+    w = Window.partitionBy(f"l.{lid}").orderBy(*order)
+    dedup = (
+        joined.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select(*_joined_cols(left, right, right_on, by))
+    )
+    if end_col is None:
+        return dedup
+
     expired = (
         F.col(right_on).isNotNull()
         & F.col(end_col).isNotNull()
@@ -724,22 +622,25 @@ def _asof_bucketed(
     left_on: str,
     right_on: str,
     by: list[str],
-    end_col: str | None,
+    end_col: str,
     how: str,
     bucket: str,
-    disjoint: bool,
     horizon: DataFrame | None = None,
 ) -> DataFrame:
-    """Broadcast HASH as-of join via a derived calendar-bucket equi key.
+    """Broadcast HASH as-of join over NON-OVERLAPPING intervals via a
+    derived calendar-bucket equi key.
 
     Each right interval is exploded over every ``date_trunc(bucket, ·)``
     value it covers — from its start bucket to its end bucket (open
-    intervals and plain as-of rows cover through ``max(left_on)``, one
-    column-pruned aggregate over the left). The join is then a plain equi
-    join on the bucket key (+ by-keys) with the exact range predicate kept
-    as an in-join filter, so Catalyst plans BroadcastHashJoin with
-    whole-stage codegen instead of a BroadcastNestedLoopJoin (~4× on the
-    row-at-a-time predicate, measured in this repo's bench).
+    intervals cover through ``max(left_on)``, one column-pruned aggregate
+    over the left). The join is then a plain equi join on the bucket key
+    (+ by-keys) with the exact range predicate, end included, kept as an
+    in-join filter, so Catalyst plans BroadcastHashJoin with whole-stage
+    codegen instead of a BroadcastNestedLoopJoin (~4× on the row-at-a-time
+    predicate, measured in this repo's bench). Non-overlap means ≤ 1 match
+    per left row, so no dedup window follows the join; with
+    non-overlapping intervals "latest start then end-filter" ≡ "covering
+    interval", so the end predicate in the join is exact.
     """
     if bucket not in _BUCKET_STEP:
         raise ValueError(f"bucket must be one of {sorted(_BUCKET_STEP)}: {bucket}")
@@ -758,7 +659,7 @@ def _asof_bucketed(
         bucket,
         F.greatest(
             F.coalesce(
-                (F.col(end_col) if end_col else F.lit(None)).cast("timestamp"),
+                F.col(end_col).cast("timestamp"),
                 F.col("__asof_max").cast("timestamp"),
             ),
             F.col(right_on).cast("timestamp"),
@@ -782,21 +683,13 @@ def _asof_bucketed(
     cond = (F.col(f"l.{bk}") == F.col(f"r.{bk}")) & _range_cond(
         left_on, right_on, by, end_col
     )
-    out_cols = [F.col(f"l.{c}") for c in left.columns] + [
-        F.col(f"r.{c}") for c in _right_cols(right, right_on, by)
-    ] + [F.col(f"r.{right_on}")]
-
-    ltag = left.withColumn(bk, F.date_trunc(bucket, F.col(left_on).cast("timestamp")))
-    if disjoint:
-        l = ltag.alias("l")
-        r = F.broadcast(rexp).alias("r")
-        return l.join(r, cond, "left" if how == "left" else "inner").select(*out_cols)
-
-    lid = "__asof_lid"
-    l = ltag.withColumn(lid, F.monotonically_increasing_id()).alias("l")
+    l = left.withColumn(
+        bk, F.date_trunc(bucket, F.col(left_on).cast("timestamp"))
+    ).alias("l")
     r = F.broadcast(rexp).alias("r")
-    joined = l.join(r, cond, "left" if how == "left" else "inner")
-    return _dedup_latest(joined, left, right, right_on, by, end_col, f"l.{lid}")
+    return l.join(r, cond, "left" if how == "left" else "inner").select(
+        *_joined_cols(left, right, right_on, by)
+    )
 
 
 def _asof_union(
@@ -818,54 +711,17 @@ def _asof_union(
     previous row's value; a struct is non-null as a whole, so its internal
     NULLs survive the carry.
 
-    Each side's payload is packed into a struct BEFORE the union: a NULL
-    struct costs only a null bit in the shuffled UnsafeRow, whereas flat
-    null-padded fixed-width columns (the obvious layout) still occupy
-    their 8-byte slots on every row of the OTHER side — on a right side
-    bigger than the left that's pure wasted shuffle volume.
+    right_on is reconstructed from a second carry expression over the
+    SAME window frame (one sort pass, two aggregate buffers). A
+    payload-free right side (the caller deferred every derivable column
+    past the join) carries no struct at all: the carried right event time
+    IS the whole match — one carry per row instead of two.
     """
-    ts = "__asof_ts"
-    side = "__asof_side"  # 0 = right (sorts before left on ties → inclusive)
-    rstruct = "__asof_r"
-    lstruct = "__asof_l"
+    ts, side = _TS, _SIDE
     rcols = _right_cols(right, right_on, by)
-    if not rcols:
-        # Payload-free right side (the caller deferred every derivable
-        # column past the join): the carried right event time IS the whole
-        # match, so the marker struct — and with it the second window
-        # aggregate buffer — is dropped entirely. One carry per row
-        # instead of two through the same sorted walk.
-        return _asof_union_keys_only(left, right, left_on, right_on, by, how)
-    # The event-time columns do NOT ride inside the payload structs — ts
-    # already holds left_on (side 1) / right_on (side 0), and duplicating
-    # them (the obvious layout) adds 8 bytes × every shuffled row. They are
-    # reconstructed after the window: left_on from ts, right_on from a
-    # second carry expression over the SAME window frame (one sort pass,
-    # two aggregate buffers).
-    lcols = [c for c in left.columns if c not in by and c != left_on]
-    rfields = [F.col(c) for c in rcols]
-    lfields = [F.col(c) for c in lcols] or [F.lit(True).alias("__asof_m")]
-
-    # A NULL right_on row can never be an as-of match (the range predicate
-    # is null-rejecting in the broadcast strategy); dropping it here keeps
-    # the two carry expressions (rstruct, rts) row-consistent.
-    rpart = right.filter(F.col(right_on).isNotNull()).select(
-        *[F.col(k) for k in by],
-        F.col(right_on).alias(ts),
-        F.lit(0).alias(side),
-        F.struct(*rfields).alias(rstruct),
+    unioned = _tagged_union(
+        left, right, left_on, right_on, by, [F.col(c) for c in rcols]
     )
-    rtype = rpart.schema[rstruct].dataType
-    lpart = left.select(
-        *[F.col(k) for k in by],
-        F.col(left_on).alias(ts),
-        F.lit(1).alias(side),
-        F.lit(None).cast(rtype).alias(rstruct),
-        F.struct(*lfields).alias(lstruct),
-    )
-    ltype = lpart.schema[lstruct].dataType
-    rpart = rpart.withColumn(lstruct, F.lit(None).cast(ltype))
-    unioned = lpart.unionByName(rpart.select(*lpart.columns))
 
     # Tie-break among right rows sharing the same start: the open interval
     # (NULL end) — or failing that the longest one — is carried, matching
@@ -873,93 +729,43 @@ def _asof_union(
     # last-in-sort-order behavior on the reference's dim builder.
     order = [F.col(ts).asc(), F.col(side).asc()]
     if end_col is not None:
-        order.append(F.col(f"{rstruct}.{end_col}").asc_nulls_last())
+        order.append(F.col(f"{_RSTRUCT}.{end_col}").asc_nulls_last())
     w = (
         Window.partitionBy(*by)
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # Both carries in ONE select so Catalyst plans a single Window operator
-    # (chained withColumns put a Project between two same-spec Windows,
-    # which blocks CollapseWindow → two walks per partition).
     rts = "__asof_rts"
     rcarry = "__asof_rc"
-    carried = (
-        unioned.select(
-            *[F.col(k) for k in by],
-            F.col(ts),
-            F.col(side),
-            F.col(lstruct),
-            F.last(rstruct, ignorenulls=True).over(w).alias(rcarry),
-            F.last(F.when(F.col(side) == 0, F.col(ts)), ignorenulls=True)
-            .over(w)
-            .alias(rts),
-        )
-        .filter(F.col(side) == 1)
-        .drop(side)
-    )
-    rstruct = rcarry
+    carries = [
+        F.last(F.when(F.col(side) == 0, F.col(ts)), ignorenulls=True)
+        .over(w)
+        .alias(rts)
+    ]
+    if rcols:
+        carries.insert(0, F.last(_RSTRUCT, ignorenulls=True).over(w).alias(rcarry))
+    carried = _walk(unioned, by, carries)
 
-    matched = F.col(rstruct).isNotNull()
-    if end_col is not None:
-        # Discard stale matches: the carried interval already ended. The
-        # retained __asof_ts column holds left_on's value on side-1 rows —
-        # reading left_on through lstruct would break when left_on is also
-        # a by-key (by-keys are excluded from the packed struct).
-        matched = matched & (
-            F.col(f"{rstruct}.{end_col}").isNull()
-            | (F.col(ts) <= F.col(f"{rstruct}.{end_col}"))
-        )
-    # The union widens __asof_ts to the common event-time type; restore
-    # left_on's input type so this strategy's schema matches broadcast's.
-    left_on_type = dict(left.dtypes)[left_on]
-
-    def _left_out(c: str) -> Column:
-        if c in by:
-            return F.col(c)
-        if c == left_on:
-            return F.col(ts).cast(left_on_type).alias(c)
-        return F.col(f"{lstruct}.{c}").alias(c)
-
-    out = carried.select(
-        *[_left_out(c) for c in left.columns],
-        *[
-            F.when(matched, F.col(f"{rstruct}.{c}")).otherwise(F.lit(None)).alias(c)
+    payload, match_ts = [], F.col(rts)
+    if rcols:
+        matched = F.col(rcarry).isNotNull()
+        if end_col is not None:
+            # Discard stale matches: the carried interval already ended.
+            # The retained _TS column holds left_on's value on side-1 rows
+            # — reading left_on through the left struct would break when
+            # left_on is also a by-key (by-keys are excluded from it).
+            matched = matched & (
+                F.col(f"{rcarry}.{end_col}").isNull()
+                | (F.col(ts) <= F.col(f"{rcarry}.{end_col}"))
+            )
+        payload = [
+            F.when(matched, F.col(f"{rcarry}.{c}")).otherwise(F.lit(None)).alias(c)
             for c in rcols
-        ],
-        F.when(matched, F.col(rts)).otherwise(F.lit(None)).alias(right_on),
+        ]
+        match_ts = F.when(matched, match_ts).otherwise(F.lit(None))
+    out = carried.select(
+        *_left_out(left, left_on, by), *payload, match_ts.alias(right_on)
     )
     if how == "inner":
         out = out.filter(F.col(right_on).isNotNull())
     return out
-
-
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_time: str,
-    start_col: str,
-    end_col: str,
-    by: list[str] | None = None,
-    how: str = "inner",
-    broadcast_right: bool = True,
-) -> DataFrame:
-    """Interval-containment join (J5): ``start <= t AND (end IS NULL OR t <= end)``.
-
-    With by-keys, Catalyst executes a hash join on the equi part with the
-    range predicate as a post-condition; without them, the right side must
-    be broadcast-able (dimension-sized) to avoid a cartesian.
-    """
-    by = by or []
-    cond: Column = (F.col(f"l.{left_time}") >= F.col(f"r.{start_col}")) & (
-        F.col(f"r.{end_col}").isNull()
-        | (F.col(f"l.{left_time}") <= F.col(f"r.{end_col}"))
-    )
-    for k in by:
-        cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
-    r = F.broadcast(right) if broadcast_right else right
-    joined = left.alias("l").join(r.alias("r"), cond, how)
-    out_cols = [F.col(f"l.{c}") for c in left.columns] + [
-        F.col(f"r.{c}").alias(c) for c in right.columns if c not in by
-    ]
-    return joined.select(*out_cols)

@@ -1,22 +1,19 @@
-"""Deterministic surrogate keys (SURVEY.md §2.6 F13).
+"""Materialized range partitions: the pinned base of the distributed
+two-pass prefix sums (SURVEY.md §2.6 F13).
 
 The reference generates surrogate keys from the pandas index
 (``Id = index + 1``, reference src/pipelines/etl.py:80) — an implicit,
-single-process ordering. Distributed equivalent: ``row_number()`` over an
-explicit, total ordering. ``monotonically_increasing_id`` is deliberately
-NOT used: its values depend on partition layout (non-deterministic across
-runs/cluster sizes) and are non-contiguous.
-
-Scale note: row_number over a global window funnels through one partition.
-That's fine for dimension tables (the only place surrogate keys are needed
-here); for billion-row keys use ``zipWithIndex``-style two-pass offsets —
-exposed as ``with_surrogate_key(..., strategy="distributed")``.
+single-process ordering. The distributed equivalent of such a running
+count is a two-pass prefix sum over range-partitioned, sorted rows:
+per-partition running values plus an exclusive scan of per-partition
+totals. ``operators/packing.py`` runs it (``with_running_weight_before``,
+``with_rank_and_running``); this module holds the partitioning step whose
+layout both passes must share.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def materialized_range_partitions(
@@ -32,7 +29,7 @@ def materialized_range_partitions(
     second MUST pin one materialized partitioning first, or the offsets
     describe a layout the second job no longer has (duplicate/shifted
     keys, mis-packed shards — review r8). The checkpoint's storage cost
-    is the price of that consistency; both consumers (keys, packing)
+    is the price of that consistency; both consumers (in packing.py)
     read it exactly twice.
 
     LAZY checkpoint (optimization r18): every caller's immediately-next
@@ -45,7 +42,7 @@ def materialized_range_partitions(
 
     CALLER CONTRACT (ADVICE r18): the lazy checkpoint only delivers the
     pinned-layout guarantee if the caller's FIRST action over the result
-    computes every partition (the stats-collect-first pattern all three
+    computes every partition (the stats-collect-first pattern both
     current callers follow). A new consumer whose first action reads a
     subset (a limit, a single-partition probe) would leave the remaining
     partitions un-pinned until some later job computes them — pass the
@@ -56,50 +53,3 @@ def materialized_range_partitions(
         *order_cols
     ).localCheckpoint(eager=False)
 
-
-def with_surrogate_key(
-    df: DataFrame,
-    key_col: str,
-    order_by: list[str],
-    start: int = 1,
-    strategy: str = "window",
-) -> DataFrame:
-    if not order_by:
-        raise ValueError("surrogate keys need an explicit total ordering")
-    if strategy == "window":
-        w = Window.orderBy(*[F.col(c).asc_nulls_last() for c in order_by])
-        return df.withColumn(key_col, (F.row_number().over(w) + start - 1).cast("int"))
-    if strategy == "distributed":
-        # Two-pass: per-partition row_number + exclusive prefix-sum of
-        # partition sizes. No single-partition funnel; keys are dense and
-        # deterministic given the sort.
-        sorted_df = materialized_range_partitions(
-            df, df.sparkSession.sparkContext.defaultParallelism, list(order_by)
-        )
-        with_pid = sorted_df.withColumn("__pid", F.spark_partition_id())
-        sizes = with_pid.groupBy("__pid").count().orderBy("__pid").collect()
-        offsets = {}
-        acc = 0
-        for row in sizes:
-            offsets[row["__pid"]] = acc
-            acc += row["count"]
-        if offsets:
-            # the checkpoint guarantees every pass-2 pid was counted in
-            # pass 1; the coalesce is a loud-zero guard, never expected
-            offmap = F.coalesce(
-                F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])[
-                    F.col("__pid")
-                ],
-                F.lit(0),
-            )
-        else:  # empty input
-            offmap = F.lit(0)
-        w = Window.partitionBy("__pid").orderBy(*[F.col(c).asc_nulls_last() for c in order_by])
-        return (
-            with_pid.withColumn(
-                key_col,
-                (F.row_number().over(w) + offmap + start - 1).cast("long"),
-            )
-            .drop("__pid")
-        )
-    raise ValueError(f"unknown strategy: {strategy}")

@@ -7,8 +7,8 @@ by a stable key, take the RUNNING token total before each doc, and assign
 ``shard = cum_before DIV budget``. That is a global prefix sum — naively a
 single-partition window sort, the textbook scale-killer.
 
-This operator computes it distributed, the same two-pass shape as
-``operators/keys.py::with_surrogate_key(strategy="distributed")``:
+This operator computes it distributed, in two passes over one
+``operators/keys.py::materialized_range_partitions`` layout:
 
 1. range-partition by the order key + sort within partitions;
 2. per-partition running totals via a partition-local window;

@@ -188,12 +188,13 @@ def asof_price_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps the lineitem⋈orders shuffle rows narrow.
     f = fact_sales(spark, sf_dir).select("OrderDate", "ProductID", "LineTotal")
     d = dim_date(spark, sf_dir)
-    # disjoint: the quarter calendar can't overlap, so the latest-match
-    # dedup window (a full re-shuffle of the joined fact) is skipped;
-    # bucket: quarter-trunc equi key upgrades the BroadcastNestedLoopJoin
-    # to a codegen'd BroadcastHashJoin; horizon: OrderDate IS orders'
-    # o_orderdate, so the open-interval coverage bound is a single-column
-    # scan of orders instead of re-executing the whole fact join for one max.
+    # bucket: the quarter calendar can't overlap (the bucketed strategy's
+    # contract), so the quarter-trunc equi key upgrades the
+    # BroadcastNestedLoopJoin to a codegen'd BroadcastHashJoin and the
+    # latest-match dedup window (a full re-shuffle of the joined fact) is
+    # skipped; horizon: OrderDate IS orders' o_orderdate, so the
+    # open-interval coverage bound is a single-column scan of orders
+    # instead of re-executing the whole fact join for one max.
     joined = asof_join(
         f,
         d,
@@ -201,7 +202,6 @@ def asof_price_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_on="StartDate",
         end_col="EndDate",
         how="inner",
-        disjoint=True,
         bucket="quarter",
         horizon=table(spark, "orders", sf_dir).select(F.max("o_orderdate")),
     )
@@ -516,8 +516,8 @@ def _nearest_quote_rollup(
 def asof_nearest_bucketed_quote(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same nearest-quote rollup through the BUCKETED HASH strategy
     (operators/asof_join.py::_nearest_bucketed): nearest reduced to a
-    disjoint interval join over midpoint covers, executed as a codegen'd
-    BroadcastHashJoin on the month-bucket equi key. Shares
+    non-overlapping interval join over midpoint covers, executed as a
+    codegen'd BroadcastHashJoin on the month-bucket equi key. Shares
     ``asof_nearest_quote``'s oracle — the strategies must agree exactly,
     so this row driver-attests the reduction itself.
     """

@@ -1,5 +1,5 @@
-"""As-of/interval join edge cases (SURVEY §7.3): open intervals (NULL end),
-events before any interval, inclusive boundary ties, per-key variant — and
+"""As-of join edge cases (SURVEY §7.3): open intervals (NULL end), events
+before any interval, inclusive boundary ties, per-key variant — and
 strategy agreement (broadcast range join vs union+window large-large path)."""
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from data_warehouse_product_mix_clustering_spark.operators.asof_join import asof_join, interval_join
+from data_warehouse_product_mix_clustering_spark.operators.asof_join import asof_join
 
 D = lambda s: dt.datetime.fromisoformat(s)
 
@@ -48,49 +48,37 @@ EXPECTED = {
 }
 
 
+def _check_interval_semantics(left, right, **kw):
+    """EXPECTED on how='left'; on how='inner' the same matches with the
+    unmatched rows dropped."""
+    for how in ("left", "inner"):
+        out = asof_join(
+            left, right, left_on="ts", right_on="start", end_col="end", how=how,
+            **kw,
+        )
+        got = {r.id: r.price for r in out.collect()}
+        want = {k: v for k, v in EXPECTED.items() if how == "left" or v is not None}
+        assert got == want, f"{kw} how={how}: {got}"
+
+
 @pytest.mark.parametrize("strategy", ["broadcast", "union"])
 def test_asof_interval_semantics(spark, frames, strategy):
-    left, right = frames
-    out = asof_join(
-        left, right, left_on="ts", right_on="start", end_col="end", strategy=strategy
-    )
-    got = {r.id: r.price for r in out.collect()}
-    assert got == EXPECTED, f"{strategy}: {got}"
+    _check_interval_semantics(*frames, strategy=strategy)
 
 
-@pytest.mark.parametrize(
-    "disjoint,bucket",
-    [
-        (d, b)
-        for d in (False, True)
-        for b in (None, "month", "quarter")
-        # (False, None) IS the generic baseline, covered just above —
-        # excluded from the grid rather than runtime-skipped so the suite
-        # reports no perpetual skip.
-        if not (d is False and b is None)
-    ],
-)
-def test_asof_fast_paths_same_semantics(spark, frames, disjoint, bucket):
-    """disjoint (window-free) and bucket (hash-join) paths must be
-    semantically identical to the generic range join — incl. open
-    intervals, pre-interval rows, and rows far past the last bucket."""
-    left, right = frames
-    out = asof_join(
-        left,
-        right,
-        left_on="ts",
-        right_on="start",
-        end_col="end",
-        disjoint=disjoint,
-        bucket=bucket,
-    )
-    got = {r.id: r.price for r in out.collect()}
-    assert got == EXPECTED, f"disjoint={disjoint} bucket={bucket}: {got}"
+@pytest.mark.parametrize("bucket", ["month", "quarter"])
+def test_asof_fast_paths_same_semantics(spark, frames, bucket):
+    """The bucket (hash-join, window-free) path must be semantically
+    identical to the generic range join on non-overlapping intervals —
+    incl. open intervals, pre-interval rows, and rows far past the last
+    bucket."""
+    _check_interval_semantics(*frames, bucket=bucket)
 
 
-def test_asof_bucketed_dedup_overlapping_intervals(spark):
-    """Without disjoint, the bucketed hash path must still pick the LATEST
-    matching interval when intervals overlap (dedup window preserved)."""
+@pytest.mark.parametrize("strategy", ["broadcast", "union"])
+def test_asof_overlapping_intervals_pick_latest_start(spark, strategy):
+    """With OVERLAPPING intervals both generic strategies pick the LATEST
+    matching start (the dedup window / the carry), not the older cover."""
     left = spark.createDataFrame([(1, D("2024-01-20"))], ["id", "ts"])
     right = spark.createDataFrame(
         [
@@ -99,14 +87,13 @@ def test_asof_bucketed_dedup_overlapping_intervals(spark):
         ],
         ["start", "end", "price"],
     )
-    for kwargs in ({}, {"bucket": "month"}):
-        got = {
-            r.id: r.price
-            for r in asof_join(
-                left, right, "ts", "start", end_col="end", **kwargs
-            ).collect()
-        }
-        assert got == {1: 2.0}, kwargs
+    got = {
+        r.id: r.price
+        for r in asof_join(
+            left, right, "ts", "start", end_col="end", strategy=strategy
+        ).collect()
+    }
+    assert got == {1: 2.0}, strategy
 
 
 def test_asof_tied_start_deterministic(spark):
@@ -176,15 +163,6 @@ def test_asof_by_keys(spark):
             ).collect()
         }
         assert got == {1: 5.0, 2: 8.0}, strategy
-
-
-def test_interval_join_inner_drops_unmatched(spark, frames):
-    left, right = frames
-    out = interval_join(
-        left, right, left_time="ts", start_col="start", end_col="end", how="inner"
-    )
-    got = {r.id: r.price for r in out.collect()}
-    assert got == {k: v for k, v in EXPECTED.items() if v is not None}
 
 
 @pytest.mark.parametrize("strategy", ["broadcast", "union"])
@@ -319,8 +297,15 @@ def test_asof_forward_matches_pandas(spark):
         assert got == want, strategy
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "union"])
-def test_asof_nearest(spark, strategy):
+# The two nearest strategies: broadcast (which requires bucket=) and union.
+NEAREST_STRATEGIES = [{"strategy": "broadcast", "bucket": "day"}, {"strategy": "union"}]
+nearest_strategies = pytest.mark.parametrize(
+    "kw", NEAREST_STRATEGIES, ids=["broadcast", "union"]
+)
+
+
+@nearest_strategies
+def test_asof_nearest(spark, kw):
     """direction='nearest': smallest absolute gap wins, ties go backward,
     symmetric tolerance nulls far matches."""
     left = spark.createDataFrame(
@@ -334,21 +319,21 @@ def test_asof_nearest(spark, strategy):
     got = {
         r.id: r.v
         for r in asof_join(
-            left, right, "ts", "ts2", strategy=strategy, direction="nearest"
+            left, right, "ts", "ts2", **kw, direction="nearest"
         ).collect()
     }
     # id=1: 5d back vs 12d fwd -> 10; id=2: 13d back vs 4d fwd -> 20;
     # id=3: exact tie at 0 gap -> backward (equal) row 20; id=4: only fwd
-    assert got == {1: 10.0, 2: 20.0, 3: 20.0, 4: 10.0}, f"{strategy}: {got}"
+    assert got == {1: 10.0, 2: 20.0, 3: 20.0, 4: 10.0}, f"{kw}: {got}"
 
     tol = {
         r.id: r.v
         for r in asof_join(
-            left, right, "ts", "ts2", strategy=strategy, direction="nearest",
+            left, right, "ts", "ts2", **kw, direction="nearest",
             tolerance="30 DAYS",
         ).collect()
     }
-    assert tol == {1: 10.0, 2: 20.0, 3: 20.0, 4: None}, f"{strategy}: {tol}"
+    assert tol == {1: 10.0, 2: 20.0, 3: 20.0, 4: None}, f"{kw}: {tol}"
 
 
 def test_asof_nearest_matches_pandas(spark):
@@ -378,18 +363,18 @@ def test_asof_nearest_matches_pandas(spark):
 
     ldf = spark.createDataFrame(lpdf[["id", "ts"]])
     rdf = spark.createDataFrame(rpdf[["ts2", "v"]])
-    for strategy in ("broadcast", "union"):
+    for kw in NEAREST_STRATEGIES:
         got = {
             r.id: r.v
             for r in asof_join(
-                ldf, rdf, "ts", "ts2", strategy=strategy, direction="nearest"
+                ldf, rdf, "ts", "ts2", **kw, direction="nearest"
             ).collect()
         }
-        assert got == want, strategy
+        assert got == want, kw
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "union"])
-def test_asof_nearest_null_left_ts(spark, strategy):
+@nearest_strategies
+def test_asof_nearest_null_left_ts(spark, kw):
     """A NULL left event time must NOT fabricate a match (ADVICE r5 high):
     nearest is null-rejecting like backward/forward — pandas merge_asof
     refuses unsortable keys outright, so NULL ts ⇒ NULL right columns."""
@@ -410,24 +395,24 @@ def test_asof_nearest_null_left_ts(spark, strategy):
     got = {
         r.id: (r.v, r.ts2)
         for r in asof_join(
-            left, right, "ts", "ts2", strategy=strategy, direction="nearest"
+            left, right, "ts", "ts2", **kw, direction="nearest"
         ).collect()
     }
     assert got == {
         1: (10.0, D("2024-01-15")),
         2: (None, None),
         3: (20.0, D("2024-02-01")),
-    }, f"{strategy}: {got}"
+    }, f"{kw}: {got}"
     # inner drops the NULL-ts row entirely
     inner = asof_join(
-        left, right, "ts", "ts2", how="inner", strategy=strategy,
+        left, right, "ts", "ts2", how="inner", **kw,
         direction="nearest",
     )
     assert {r.id for r in inner.collect()} == {1, 3}
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "union"])
-def test_asof_nearest_date_axis(spark, strategy):
+@nearest_strategies
+def test_asof_nearest_date_axis(spark, kw):
     """DATE-typed axes on BOTH sides must work (ADVICE r5 medium): the gap
     goes through cast('timestamp') → unix_micros, never CAST(DATE AS
     DOUBLE) which Spark forbids."""
@@ -442,15 +427,15 @@ def test_asof_nearest_date_axis(spark, strategy):
     got = {
         r.id: r.v
         for r in asof_join(
-            left, right, "ts", "ts2", strategy=strategy, direction="nearest"
+            left, right, "ts", "ts2", **kw, direction="nearest"
         ).collect()
     }
     # id=1: 5d back vs 12d fwd; id=2: 14d back vs 3d fwd; id=3: 0-gap tie
-    assert got == {1: 10.0, 2: 20.0, 3: 20.0}, f"{strategy}: {got}"
+    assert got == {1: 10.0, 2: 20.0, 3: 20.0}, f"{kw}: {got}"
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "union"])
-def test_asof_nearest_null_right_on(spark, strategy):
+@nearest_strategies
+def test_asof_nearest_null_right_on(spark, kw):
     """Right rows with NULL right_on are never candidates (ADVICE r5 low):
     a left row whose only by-key partner has NULL right_on comes back fully
     NULL, not a half-match with payload but no timestamp."""
@@ -466,11 +451,11 @@ def test_asof_nearest_null_right_on(spark, strategy):
     )
     right = spark.createDataFrame([(1, None, 99.0)], rschema)
     rows = asof_join(
-        left, right, "ts", "ts2", by=["k"], strategy=strategy,
+        left, right, "ts", "ts2", by=["k"], **kw,
         direction="nearest",
     ).collect()
     assert len(rows) == 1
-    assert rows[0].v is None and rows[0].ts2 is None, f"{strategy}: {rows}"
+    assert rows[0].v is None and rows[0].ts2 is None, f"{kw}: {rows}"
 
 
 def test_asof_nearest_exact_microsecond_tie(spark):
@@ -483,21 +468,21 @@ def test_asof_nearest_exact_microsecond_tie(spark):
     right = spark.createDataFrame(
         [(base - us, 1.0), (base + us, 2.0)], ["ts2", "v"]
     )
-    for strategy in ("broadcast", "union"):
+    for kw in NEAREST_STRATEGIES:
         got = {
             r.id: r.v
             for r in asof_join(
-                left, right, "ts", "ts2", strategy=strategy,
+                left, right, "ts", "ts2", **kw,
                 direction="nearest",
             ).collect()
         }
-        assert got == {1: 1.0}, f"{strategy}: {got}"
+        assert got == {1: 1.0}, f"{kw}: {got}"
 
 
 def test_asof_nearest_bucketed_matches_broadcast(spark):
-    """bucket= for direction='nearest' (the hash-join strategy completing
-    backward's strategy matrix): the midpoint-cover reduction must agree
-    with the plain broadcast strategy on a randomized by-keyed fixture."""
+    """The broadcast strategy's bucket= form for direction='nearest' (the
+    hash join over midpoint covers) must agree with the union strategy,
+    which is pinned to pandas, on a randomized by-keyed fixture."""
     import random
 
     rng = random.Random(7)
@@ -517,18 +502,17 @@ def test_asof_nearest_bucketed_matches_broadcast(spark):
         return {
             r.id: (r.v, r.ts2)
             for r in asof_join(
-                left, right, "ts", "ts2", by=["k"], direction="nearest",
-                strategy="broadcast", **kw,
+                left, right, "ts", "ts2", by=["k"], direction="nearest", **kw
             ).collect()
         }
 
-    want = run()
-    assert run(bucket="day") == want
-    assert run(bucket="month") == want
+    want = run(strategy="union")
+    assert run(strategy="broadcast", bucket="day") == want
+    assert run(strategy="broadcast", bucket="month") == want
 
     # Explicit (lower, upper) horizon — same contract shape as backward's.
     bounds = left.select(F.min("ts"), F.max("ts"))
-    assert run(bucket="day", horizon=bounds) == want
+    assert run(strategy="broadcast", bucket="day", horizon=bounds) == want
 
     # Plan shape: the PROBE join is a codegen'd BroadcastHashJoin. (The
     # only nested-loop join allowed is the 1-row bounds crossJoin inside
@@ -634,7 +618,8 @@ def test_asof_union_date_left_keeps_date_type(spark, payload):
     """DATE left axis + TIMESTAMP right axis (ADVICE r6 low): the union
     strategies rebuild left_on from the widened __asof_ts column, which
     silently changed its type to timestamp vs the broadcast strategy on the
-    same inputs. Both union paths (keys-only and struct) must restore it."""
+    same inputs. The union strategy must restore it with and without a
+    right payload."""
     DD = dt.date.fromisoformat
     left = spark.createDataFrame(
         [(1, 1, DD("2024-01-20")), (2, 1, DD("2024-01-01"))], ["id", "k", "d"]
@@ -660,8 +645,7 @@ def test_asof_expired_latest_masks_older_cover(spark):
     """Reference semantics with OVERLAPPING intervals (review r8): the
     LATEST-started interval wins even when expired — it masks an older
     still-covering one, exactly like pandas merge_asof + end post-filter.
-    broadcast and union must agree; the bucketed path's documented
-    deviation (latest COVERING interval) is pinned as such."""
+    broadcast and union must agree."""
     left = spark.createDataFrame([(1, D("2024-10-01"))], ["id", "ts"])
     right = spark.createDataFrame(
         [
@@ -696,11 +680,3 @@ def test_asof_expired_latest_masks_older_cover(spark):
         ).count()
         == 0
     )
-    # the bucketed deviation: covering interval served (documented)
-    got_b = {
-        r.id: r.price
-        for r in asof_join(
-            left, right, "ts", "start", end_col="end", bucket="month"
-        ).collect()
-    }
-    assert got_b == {1: 1.0}

@@ -149,7 +149,7 @@ def test_scd2_merge_golden(spark):
     assert {tuple(r) for r in again.collect()} == want
     # the output feeds the engine's as-of join directly — INCLUDING a
     # fact dated exactly on the change day, which must match only the
-    # newly-opened row even on the dedup-free disjoint fast path
+    # newly-opened row even on the dedup-free bucketed fast path
     from data_warehouse_product_mix_clustering_spark.operators.asof_join import asof_join
 
     facts = spark.createDataFrame(
@@ -158,7 +158,7 @@ def test_scd2_merge_golden(spark):
     )
     matched = asof_join(
         facts, merged, left_on="d", right_on="StartDate",
-        by=["pid"], end_col="EndDate", disjoint=True,
+        by=["pid"], end_col="EndDate", bucket="day",
     )
     assert sorted((r.d, r.color) for r in matched.collect()) == [
         (D("2024-03-01"), "red"),

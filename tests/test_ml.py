@@ -271,3 +271,24 @@ def test_train_softmax_rejects_null_labels(spark):
         train_softmax(feats, labels, n_iter=1)
     w, _ = train_softmax(feats, labels.fillna("en", ["y"]), n_iter=1)
     assert sorted(w) == ["de", "en"]
+
+
+def test_train_logreg_rejects_null_labels(spark):
+    """A NULL binary label fails loudly. The gradient sum skips its
+    residual while the doc count still counts its row, which would
+    silently dilute every update."""
+    import pytest
+
+    from data_warehouse_product_mix_clustering_spark.ml.logreg import BIAS_KEY, train_logreg
+
+    feats = spark.createDataFrame(
+        [(1, "b0", 1.0), (2, "b0", 1.0), (3, "b1", 1.0)],
+        "__id long, bucket string, x double",
+    )
+    labels = spark.createDataFrame(
+        [(1, 1.0), (2, None), (3, 0.0)], "__id long, y double"
+    )
+    with pytest.raises(ValueError, match="1 of 3 label rows have a NULL label"):
+        train_logreg(feats, labels, n_iter=1)
+    w, _ = train_logreg(feats, labels.fillna(0.0, ["y"]), n_iter=1)
+    assert sorted(w) == sorted(["b0", "b1", BIAS_KEY])

@@ -312,8 +312,10 @@ def test_operator_api_contracts(spark):
     df = spark.createDataFrame([(1, 2)], ["a", "b"])
     with pytest.raises(ValueError, match="unknown asof strategy"):
         asof_join(df, df, "a", "b", strategy="nope")
-    with pytest.raises(ValueError, match="disjoint=True requires end_col"):
-        asof_join(df, df, "a", "b", disjoint=True)
+    with pytest.raises(ValueError, match="bucket= requires end_col"):
+        asof_join(df, df, "a", "b", bucket="day")
+    with pytest.raises(ValueError, match="strategy='broadcast' requires bucket="):
+        asof_join(df, df, "a", "b", direction="nearest")
     with pytest.raises(ValueError, match="bucket must be one of"):
         asof_join(df, df, "a", "b", end_col="b", bucket="fortnight")
     with pytest.raises(ValueError, match="sum to 1"):

@@ -290,10 +290,12 @@ def test_no_cache_outside_the_store():
 def test_every_package_definition_is_referenced():
     """No top-level function or class in the package is dead: each one
     is named somewhere outside its own body — in the package, tests/,
-    perfbench/, scripts/ or bench.py. A ``@register`` query counts as
-    used (the decorator hands it to ``all_queries()``); dunder module
-    hooks are exempt. Matching is by name, so a name shared with a live
-    definition elsewhere hides a dead one; the scan errs toward passing."""
+    perfbench/, scripts/ or bench.py. An import or re-export alone is
+    not a use: a name must be read (``Name``/``Attribute``) somewhere. A
+    ``@register`` query counts as used (the decorator hands it to
+    ``all_queries()``); dunder module hooks are exempt. Matching is by
+    name, so a name shared with a live definition elsewhere hides a dead
+    one; the scan errs toward passing."""
     import ast
     import pathlib
 
@@ -320,8 +322,6 @@ def test_every_package_definition_is_referenced():
                     name = n.id
                 elif isinstance(n, ast.Attribute):
                     name = n.attr
-                elif isinstance(n, ast.alias):
-                    name = n.name.rsplit(".", 1)[-1]
                 else:
                     continue
                 users.setdefault(name, set()).add((path, top.lineno))
