@@ -2,13 +2,11 @@
 
 The reference clusters with sklearn ``KMeans(n_init=10)`` (k-means++ init,
 Lloyd iterations, keep the lowest-inertia restart) on an in-memory pandas
-matrix (reference src/pipelines/clustering.py:125-133). For matrices that
-fit on the driver, replicating that shape directly in vectorized NumPy is
-both closer to the reference's semantics and orders of magnitude faster
-than iterative MLlib jobs, whose per-iteration cost at dimension-table
-sizes is pure scheduler latency, not compute. MLlib k-means‖ remains the
-distributed path above ``DRIVER_ROWS_CAP`` (see ml/pipelines.py) — that is
-the 100 TB story; this is the dimension-sized fast path.
+matrix (reference src/pipelines/clustering.py:125-133). The clustered
+matrices are dimension-sized, so ml/pipelines.py collects them and fits
+here: the reference's algorithm in vectorized NumPy, with no
+per-iteration Spark jobs (whose cost at these sizes is scheduler
+latency, not compute). Inputs above ``DRIVER_ROWS_CAP`` rows are refused.
 
 Everything here is deterministic: seeded ``RandomState`` per restart,
 exact inertia comparison with earliest-index tie-break.
@@ -18,10 +16,9 @@ from __future__ import annotations
 
 import numpy as np
 
-# Above this row count the caller should use the distributed MLlib path.
-# 1M rows x 8 float64 features is ~64 MB on the driver — comfortable; the
-# cap is deliberately conservative so the driver never becomes the scale
-# bottleneck.
+# ml/pipelines.py refuses (ValueError) a matrix above this row count; no
+# other clustering path exists. 1M rows x 8 float64 features is ~64 MB on
+# the driver; the largest clustered matrix on the test data is 20,000 rows.
 DRIVER_ROWS_CAP = 1_000_000
 
 
@@ -136,15 +133,3 @@ def kmeans_fit(
             best = (inertia, i, labels, fitted)
     assert best is not None
     return best[2], best[3]
-
-
-def kmeans_fit_predict(
-    X: np.ndarray,
-    k: int,
-    seed: int,
-    n_init: int = 10,
-    max_iter: int = 300,
-    tol: float = 1e-4,
-) -> np.ndarray:
-    """Labels-only convenience wrapper over ``kmeans_fit``."""
-    return kmeans_fit(X, k, seed, n_init=n_init, max_iter=max_iter, tol=tol)[0]

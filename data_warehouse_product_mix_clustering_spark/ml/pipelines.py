@@ -1,218 +1,99 @@
-"""MLlib clustering pipelines (reference §2.8).
+"""Clustering pipelines (reference §2.8): standardize → KMeans → evaluate.
 
 Mirrors the reference's sklearn stage — StandardScaler → KMeans(k=4,
 seed=42) over the 8-feature product matrix (reference
-src/pipelines/clustering.py:125-133) — as a distributed MLlib Pipeline:
-VectorAssembler → StandardScaler(withMean, withStd) → KMeans.
+src/pipelines/clustering.py:125-133). The matrix is dimension-sized, so
+every fit collects it to the driver and runs the seeded, sklearn-shaped
+k-means++ of ``kmeans_np`` (``n_init`` restarts, lowest inertia wins);
+the labels are broadcast-joined back onto the plan. A matrix above
+``kmeans_np.DRIVER_ROWS_CAP`` rows is refused, not clustered by other
+semantics.
 
-Parity caveat (SURVEY §4.3.3): sklearn's k-means++ init ≠ MLlib's
-k-means‖, so label-for-label equality with the reference is undefined even
-at the same seed. Correctness is partition quality (silhouette, stable
-same-seed partitions), which the unit tests assert.
+Correctness is partition quality (silhouette, identical same-seed
+partitions), which the unit tests and the audit queries assert.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+import numpy as np
+import pandas as pd
 from pyspark.ml import Pipeline
-from pyspark.ml.clustering import KMeans
 from pyspark.ml.evaluation import ClusteringEvaluator
 from pyspark.ml.feature import StandardScaler, VectorAssembler
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_K = 4  # reference src/pipelines/clustering.py:14
-DEFAULT_SEED = 42  # reference src/pipelines/clustering.py:14
+from data_warehouse_product_mix_clustering_spark.ml import kmeans_np
+
+SEED = 42  # reference src/pipelines/clustering.py:14
 
 
-def _attach_labels(
-    df: DataFrame, ids, labels, order_col: str, cluster_col: str
+def _fit_labels(
+    df: DataFrame,
+    cols: list[str],
+    order_col: str,
+    k: int,
+    to_matrix: Callable[[pd.DataFrame], np.ndarray],
 ) -> DataFrame:
-    """Broadcast-join driver-computed (id, label) back onto the plan."""
-    import pandas as pd
+    """Fit k-means on the driver and append an int ``cluster`` column.
 
-    spark = df.sparkSession
-    lab = spark.createDataFrame(
-        pd.DataFrame({order_col: ids, cluster_col: labels.astype("int32")})
+    localCheckpoint materializes the input once and truncates lineage, so
+    neither the size probe, the collect, nor the returned joined plan
+    recomputes the upstream multi-join. The collected rows are sorted on
+    ``order_col`` driver-side (pandas, no Spark sort shuffle): any total
+    order works, it only has to be the SAME order every run for the seeded
+    fit to be reproducible.
+    """
+    df = df.localCheckpoint(eager=True)
+    n, cap = df.count(), kmeans_np.DRIVER_ROWS_CAP
+    if n > cap:
+        raise ValueError(
+            f"k-means input has {n} rows, above kmeans_np.DRIVER_ROWS_CAP={cap}"
+        )
+    pdf = (
+        df.select(order_col, *cols)
+        .toPandas()
+        .sort_values(order_col, ignore_index=True)
+    )
+    labels, _ = kmeans_np.kmeans_fit(to_matrix(pdf[cols]), k=k, seed=SEED, n_init=10)
+    lab = df.sparkSession.createDataFrame(
+        pd.DataFrame({order_col: pdf[order_col], "cluster": labels.astype("int32")})
     )
     return df.join(F.broadcast(lab), order_col)
 
 
+def _standardized(pdf: pd.DataFrame) -> np.ndarray:
+    X = pdf.to_numpy(dtype=float)
+    mu, sd = X.mean(0), X.std(0)  # ddof=0 — sklearn StandardScaler
+    sd[sd == 0] = 1.0
+    return (X - mu) / sd
+
+
 def kmeans_assign(
-    df: DataFrame,
-    feature_cols: list[str],
-    k: int = DEFAULT_K,
-    seed: int = DEFAULT_SEED,
-    cluster_col: str = "cluster",
-    order_col: str | None = None,
-    n_init: int = 10,
-    probe_iter: int = 4,
+    df: DataFrame, feature_cols: list[str], k: int = 4, *, order_col: str
 ) -> DataFrame:
-    """Standardize ``feature_cols`` and append a KMeans cluster id.
+    """Standardize ``feature_cols`` and append a KMeans ``cluster`` id.
 
-    ``order_col`` (an id column) makes the fit REPRODUCIBLE: k-means‖ init
-    samples rows in partition-internal order, and shuffle-block fetch order
-    is nondeterministic — without a deterministic repartition+sort, two
-    same-seed fits can land in different local optima. With it, same seed +
-    same data ⇒ same partition.
-
-    The upstream plan (often a multi-join feature matrix) would otherwise
-    re-execute once per fit pass (scaler fit + each KMeans step + the final
-    transform), so the input is cached here and materialized once; the
-    cluster output is tiny (id + features + label), so it is materialized
-    off the cache and the cache released before returning.
-
-    Two physical strategies behind one contract:
-    - matrix fits on the driver (≤ kmeans_np.DRIVER_ROWS_CAP — the usual
-      case for a dimension-sized feature matrix): standardize + cluster in
-      vectorized NumPy, sklearn-shaped (k-means++ init, ``n_init`` full
-      restarts, lowest inertia wins) — the reference's exact algorithm
-      family, with zero per-iteration Spark jobs; labels broadcast-joined
-      back onto the plan.
-    - larger: distributed MLlib k-means‖ with probe-then-refine restarts —
-      the 100 TB path.
+    ``order_col`` (an id column) fixes the row order the seeded fit sees,
+    so same data ⇒ same partition.
     """
-    if order_col is not None:
-        from data_warehouse_product_mix_clustering_spark.ml.kmeans_np import (
-            DRIVER_ROWS_CAP,
-            kmeans_fit_predict,
-        )
-
-        # localCheckpoint materializes the feature matrix once and truncates
-        # lineage, so neither the size probe, the collect, nor the returned
-        # joined plan recomputes the upstream multi-join.
-        df = df.localCheckpoint(eager=True)
-        if df.count() <= DRIVER_ROWS_CAP:
-            # Sort driver-side (pandas) rather than paying a Spark sort
-            # shuffle: any total order works, it only has to be the SAME
-            # order every run for the seeded fit to be reproducible.
-            pdf = (
-                df.select(order_col, *feature_cols)
-                .toPandas()
-                .sort_values(order_col, ignore_index=True)
-            )
-            X = pdf[feature_cols].to_numpy(dtype=float)
-            mu, sd = X.mean(0), X.std(0)  # ddof=0 — sklearn StandardScaler
-            sd[sd == 0] = 1.0
-            labels = kmeans_fit_predict(
-                (X - mu) / sd, k=k, seed=seed, n_init=n_init
-            )
-            return _attach_labels(df, pdf[order_col], labels, order_col, cluster_col)
-    if order_col is not None:
-        # The feature matrix is orders of magnitude smaller than the fact
-        # data it came from; a handful of partitions keeps the many tiny
-        # per-iteration KMeans jobs from being dominated by task overhead.
-        df = df.repartition(4, F.col(order_col)).sortWithinPartitions(order_col)
-    df = df.cache()
-    try:
-        prep = Pipeline(
-            stages=[
-                VectorAssembler(inputCols=feature_cols, outputCol="__feat"),
-                StandardScaler(
-                    inputCol="__feat", outputCol="__scaled", withMean=True, withStd=True
-                ),
-            ]
-        ).fit(df)
-        scaled = prep.transform(df).cache()
-        # sklearn restarts k-means n_init(=10) times and keeps the lowest-
-        # inertia run; MLlib does ONE k-means‖ init, which can land in a
-        # visibly bad local optimum. Restarting with FULL convergence per
-        # seed costs n_init × maxIter Spark jobs — at small matrix sizes
-        # that is pure scheduling overhead. Probe-then-refine instead:
-        # every derived seed runs only ``probe_iter`` iterations (enough to
-        # expose a bad init — inertia ranking stabilizes within a few
-        # steps), then the winning seed alone is fit to full convergence.
-        # Probes run on concurrent driver threads: each probe is a chain of
-        # tiny jobs whose wall-clock is scheduling latency, not compute, so
-        # overlapping them hides that latency. Selection stays
-        # deterministic — all costs are collected, then compared exactly,
-        # ties keeping the earliest seed.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def probe(i: int) -> float:
-            m = KMeans(
-                featuresCol="__scaled",
-                predictionCol=cluster_col,
-                k=k,
-                seed=seed + i,
-                maxIter=probe_iter,
-            ).fit(scaled)
-            return m.summary.trainingCost
-
-        with ThreadPoolExecutor(max_workers=n_init) as pool:
-            costs = list(pool.map(probe, range(n_init)))
-        best_i = min(range(n_init), key=lambda i: (costs[i], i))
-        final = KMeans(
-            featuresCol="__scaled", predictionCol=cluster_col, k=k, seed=seed + best_i
-        ).fit(scaled)
-        # localCheckpoint materializes the (small) assignment output on the
-        # executors and truncates lineage, so the cached input can be freed
-        # without the returned plan recomputing the feature matrix.
-        out = (
-            final
-            .transform(scaled)
-            .drop("__feat", "__scaled")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        scaled.unpersist()
-        df.unpersist()
-    return out
+    return _fit_labels(df, feature_cols, order_col, k, _standardized)
 
 
 def assign_vectors(
-    df: DataFrame,
-    vec_col: str,
-    k: int,
-    seed: int = DEFAULT_SEED,
-    cluster_col: str = "cluster",
-    order_col: str | None = None,
+    df: DataFrame, vec_col: str, k: int, *, order_col: str
 ) -> DataFrame:
-    """KMeans over an ``array<float>`` embedding column (M6 shape).
-
-    array_to_vector is a JVM expression — no Python per row. ``order_col``
-    reproducibility semantics and the driver-side NumPy fast path as in
-    ``kmeans_assign`` (embedding matrices at dimension-table size cluster
-    in milliseconds driver-side; MLlib k-means‖ is the above-cap path).
-    """
-    from pyspark.ml.functions import array_to_vector
-
-    if order_col is not None:
-        import numpy as np
-
-        from data_warehouse_product_mix_clustering_spark.ml.kmeans_np import (
-            DRIVER_ROWS_CAP,
-            kmeans_fit_predict,
-        )
-
-        df = df.localCheckpoint(eager=True)
-        if df.count() <= DRIVER_ROWS_CAP:
-            pdf = (
-                df.select(order_col, vec_col)
-                .toPandas()
-                .sort_values(order_col, ignore_index=True)
-            )
-            X = np.stack(pdf[vec_col].to_numpy()).astype(float)
-            labels = kmeans_fit_predict(X, k=k, seed=seed, n_init=10)
-            return _attach_labels(df, pdf[order_col], labels, order_col, cluster_col)
-    if order_col is not None:
-        # The feature matrix is orders of magnitude smaller than the fact
-        # data it came from; a handful of partitions keeps the many tiny
-        # per-iteration KMeans jobs from being dominated by task overhead.
-        df = df.repartition(4, F.col(order_col)).sortWithinPartitions(order_col)
-    withv = df.withColumn("__vec", array_to_vector(F.col(vec_col).cast("array<double>")))
-    withv = withv.cache()
-    try:
-        km = KMeans(featuresCol="__vec", predictionCol=cluster_col, k=k, seed=seed)
-        model = km.fit(withv)
-        out = model.transform(withv).drop("__vec").localCheckpoint(eager=True)
-    finally:
-        withv.unpersist()
-    return out
+    """KMeans over an ``array<float>`` embedding column (M6 shape),
+    unscaled; otherwise as ``kmeans_assign``."""
+    return _fit_labels(
+        df, [vec_col], order_col, k,
+        lambda pdf: np.stack(pdf[vec_col].to_numpy()).astype(float),
+    )
 
 
-def silhouette(
-    df: DataFrame, feature_cols: list[str], cluster_col: str = "cluster"
-) -> float:
+def silhouette(df: DataFrame, feature_cols: list[str]) -> float:
     """Mean silhouette (squared euclidean) of an assigned clustering (M8).
 
     Evaluated in the SAME standardized space the clustering ran in — raw
@@ -229,6 +110,6 @@ def silhouette(
     )
     withv = pipe.fit(df).transform(df)
     ev = ClusteringEvaluator(
-        featuresCol="__scaled", predictionCol=cluster_col, metricName="silhouette"
+        featuresCol="__scaled", predictionCol="cluster", metricName="silhouette"
     )
     return float(ev.evaluate(withv))

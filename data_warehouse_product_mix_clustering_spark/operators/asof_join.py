@@ -116,6 +116,10 @@ def asof_join(
     by = by or []
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward|forward|nearest: {direction}")
+    if horizon is not None and bucket is None:
+        raise ValueError("horizon= applies to the bucketed strategy only (needs bucket=)")
+    if strategy == "union" and bucket is not None:
+        raise ValueError("bucket= applies to the broadcast strategy only")
     if direction != "backward":
         # Interval semantics are inherently backward (an interval CONTAINS
         # the event time); forward/nearest are plain as-of joins. Nearest
@@ -259,8 +263,6 @@ def _asof_nearest(
             )
         out = _nearest_bucketed(left, right, left_on, right_on, by, bucket, horizon)
     elif strategy == "union":
-        if bucket is not None:
-            raise ValueError("bucket= applies to the broadcast strategy only")
         out = _nearest_union(left, right, left_on, right_on, by)
     else:
         raise ValueError(f"unknown asof strategy: {strategy}")

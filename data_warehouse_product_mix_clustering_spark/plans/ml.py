@@ -1,10 +1,10 @@
 """ML-stage queries (reference §2.8: scale → cluster → profile).
 
 ``features_zscore`` is the StandardScaler math as pure SQL (oracle-checked,
-population std like sklearn's default). The KMeans stages are MLlib
-pipelines — algorithmically different init than the reference's sklearn
-(SURVEY §4.3.3), so they are rows-only checks here with partition-quality
-assertions in unit tests.
+population std like sklearn's default). The KMeans stages fit a seeded,
+sklearn-shaped k-means++ on the driver (``ml/pipelines.py``); their labels
+are model output, so they are rows-only checks here with partition-quality
+assertions in unit tests and audit queries.
 """
 
 from __future__ import annotations
@@ -93,9 +93,10 @@ def invalidate_cluster_cache(sf_dir: str | None = None) -> None:
 def product_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's production clustering: 8 features → scale → KMeans.
 
-    Reference src/pipelines/clustering.py:125-136 (k=4, seed=42). MLlib
-    k-means‖ init ⇒ partitions, not labels, are the contract; rows-only
-    driver check + silhouette/determinism unit tests.
+    Reference src/pipelines/clustering.py:125-136 (k=4, seed=42), fit
+    driver-side by ``kmeans_assign``. Partitions, not label numbers, are
+    the contract; rows-only driver check + silhouette/determinism unit
+    tests.
 
     The fitted assignment is cached per (session, sf_dir) — the engine-side
     equivalent of the reference caching its clustering result with
@@ -164,8 +165,9 @@ def cluster_trajectories(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMeans k=10 over the raw embedding vectors (M6 shape).
 
-    array_to_vector keeps the whole path JVM-side; the driver's rows-only
-    check covers schema/rows, unit tests cover determinism.
+    The vectors are collected and fit driver-side by ``assign_vectors``;
+    the driver's rows-only check covers schema/rows,
+    ``embedding_cluster_audit`` covers determinism.
     """
     emb = table(spark, "embeddings", sf_dir)
     return assign_vectors(emb, "embedding", k=10, order_col="vec_id").select(

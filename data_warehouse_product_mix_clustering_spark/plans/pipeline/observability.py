@@ -45,7 +45,8 @@ def topic_balanced_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     water-fill instead, ``source_budget_allocation``'s docstring).
     One row per kept doc: (doc_id, cluster, topic_rank).
 
-    Scale: the k-means fit is the existing MLlib path; ranking rides
+    Scale: the k-means fit is ``embedding_clusters``' driver-side fit
+    (capped at ``kmeans_np.DRIVER_ROWS_CAP`` vectors); ranking rides
     ``_interleave_rank`` (global distributed rank minus ≤k broadcast
     offsets — no per-cluster window funnels); the cap filter is a
     per-row comparison. Mirrors the reference's cluster-then-inspect

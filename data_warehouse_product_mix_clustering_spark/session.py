@@ -17,6 +17,7 @@ local[] test scale and 1000-executor cluster scale:
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -39,21 +40,40 @@ class no_adaptive_execution:
     keep AQE (the static planner sees unknown sizes and would pick a
     sort-merge join).
 
-    Use it as a ``with`` block. It flips a SESSION-GLOBAL conf, so it
-    assumes the session is used from one thread: a query planned on
-    another thread while the scope is open also runs without AQE, and
-    overlapping scopes on two threads can restore each other's value."""
+    Use it as a ``with`` block. It flips a SESSION-GLOBAL conf, so a
+    query planned on another thread while the scope is open would also
+    run without AQE, and overlapping scopes on two threads would restore
+    each other's value: entering it from a second thread while another
+    thread's scope is open raises ``RuntimeError``. Nesting on one thread
+    is fine."""
+
+    _lock = threading.Lock()
+    _owner: int | None = None  # thread ident holding the open scope(s)
+    _depth = 0
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
     def __enter__(self):
+        cls, me = no_adaptive_execution, threading.get_ident()
+        with cls._lock:
+            if cls._owner not in (None, me):
+                raise RuntimeError(
+                    "no_adaptive_execution is open on another thread; "
+                    "the AQE conf is session-global"
+                )
+            cls._owner, cls._depth = me, cls._depth + 1
         self.prev = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         return self
 
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.adaptive.enabled", self.prev)
+        cls = no_adaptive_execution
+        with cls._lock:
+            cls._depth -= 1
+            if cls._depth == 0:
+                cls._owner = None
 
 
 def get_spark(

@@ -1,8 +1,8 @@
 """ML-stage tests (SURVEY §5.3): partition quality and cross-run partition
-similarity — never exact label equality. Two sources of legitimate
-divergence: sklearn k-means++ vs MLlib k-means‖ init, and MLlib's
-tree-aggregated centroid sums whose FP combine order follows task
-completion order (borderline points may flip between same-seed runs)."""
+similarity — never exact label equality with the reference. The fit is
+the driver-side seeded k-means++ of ``ml/kmeans_np.py``, so label
+numbers depend on its init, not on sklearn's; partitions are the
+contract."""
 
 from __future__ import annotations
 
@@ -214,6 +214,25 @@ def test_star_invalidation_clears_cluster_cache(spark):
     invalidate_star_cache(SF_SMOKE)
     b = ml_plans.product_clusters(spark, SF_SMOKE)
     assert b is not a, "post-invalidate call must refit, not reuse"
+
+
+def test_kmeans_refuses_matrix_above_driver_cap(spark, monkeypatch):
+    """Above kmeans_np.DRIVER_ROWS_CAP rows the fit refuses the matrix,
+    naming the row count and the cap; it never switches to another
+    clustering algorithm with a different answer."""
+    import pytest
+
+    from data_warehouse_product_mix_clustering_spark.ml import kmeans_np
+    from data_warehouse_product_mix_clustering_spark.ml.pipelines import assign_vectors
+    from data_warehouse_product_mix_clustering_spark.sources.registry import table
+
+    monkeypatch.setattr(kmeans_np, "DRIVER_ROWS_CAP", 10)
+    feats = product_features(spark, SF_SMOKE)
+    with pytest.raises(ValueError, match=r"199 rows, above .*DRIVER_ROWS_CAP=10"):
+        kmeans_assign(feats, MATRIX_FEATURES, order_col="product_id")
+    emb = table(spark, "embeddings", SF_SMOKE)
+    with pytest.raises(ValueError, match=r"500 rows, above .*DRIVER_ROWS_CAP=10"):
+        assign_vectors(emb, "embedding", k=10, order_col="vec_id")
 
 
 def test_kmeans_np_empty_cluster_repair_no_nan():

@@ -3,6 +3,8 @@ LSH recall vs the exact baseline, hash determinism, edge-case inputs."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -318,6 +320,19 @@ def test_operator_api_contracts(spark):
         asof_join(df, df, "a", "b", direction="nearest")
     with pytest.raises(ValueError, match="bucket must be one of"):
         asof_join(df, df, "a", "b", end_col="b", bucket="fortnight")
+    # Backward direction: bucket=/horizon= only shape the bucketed
+    # broadcast strategy, so any other strategy refuses them.
+    ev = spark.createDataFrame([(1, dt.date(2024, 1, 5))], "id int, t date")
+    iv = spark.createDataFrame(
+        [(dt.date(2024, 1, 1), dt.date(2024, 1, 31), 1.0)], "s date, e date, v double"
+    )
+    hi = ev.select(F.max("t"))
+    with pytest.raises(ValueError, match="applies to the broadcast strategy only"):
+        asof_join(ev, iv, "t", "s", end_col="e", strategy="union", bucket="month")
+    with pytest.raises(ValueError, match="horizon= applies to the bucketed strategy"):
+        asof_join(ev, iv, "t", "s", end_col="e", strategy="union", horizon=hi)
+    with pytest.raises(ValueError, match="horizon= applies to the bucketed strategy"):
+        asof_join(ev, iv, "t", "s", end_col="e", horizon=hi)
     with pytest.raises(ValueError, match="sum to 1"):
         split_boundaries({"train": 0.5, "test": 0.1})
 

@@ -119,6 +119,74 @@ def test_aqe_splits_skewed_join(spark):
         _restore_confs(spark, prev)
 
 
+def test_no_adaptive_execution_refuses_second_thread(spark):
+    """The AQE-off scope flips a session-global conf: a second thread
+    entering it while another thread's scope is open must raise, while
+    nesting on one thread still works and restores the outer value.
+    Under contention from more threads than cores, at most one thread is
+    ever inside and the conf ends restored."""
+    import sys
+    import threading
+
+    from data_warehouse_product_mix_clustering_spark.session import no_adaptive_execution
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    entered, release = threading.Event(), threading.Event()
+
+    def hold():
+        with no_adaptive_execution(spark):
+            entered.set()
+            release.wait(60)
+
+    t = threading.Thread(target=hold)
+    t.start()
+    try:
+        assert entered.wait(60)
+        with pytest.raises(RuntimeError, match="another thread"):
+            with no_adaptive_execution(spark):
+                pass
+    finally:
+        release.set()
+        t.join(60)
+    assert spark.conf.get(key) == before
+
+    with no_adaptive_execution(spark):
+        with no_adaptive_execution(spark):
+            assert spark.conf.get(key) == "false"
+        assert spark.conf.get(key) == "false"
+    assert spark.conf.get(key) == before
+
+    count_lock, inside, peak, entered_n = threading.Lock(), [0], [0], [0]
+
+    def contend():
+        for _ in range(25):
+            try:
+                with no_adaptive_execution(spark):
+                    with count_lock:
+                        inside[0] += 1
+                        entered_n[0] += 1
+                        peak[0] = max(peak[0], inside[0])
+                    with count_lock:
+                        inside[0] -= 1
+            except RuntimeError:
+                pass
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        workers = [threading.Thread(target=contend) for _ in range(8)]
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(w.is_alive() for w in workers)
+    assert entered_n[0] > 0 and peak[0] == 1
+    assert spark.conf.get(key) == before
+
+
 def test_dynamic_partition_pruning(spark, tmp_path):
     """The partitioned-fact scale story: a join against a filtered dim must
     prune fact partitions at RUNTIME (dynamicpruning subquery on the scan),
