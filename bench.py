@@ -26,6 +26,7 @@ import os
 import sys
 import time
 
+from data_warehouse_product_mix_clustering_spark import state
 from data_warehouse_product_mix_clustering_spark.plans.registry import all_queries
 from data_warehouse_product_mix_clustering_spark.session import get_spark
 
@@ -90,7 +91,6 @@ def main() -> None:
 
     relations: dict[str, float] = {}
     if (SHARED_SHINGLES | POS_SHINGLES) & set(queries):
-        from data_warehouse_product_mix_clustering_spark import state
         from data_warehouse_product_mix_clustering_spark.plans.dedup import (
             shared_pos_shingles,
             shared_shingles,
@@ -116,6 +116,10 @@ def main() -> None:
             invalidate_cluster_cache(SF_DIR)
         best = float("inf")
         for i in range(3):
+            # A served query (state.served: cluster_summary) keeps its
+            # answer persisted after run 1; drop it so every run times the
+            # query's plan, not a cache read. A no-op for the others.
+            state.invalidate(SF_DIR, kind="result")
             t0 = time.perf_counter()
             _force(q.fn(spark, SF_DIR))
             dt = time.perf_counter() - t0

@@ -20,6 +20,10 @@ import numpy as np
 # other clustering path exists. 1M rows x 8 float64 features is ~64 MB on
 # the driver; the largest clustered matrix on the test data is 20,000 rows.
 DRIVER_ROWS_CAP = 1_000_000
+# Lloyd stopping rule, sklearn's defaults: at most MAX_ITER iterations per
+# restart, stop once the centers move by at most TOL (scaled as below).
+MAX_ITER = 300
+TOL = 1e-4
 
 
 def _pairwise_sq_dists(X: np.ndarray, centers: np.ndarray, x_sq: np.ndarray) -> np.ndarray:
@@ -54,7 +58,6 @@ def _lloyd(
     X: np.ndarray,
     centers: np.ndarray,
     x_sq: np.ndarray,
-    max_iter: int,
     tol_abs: float,
 ) -> tuple[np.ndarray, np.ndarray, float]:
     """Lloyd iterations with sklearn-style empty-cluster repair
@@ -64,7 +67,7 @@ def _lloyd(
     k = centers.shape[0]
     n = X.shape[0]
     labels = np.zeros(n, dtype=np.int64)
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         d2 = _pairwise_sq_dists(X, centers, x_sq)
         labels = d2.argmin(1)
         counts = np.bincount(labels, minlength=k)
@@ -107,12 +110,7 @@ def _lloyd(
 
 
 def kmeans_fit(
-    X: np.ndarray,
-    k: int,
-    seed: int,
-    n_init: int = 10,
-    max_iter: int = 300,
-    tol: float = 1e-4,
+    X: np.ndarray, k: int, seed: int, n_init: int = 10
 ) -> tuple[np.ndarray, np.ndarray]:
     """sklearn-shaped k-means returning (labels, centers).
 
@@ -123,12 +121,12 @@ def kmeans_fit(
     X = np.ascontiguousarray(X, dtype=np.float64)
     x_sq = (X**2).sum(1)
     # sklearn scales tol by the mean per-feature variance of the data.
-    tol_abs = tol * float(X.var(axis=0).mean())
+    tol_abs = TOL * float(X.var(axis=0).mean())
     best: tuple[float, int, np.ndarray, np.ndarray] | None = None
     for i in range(n_init):
         rng = np.random.RandomState(seed + i)
         centers = _kmeanspp_init(X, k, rng, x_sq)
-        labels, fitted, inertia = _lloyd(X, centers, x_sq, max_iter, tol_abs)
+        labels, fitted, inertia = _lloyd(X, centers, x_sq, tol_abs)
         if best is None or (inertia, i) < (best[0], best[1]):
             best = (inertia, i, labels, fitted)
     assert best is not None

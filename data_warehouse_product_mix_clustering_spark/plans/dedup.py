@@ -44,12 +44,6 @@ from data_warehouse_product_mix_clustering_spark.operators.dedup import (
 from data_warehouse_product_mix_clustering_spark.plans.registry import register
 from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
-def _unpersist_quietly(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-    except Exception:
-        pass  # session already stopped; nothing to release
-
 
 def _shared_relation(spark: SparkSession, sf_dir: str, variant, build) -> DataFrame:
     """Session persist of one derived-from-``documents`` relation, held in
@@ -72,7 +66,7 @@ def _shared_relation(spark: SparkSession, sf_dir: str, variant, build) -> DataFr
         os.path.join(sf_dir, "documents.parquet"),
         variant,
         lambda: build().persist(StorageLevel.MEMORY_AND_DISK),
-        release=_unpersist_quietly,
+        release=state.unpersist_quietly,
     )
 
 

@@ -85,8 +85,10 @@ def features_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def invalidate_cluster_cache(sf_dir: str | None = None) -> None:
-    """Drop cached fitted clusterings for one sf_dir (or all)."""
+    """Drop cached fitted clusterings for one sf_dir (or all), and the
+    served results, which may read them (``cluster_profile``)."""
     state.invalidate(sf_dir, kind="clusters")
+    state.invalidate(sf_dir, kind="result")
 
 
 @register("product_clusters", headline=True)
@@ -118,6 +120,7 @@ def product_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("cluster_profile")
+@state.served
 def cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster stats incl. median profit (A7 shape, dashboard parity).
 

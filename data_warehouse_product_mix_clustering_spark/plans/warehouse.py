@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_warehouse_product_mix_clustering_spark import state
 from data_warehouse_product_mix_clustering_spark.etl.star_schema import (
     build_star_schema,
     dim_category,
@@ -58,6 +59,7 @@ from data_warehouse_product_mix_clustering_spark.sources.registry import table
     """),
     headline=True,
 )
+@state.served
 def cluster_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left join + grouped agg with COUNT(DISTINCT) and COALESCE defaults.
 
@@ -122,6 +124,7 @@ def cluster_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY c.CategoryID, s.Type, s.Brand
     """),
 )
+@state.served
 def category_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-way dim join then (category, brand) rollup.
 
@@ -719,6 +722,7 @@ _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
         )
     ),
 )
+@state.served
 def pivot_category_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: category × order-priority count matrix with 0 fill.
 
@@ -1075,6 +1079,7 @@ def latest_order_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM dim_product GROUP BY Type
     """),
 )
+@state.served
 def category_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-distinct dropdown values + per-value cardinality (O4/O5, A6).
 

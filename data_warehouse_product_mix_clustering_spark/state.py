@@ -4,9 +4,11 @@ Every memo is an entry keyed ``(applicationId, kind, src, params)``:
 
 - ``kind`` names what was built: ``table`` (a resolved parquet scan),
   ``star`` (a star-schema builder's plan), ``clusters`` (the fitted
-  product clustering), ``shingles`` (a persisted shingle relation),
-  ``postings`` (an on-disk inverted index), ``merges`` (a trained BPE
-  merge table) or ``advice`` (a broadcast-advisor decision);
+  product clustering), ``result`` (the persisted answer of a registered
+  query that the dashboard serves, see ``served``), ``shingles`` (a
+  persisted shingle relation), ``postings`` (an on-disk inverted index),
+  ``merges`` (a trained BPE merge table) or ``advice`` (a
+  broadcast-advisor decision);
 - ``src`` is the path the value was built from: a table file, or the
   sf_dir for values built from several of its tables;
 - ``params`` tells apart values of one kind built from one ``src``.
@@ -30,18 +32,22 @@ entries built from ``{sf}/documents.parquet``.
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import threading
 from collections import OrderedDict
 from typing import Callable
 
-# Running every registered query at one sf_dir peaks at 23 live entries
-# (10 scans, 7 star plans, 2 shingle relations, one of each other kind),
-# so the bound holds five corpora.
+from py4j.protocol import Py4JError
+
+# Running every registered query at one sf_dir peaks at 28 live entries
+# (10 scans, 7 star plans, 5 served results, 2 shingle relations, one of
+# each other kind), so the bound holds four corpora.
 MAX_ENTRIES = 128
-# One corpus holds three entries that own storage (two persisted shingle
-# relations and one postings index directory).
-MAX_HELD = 8
+# One corpus holds eight entries that own storage (five served results,
+# two persisted shingle relations and one postings index directory), so
+# the bound holds two corpora before one's renders evict the other's.
+MAX_HELD = 16
 
 _entries: "OrderedDict[tuple, tuple[object, Callable | None]]" = OrderedDict()
 _lock = threading.Lock()
@@ -87,6 +93,38 @@ def cached(spark, kind: str, src: str, params, build: Callable, release: Callabl
                 _exit_hook = True
     _release(dropped)
     return value
+
+
+def unpersist_quietly(df) -> None:
+    """Release a persisted relation; a no-op once its session has
+    stopped (the exit hook runs after tests and scripts stop theirs)."""
+    try:
+        df.unpersist()
+    except Py4JError:
+        pass  # session already stopped; nothing to release
+
+
+def served(fn: Callable) -> Callable:
+    """Serve a ``(spark, sf_dir) -> DataFrame`` query from its persisted
+    answer, held as the ``result`` entry ``(sf_dir, fn.__name__)``.
+
+    The answer is the query's own plan, persisted on first use, so a
+    page that renders it again (or filters it) reads the cached relation
+    instead of re-deriving the fact. ``invalidate`` of a table file under
+    ``sf_dir`` drops it, like every entry built from ``sf_dir``."""
+
+    @functools.wraps(fn)
+    def wrapper(spark, sf_dir: str):
+        return cached(
+            spark,
+            "result",
+            sf_dir,
+            fn.__name__,
+            lambda: fn(spark, sf_dir).persist(),
+            release=unpersist_quietly,
+        )
+
+    return wrapper
 
 
 def _parts(path: str) -> list[str]:

@@ -927,6 +927,33 @@ def test_postings_index_removed_at_exit():
     assert not os.path.exists(index_dir)
 
 
+def test_served_result_released_after_session_stop():
+    """A served answer the store still holds when the interpreter exits,
+    after its session has stopped, is released without an error: the
+    exit hook's unpersist must not raise into the exit."""
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "from data_warehouse_product_mix_clustering_spark.session import get_spark\n"
+        "from data_warehouse_product_mix_clustering_spark.plans.warehouse import cluster_summary\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=2)\n"
+        f"df = cluster_summary(spark, {SF_SMOKE!r})\n"
+        "print(len(df.collect()) > 0, df.is_cached)\n"
+        "spark.stop()\n"
+    )
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": "1g"}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "True True"
+    assert "Traceback" not in out.stderr, out.stderr[-3000:]
+
+
 def test_ivf_indexed_search_prunes_to_probe_cells(spark, tmp_path):
     """Persisted-IVF search must show literal partition pruning on the
     cell column — the seek contract of build_ivf_index/search_ivf_index."""

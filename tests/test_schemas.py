@@ -16,6 +16,7 @@ from data_warehouse_product_mix_clustering_spark.operators.stats import advise_b
 from data_warehouse_product_mix_clustering_spark.plans.dedup import shared_shingles
 from data_warehouse_product_mix_clustering_spark.plans.ml import product_clusters
 from data_warehouse_product_mix_clustering_spark.plans.text import _postings_index_for, corpus_bpe_merges
+from data_warehouse_product_mix_clustering_spark.plans.warehouse import cluster_summary
 from data_warehouse_product_mix_clustering_spark.sources import registry
 from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
@@ -121,6 +122,7 @@ STORE_KINDS = {
     "table": (lambda sp, sf: table(sp, "orders", sf), "orders.parquet", "nation.parquet", None),
     "star": (dim_product, "part.parquet", None, None),
     "clusters": (product_clusters, "lineitem.parquet", None, None),
+    "result": (cluster_summary, "lineitem.parquet", None, lambda df: not df.is_cached),
     "shingles": (shared_shingles, "documents.parquet", "nation.parquet", lambda df: not df.is_cached),
     "postings": (_postings_index_for, "documents.parquet", "nation.parquet", lambda d: not os.path.exists(d)),
     "merges": (corpus_bpe_merges, "documents.parquet", "nation.parquet", None),
@@ -216,6 +218,57 @@ def test_store_entry_lifecycle(spark, monkeypatch, kind):
     assert is_released(d)
     _, new = fetch()
     assert new, "invalidating the sf_dir must drop entries built from its files"
+
+
+def test_cluster_profile_follows_a_new_fit(spark, monkeypatch):
+    """``invalidate_cluster_cache`` drops the served ``cluster_profile``
+    too: the next render profiles the new fit, not the persisted answer
+    of the old one."""
+    from pyspark.sql import functions as F
+
+    from data_warehouse_product_mix_clustering_spark.plans import ml as plans_ml
+
+    before = plans_ml.cluster_profile(spark, SF_SMOKE).collect()
+    assert len(before) == 4
+    plans_ml.invalidate_cluster_cache(SF_SMOKE)
+    monkeypatch.setattr(
+        plans_ml, "kmeans_assign", lambda feats, cols, order_col: feats.withColumn("cluster", F.lit(0))
+    )
+    try:
+        after = plans_ml.cluster_profile(spark, SF_SMOKE).collect()
+    finally:
+        plans_ml.invalidate_cluster_cache(SF_SMOKE)  # drop the one-cluster fit
+    assert [(r.cluster, r.n_products) for r in after] == [(0, sum(r.n_products for r in before))]
+
+
+@pytest.mark.parametrize("name", ["cluster_summary", "category_rollup"])
+def test_served_result_follows_a_rewritten_lineitem(spark, tmp_path, name):
+    """Rewriting ``lineitem.parquet`` and invalidating that path drops the
+    served answer: the next call returns the rewritten table's answer,
+    the one the query's own plan computes."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from data_warehouse_product_mix_clustering_spark.plans.registry import all_queries
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf)
+    fn = all_queries()[name].fn
+
+    def answer(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    old = answer(fn(spark, sf))
+    li = os.path.join(sf, "lineitem.parquet")
+    full = pq.read_table(li)
+    pq.write_table(full.filter(pc.equal(pc.bit_wise_and(full["l_orderkey"], 1), 0)), li)
+    registry.invalidate(li)
+    new = answer(fn(spark, sf))
+    assert new != old
+    assert new == answer(fn.__wrapped__(spark, sf))
+    registry.invalidate(sf)
 
 
 def test_store_concurrent_inserts_release_every_loser(monkeypatch):
