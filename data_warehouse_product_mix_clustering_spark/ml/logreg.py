@@ -628,59 +628,3 @@ def predict_softmax(
         F.col("__b.cls").alias("pred"),
         (-F.col("__b.np")).alias("p"),
     )
-
-
-def save_softmax(
-    spark: SparkSession,
-    w: dict[str, dict[str, float]],
-    model_dir: str,
-    meta: dict,
-) -> None:
-    """Persist a trained multinomial model — the ``save_logreg``
-    artifact with a class column; ≤ |classes|·(buckets+1) rows."""
-    import json
-    import os
-
-    from data_warehouse_product_mix_clustering_spark.operators.ivm import mark_committed, mark_dirty
-    from data_warehouse_product_mix_clustering_spark.sources.versioned import write_small_file_atomic
-
-    os.makedirs(model_dir, exist_ok=True)
-    mark_dirty(model_dir)
-    spark.createDataFrame(
-        [(c, b, wb) for c, ws in w.items() for b, wb in ws.items()],
-        "cls string, bucket string, w double",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(model_dir, _WEIGHTS)
-    )
-    write_small_file_atomic(
-        os.path.join(model_dir, _MODEL_META), json.dumps(meta, sort_keys=True)
-    )
-    mark_committed(model_dir)
-
-
-def load_softmax(
-    spark: SparkSession, model_dir: str, expect_meta: dict | None = None
-) -> tuple[dict[str, dict[str, float]], dict]:
-    """Load ({class: weights}, meta) — same refusal contract as
-    ``load_logreg`` (torn artifact, meta drift)."""
-    import json
-    import os
-
-    from data_warehouse_product_mix_clustering_spark.operators.ivm import require_committed
-
-    require_committed(model_dir, "softmax model")
-    with open(os.path.join(model_dir, _MODEL_META)) as f:
-        meta = json.load(f)
-    if expect_meta is not None and meta != expect_meta:
-        raise ValueError(
-            f"softmax model at {model_dir} was trained under {meta}; caller "
-            f"expects {expect_meta} — refusing to serve a mismatched model"
-        )
-    w: dict[str, dict[str, float]] = {}
-    for r in (
-        spark.read.schema("cls string, bucket string, w double")
-        .parquet(os.path.join(model_dir, _WEIGHTS))
-        .collect()  # ≤ |classes|·(buckets+1) rows
-    ):
-        w.setdefault(r["cls"], {})[r["bucket"]] = float(r["w"])
-    return w, meta

@@ -85,10 +85,10 @@ def features_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def invalidate_cluster_cache(sf_dir: str | None = None) -> None:
-    """Drop cached fitted clusterings for one sf_dir (or all), and the
-    served results, which may read them (``cluster_profile``)."""
+    """Drop cached fitted clusterings for one sf_dir (or all), with the
+    persisted ``cluster_profile`` answer, the one served result that reads
+    the fit. The other served results do not depend on it and stay."""
     state.invalidate(sf_dir, kind="clusters")
-    state.invalidate(sf_dir, kind="result")
 
 
 @register("product_clusters", headline=True)
@@ -120,21 +120,31 @@ def product_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("cluster_profile")
-@state.served
 def cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster stats incl. median profit (A7 shape, dashboard parity).
 
     Reference Clustering_Analysis.py:221-230: count, mean/median/sum of
     profit, mean margin, mean loyalty per learned cluster.
+
+    The dashboard's Overview page renders it, so the answer is persisted
+    on first use like a ``state.served`` query's, but held as a
+    ``clusters`` entry: it reads the fit, so it leaves the store with the
+    fit (``invalidate_cluster_cache``).
     """
-    pc = product_clusters(spark, sf_dir)
-    return pc.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n_products"),
-        ratio_round(F.avg("profit"), 2).alias("avg_profit"),
-        ratio_round(F.median("profit"), 2).alias("median_profit"),
-        ratio_round(F.sum("profit"), 2).alias("total_profit"),
-        ratio_round(F.avg("profit_margin")).alias("avg_margin"),
-        ratio_round(F.avg("customer_loyalty")).alias("avg_loyalty"),
+
+    def profile() -> DataFrame:
+        pc = product_clusters(spark, sf_dir)
+        return pc.groupBy("cluster").agg(
+            F.count(F.lit(1)).alias("n_products"),
+            ratio_round(F.avg("profit"), 2).alias("avg_profit"),
+            ratio_round(F.median("profit"), 2).alias("median_profit"),
+            ratio_round(F.sum("profit"), 2).alias("total_profit"),
+            ratio_round(F.avg("profit_margin")).alias("avg_margin"),
+            ratio_round(F.avg("customer_loyalty")).alias("avg_loyalty"),
+        ).persist()
+
+    return state.cached(
+        spark, "clusters", sf_dir, "cluster_profile", profile, release=state.unpersist_quietly
     )
 
 

@@ -531,10 +531,10 @@ def dsir_compaction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract audit for ``compact_dsir_store`` (operators/dsir.py) —
     the delta-log fold the store's docstring promised ("compactable by
     rewriting as one batch"), closing the maintenance loop the
-    versioned-sink family already has (``compact_table`` /
-    ``compact_snapshot_table``). Filesystem + generation-marker effects
-    are not SQL-expressible, so the truth is the invariant set (the
-    ``dsir_incremental_audit`` mold — bounded ≤4096-row collects):
+    versioned sink already has (``compact_table``). Filesystem +
+    generation-marker effects are not SQL-expressible, so the truth is
+    the invariant set (the ``dsir_incremental_audit`` mold — bounded
+    ≤4096-row collects):
 
     - ``models_survive_compaction``: after ingesting the corpus as
       three batches and compacting, the store-derived (rawm, tgtm)

@@ -72,14 +72,6 @@ FACT_PRODUCT_SALES = T.StructType(
     ]
 )
 
-PIPELINE_LOG = T.StructType(
-    [
-        T.StructField("Id", T.IntegerType(), False),
-        T.StructField("PipelineName", T.StringType(), False),
-        T.StructField("LastUpdate", T.TimestampType(), False),
-    ]
-)
-
 # 8 features in MATRIX_FEATURES (reference src/pipelines/clustering.py:11-12)
 # + ProductID + assigned cluster.
 PRODUCT_CLUSTERING = T.StructType(
@@ -104,7 +96,6 @@ STAR_SCHEMA: dict[str, T.StructType] = {
     "DimDate": DIM_DATE,
     "DimProductPriceCostHistory": DIM_PRODUCT_PRICE_COST_HISTORY,
     "FactProductSales": FACT_PRODUCT_SALES,
-    "PipelineLog": PIPELINE_LOG,
     "product_clustering": PRODUCT_CLUSTERING,
 }
 

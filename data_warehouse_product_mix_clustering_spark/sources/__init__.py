@@ -1,14 +1,6 @@
 from data_warehouse_product_mix_clustering_spark.sources.registry import load_testdata, table
-from data_warehouse_product_mix_clustering_spark.sources.io import (
-    read_csv,
-    read_parquet,
-    write_parquet_table,
-)
 
 __all__ = [
     "load_testdata",
     "table",
-    "read_csv",
-    "read_parquet",
-    "write_parquet_table",
 ]

@@ -1,21 +1,18 @@
-"""Generic sources & sinks (SURVEY.md §2.1, S1-S9).
+"""Sources and sinks the engine's own paths call (SURVEY.md §2.1, S1).
 
 The reference's sources are ODBC SQL scans with hand-written projection
-pushdown (reference src/pipelines/etl.py:19-21) and its sinks are
-``to_sql(if_exists='replace')`` full-table rewrites (etl.py:102-107).
-Spark-first equivalents:
+pushdown (reference src/pipelines/etl.py:19-21). Parquet reads and writes
+go straight through ``spark.read`` / ``df.write``; what lives here is
+what needs more than one call:
 
-- Parquet is the engine-native format (columnar, pushdown, pruning).
-- CSV source/sink for the reference's cache-file surface (S4/S5).
-- JSON-lines and ORC source/sink for interchange parity.
-- JDBC source/sink behind an import-guard (no driver jar in this image).
-- ``write_parquet_table`` is the S6 'replace table' equivalent: atomic
-  overwrite, optional hash-partitioning for downstream co-located joins.
-- ``read_parquet_evolving`` (schema drift) and ``compact_parquet``
-  (small-file compaction) cover the operational 100 TB chores.
-- ``read_csv_quarantine`` / ``read_json_quarantine``: dirty-feed
-  ingestion with a malformed-row channel — one raw-text scan, split by
-  projection (no PERMISSIVE cache workaround, no silent nulls/drops).
+- ``read_jdbc``: the JDBC source (S1), with a partitioned parallel scan
+  and a clear error when the driver jar is missing.
+- ``write_single_parquet_file``: one bare parquet file, the landing-file
+  shape a file-source stream consumes one per micro-batch.
+- ``split_csv_quarantine``: dirty-feed CSV parsing with a malformed-row
+  channel — one raw-text scan, split by projection (no PERMISSIVE cache
+  workaround, no silent nulls/drops). ``streaming/quarantine.py`` runs it
+  on every micro-batch.
 """
 
 from __future__ import annotations
@@ -23,33 +20,6 @@ from __future__ import annotations
 import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def read_parquet(
-    spark: SparkSession, path: str, columns: list[str] | None = None
-) -> DataFrame:
-    df = spark.read.parquet(path)
-    return df.select(*columns) if columns else df
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    header: bool = True,
-) -> DataFrame:
-    """CSV source (S4). Explicit schema preferred: inferSchema double-scans."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """CSV sink (S5)."""
-    df.write.mode(mode).option("header", "true").csv(path)
 
 
 def write_single_parquet_file(df: DataFrame, path: str) -> None:
@@ -68,106 +38,6 @@ def write_single_parquet_file(df: DataFrame, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").parquet(stage)
     _shutil.move(_glob.glob(os.path.join(stage, "part-*.parquet"))[0], path)
     _shutil.rmtree(stage, ignore_errors=True)
-
-
-def write_parquet_table(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    buckets: tuple[int, str] | None = None,
-    table_name: str | None = None,
-) -> None:
-    """Table sink (S6 replace / S7 append).
-
-    ``partition_by`` gives partition pruning on the listed columns;
-    ``buckets=(n, key)`` pre-shuffles so later joins/aggs on ``key``
-    co-locate without a shuffle. Bucketing metadata only exists in the
-    session catalog, so bucketed writes require ``table_name`` and go
-    through ``saveAsTable`` (path becomes the table location).
-    """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if buckets is not None:
-        if table_name is None:
-            raise ValueError("bucketed writes need table_name (catalog metadata)")
-        n, key = buckets
-        writer.format("parquet").option("path", path).bucketBy(
-            n, key
-        ).sortBy(key).saveAsTable(table_name)
-        return
-    writer.parquet(path)
-
-
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    multiline: bool = False,
-) -> DataFrame:
-    """JSON-lines source. Explicit schema preferred: inference double-scans,
-    and at 100 TB a schema drift mid-dataset silently widens columns."""
-    reader = spark.read.option("multiLine", str(multiline).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink (interchange format; parquet is the engine-native one)."""
-    df.write.mode(mode).json(path)
-
-
-def read_orc(
-    spark: SparkSession, path: str, columns: list[str] | None = None
-) -> DataFrame:
-    """ORC source — same columnar pushdown/pruning contract as parquet."""
-    df = spark.read.orc(path)
-    return df.select(*columns) if columns else df
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
-
-
-def read_parquet_evolving(spark: SparkSession, *paths: str) -> DataFrame:
-    """Read parquet written under an EVOLVING schema (columns added over
-    time): ``mergeSchema`` unions the per-file footers, so old files
-    surface the new columns as NULL instead of failing the scan. The merge
-    reads footers only — data pages are still pruned/pushed down normally.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Small-file compaction (the 100 TB operational chore).
-
-    Streaming/incremental sinks accumulate many tiny files; every reader
-    then pays per-file open/footer cost and loses row-group-sized IO. This
-    rewrites a dataset into ~``target_file_bytes`` files: file count is
-    derived from the actual on-disk size, and an optional
-    ``sortWithinPartitions`` restores clustering (better min/max pruning)
-    without a global sort. Returns the output file count.
-
-    Writes to a NEW path (atomic swap is the caller's rename) — never
-    rewrite a dataset in place while readers may be scanning it.
-    """
-    # On-disk size via the scan's own statistics (no driver-side file walk).
-    df = spark.read.parquet(path)
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    n_files = max(1, -(-int(size) // target_file_bytes))  # ceil division
-    out = df.repartition(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    out.write.mode("overwrite").parquet(out_path)
-    return n_files
 
 
 def read_jdbc(
@@ -248,10 +118,9 @@ def split_csv_quarantine(
     """Split a raw-text-line DataFrame (column ``value``) into
     (clean typed rows, quarantined raw lines).
 
-    The shared core of ``read_csv_quarantine`` (batch) and
-    ``streaming/quarantine.py`` (whose foreachBatch hands this function a
-    plain batch DataFrame per micro-batch): one parser, one
-    malformedness definition for both modes. The parse itself is a pure
+    The parser of ``streaming/quarantine.py``, whose foreachBatch hands
+    this function a plain batch DataFrame per micro-batch (a batch
+    caller passes ``spark.read.text(path)``). The parse itself is a pure
     projection; ``header=True`` adds a tiny per-file window over the
     header-equal lines only (see below), which is why the streaming path
     applies this inside foreachBatch rather than to the stream directly.
@@ -262,8 +131,8 @@ def split_csv_quarantine(
       otherwise parse them into all-null "clean" rows with no corrupt
       marker, the exact silent-null failure this module exists to stop.
     - ``header=True`` drops AT MOST ONE line equal to
-      ``sep.join(field names)`` per input file — the header this engine's
-      own ``write_csv`` emits. Any FURTHER header-equal line (a mid-file
+      ``sep.join(field names)`` per input file — the header Spark's CSV
+      writer emits. Any FURTHER header-equal line (a mid-file
       paste accident, a concatenated shard) is NOT silently deleted: it
       flows on to the parser, where the schema's guaranteed non-string
       field makes it unparseable, so it lands in the quarantine — the
@@ -336,63 +205,6 @@ def split_csv_quarantine(
     )
     blank = F.trim(F.col("value")) == ""
     bad = blank | F.col("r._corrupt_record").isNotNull()
-    clean = parsed.filter(~bad).select(
-        *[F.col(f"r.{f.name}").alias(f.name) for f in schema.fields]
-    )
-    quarantined = parsed.filter(bad).select(F.col("value").alias("raw_line"))
-    return clean, quarantined
-
-
-def read_csv_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    sep: str = ",",
-) -> tuple[DataFrame, DataFrame]:
-    """CSV ingestion with a quarantine channel: (clean, quarantined).
-
-    ``clean`` carries ``schema``'s columns for every parseable line;
-    ``quarantined`` carries (raw_line) for every malformed one (wrong
-    arity, uncastable value). The warehouse answer to dirty feeds — the
-    alternative Spark modes either silently null bad fields (PERMISSIVE),
-    silently drop the rows (DROPMALFORMED), or kill the whole job
-    (FAILFAST); a quarantine keeps the pipeline running AND the evidence.
-
-    Built scale-correctly: the file is read as raw text and parsed with
-    ``from_csv``, so the malformed split is a plain projection over one
-    scan. Filtering the DataFrameReader's ``_corrupt_record`` column
-    instead would hit Spark's documented restriction (the raw-file scan
-    must be cached before that column is referencable) — an O(input)
-    cache this path does not need. Header lines are dropped by value
-    equality, at most one per file (they are identical in every shard by
-    construction; extra header-equal lines quarantine — see
-    ``split_csv_quarantine``).
-    """
-    return split_csv_quarantine(spark.read.text(path), schema, header, sep)
-
-
-def read_json_quarantine(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> tuple[DataFrame, DataFrame]:
-    """JSON-lines ingestion with a quarantine channel: (clean, quarantined).
-
-    Same design as ``read_csv_quarantine`` (raw text + ``from_json`` —
-    one scan, no cache workaround). A line is quarantined when it is not
-    valid JSON; valid JSON missing declared fields yields nulls (schema
-    drift is ``read_parquet_evolving``'s concern, not corruption).
-    """
-    from pyspark.sql import functions as F
-
-    raw = spark.read.text(path)
-    parse_schema = T.StructType(
-        list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    options = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"}
-    parsed = raw.select(
-        F.col("value"), F.from_json(F.col("value"), parse_schema, options).alias("r")
-    )
-    bad = F.col("r").isNull() | F.col("r._corrupt_record").isNotNull()
     clean = parsed.filter(~bad).select(
         *[F.col(f"r.{f.name}").alias(f.name) for f in schema.fields]
     )

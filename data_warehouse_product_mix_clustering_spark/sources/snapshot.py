@@ -212,94 +212,3 @@ def vacuum_snapshots(store_dir: str, keep_last: int = 2) -> dict[str, int]:
             os.remove(os.path.join(store_dir, _MANIFESTS, f"{sid}.json"))
             dropped += 1
     return {"snapshots_dropped": dropped, "versions_deleted": deleted}
-
-
-def compact_snapshot_table(
-    spark: SparkSession,
-    store_dir: str,
-    name: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    expected_snapshot: int | None = None,
-) -> dict:
-    """Small-file compaction INSIDE a snapshot store: republish ``name``'s
-    current rows at ≈``target_file_bytes`` per file THROUGH
-    ``publish_snapshot``, so the manifest advances with the new layout
-    and every other table carries forward untouched — the multi-table
-    discipline ``versioned.compact_table``'s docstring prescribes but
-    (until r11) nothing implemented. Compacting a snapshot-store table
-    with the single-table ``compact_table`` would flip only the table's
-    own ``_LATEST`` marker, which snapshot readers bypass: the compacted
-    layout would be invisible AND unreferenced, i.e. vacuumable garbage.
-
-    Same guarantees as the single-table path, now at store scope: rows
-    are IDENTICAL by construction (one read → shuffle-free coalesce →
-    write), so ``version_diff`` across the compaction is empty and
-    incremental consumers see zero changes; the data lands invisibly
-    before the manifest commits (a crash leaves the prior snapshot fully
-    intact); pre-compaction snapshots stay time-travelable until
-    ``vacuum_snapshots``.
-
-    Concurrency (review r11): compaction reads rows from a BASIS version
-    and republishes them — so a writer that commits fresh rows for the
-    same table inside the read→publish window would be silently reverted
-    by a compaction that wins the pointer. The basis snapshot is
-    therefore pinned (``expected_snapshot``, default the current one at
-    entry) and VALIDATED after commit: if any snapshot between basis and
-    the compaction republished ``name``, the compaction repoints the
-    store to the newest conflicting commit (iff it still holds the
-    pointer) and raises — stale rows never stay current silently. The
-    residual window (a rival committing after the check) is the store's
-    documented optimistic-commit contract: both snapshots stay in
-    history, nothing is lost.
-
-    Returns {'snapshot', 'version', 'files_before', 'files_after',
-    'bytes'}.
-    """
-    basis = expected_snapshot if expected_snapshot is not None else current_snapshot(
-        store_dir
-    )
-    if basis is None:
-        raise LookupError(f"no snapshot published in {store_dir}")
-    manifest = snapshot_manifest(store_dir, basis)
-    if name not in manifest:
-        raise LookupError(f"table {name!r} not in snapshot manifest {manifest}")
-    v_cur = manifest[name]
-    tdir = os.path.join(store_dir, name)
-    vdir = os.path.join(tdir, f"v={v_cur}")
-    parts = [
-        f for f in os.listdir(vdir)
-        if f.endswith(".parquet") or f.startswith("part-")
-    ]
-    total = sum(os.path.getsize(os.path.join(vdir, p)) for p in parts)
-    n_out = max(1, -(-total // target_file_bytes))
-    df = read_table(spark, tdir, v_cur).coalesce(int(n_out))
-    sid = publish_snapshot(store_dir, {name: df})
-    conflicts = [
-        s
-        for s in snapshots(store_dir)
-        if basis < s < sid and snapshot_manifest(store_dir, s).get(name, v_cur) != v_cur
-    ]
-    if conflicts:
-        if current_snapshot(store_dir) == sid:
-            rollback_snapshot(store_dir, max(conflicts))
-        raise RuntimeError(
-            f"compact_snapshot_table: {name!r} was republished by "
-            f"snapshot(s) {conflicts} between basis {basis} and the "
-            f"compaction commit {sid}; the compacted snapshot is based on "
-            f"stale v{v_cur} rows — pointer restored, re-run compaction"
-        )
-    v_new = snapshot_manifest(store_dir, sid)[name]
-    after = len(
-        [
-            f
-            for f in os.listdir(os.path.join(tdir, f"v={v_new}"))
-            if f.endswith(".parquet") or f.startswith("part-")
-        ]
-    )
-    return {
-        "snapshot": sid,
-        "version": v_new,
-        "files_before": len(parts),
-        "files_after": after,
-        "bytes": int(total),
-    }

@@ -341,11 +341,9 @@ def compact_table(
     re-ordering semantics), which means a ``version_diff`` across the
     compaction is empty and downstream incremental consumers (rollups,
     index maintenance) see zero changes. Pre-compaction versions remain
-    time-travelable until ``vacuum``; inside a multi-table snapshot
-    store, use ``sources/snapshot.py::compact_snapshot_table`` instead —
-    it publishes the compacted relation through ``publish_snapshot`` so
-    the manifest advances with it (this function would flip only the
-    per-table marker, which snapshot readers bypass).
+    time-travelable until ``vacuum``. Do not point it at a table inside
+    a multi-table snapshot store (``sources/snapshot.py``): it flips only
+    the per-table marker, which snapshot readers bypass.
 
     Returns {'version', 'files_before', 'files_after', 'bytes'}.
     ``coalesce`` (not repartition) keeps it shuffle-free; output file

@@ -4,8 +4,9 @@ Every memo is an entry keyed ``(applicationId, kind, src, params)``:
 
 - ``kind`` names what was built: ``table`` (a resolved parquet scan),
   ``star`` (a star-schema builder's plan), ``clusters`` (the fitted
-  product clustering), ``result`` (the persisted answer of a registered
-  query that the dashboard serves, see ``served``), ``shingles`` (a
+  product clustering and the persisted ``cluster_profile`` that reads
+  it), ``result`` (the persisted answer of a registered query that the
+  dashboard serves, see ``served``), ``shingles`` (a
   persisted shingle relation), ``postings`` (an on-disk inverted index),
   ``merges`` (a trained BPE merge table) or ``advice`` (a
   broadcast-advisor decision);
@@ -41,12 +42,13 @@ from typing import Callable
 from py4j.protocol import Py4JError
 
 # Running every registered query at one sf_dir peaks at 28 live entries
-# (10 scans, 7 star plans, 5 served results, 2 shingle relations, one of
-# each other kind), so the bound holds four corpora.
+# (10 scans, 7 star plans, 4 served results, 2 clusters entries, 2 shingle
+# relations, one of each other kind), so the bound holds four corpora.
 MAX_ENTRIES = 128
-# One corpus holds eight entries that own storage (five served results,
-# two persisted shingle relations and one postings index directory), so
-# the bound holds two corpora before one's renders evict the other's.
+# One corpus holds eight entries that own storage (four served results,
+# the persisted cluster profile, two persisted shingle relations and one
+# postings index directory), so the bound holds two corpora before one's
+# renders evict the other's.
 MAX_HELD = 16
 
 _entries: "OrderedDict[tuple, tuple[object, Callable | None]]" = OrderedDict()

@@ -175,24 +175,6 @@ def read_source_mixture(
     )
 
 
-def read_source_temperature_rates(
-    spark: SparkSession, corpus_dir: str, alpha: float, stage: str = "deduped"
-) -> DataFrame:
-    """Temperature keep rates derived from the incrementally-maintained
-    gate log — ``read_source_mixture``'s per-source token sums fed
-    through the ONE shared temperature rule
-    (plans/pipeline/mixture.py::_temperature_keep_rates), so a streaming
-    pipeline can resample its corpus-so-far without any corpus re-scan:
-    (source, keep_rate). Equal to the batch rates over the ingested
-    union by the audited mixture equality."""
-    from data_warehouse_product_mix_clustering_spark.plans.pipeline import _temperature_keep_rates
-
-    per_src = read_source_mixture(spark, corpus_dir, stage).select(
-        "source", "total_tokens"
-    )
-    return _temperature_keep_rates(per_src, alpha)
-
-
 def _write_partition(df: DataFrame, batch_id: int, path: str) -> None:
     (
         df.withColumn(BATCH_COL, F.lit(batch_id))

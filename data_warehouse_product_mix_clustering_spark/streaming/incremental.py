@@ -10,8 +10,6 @@ restarts — re-running it after no new data appends nothing.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from data_warehouse_product_mix_clustering_spark.streaming.events import stream_events
@@ -51,16 +49,3 @@ def incremental_events_etl(
         )
 
     return run_available_now(stream, sink, checkpoint_dir, timeout_sec)
-
-
-def read_warehouse_events(spark: SparkSession, out_dir: str) -> DataFrame:
-    if not os.path.exists(out_dir):
-        # a clear error at the cause beats the AttributeError a silent
-        # None produces three frames later (review r9)
-        raise FileNotFoundError(
-            f"no warehouse sink at {out_dir!r} — run the incremental ETL first"
-        )
-    df = spark.read.parquet(out_dir)
-    from data_warehouse_product_mix_clustering_spark.streaming.quarantine import BATCH_COL
-
-    return df.drop(BATCH_COL)

@@ -142,49 +142,3 @@ def streaming_model_scoring(
         score_batch(spark, out_dir, batch_id, batch_df, w)
 
     return run_available_now(stream, sink, checkpoint_dir)
-
-
-DRIFT_TOLERANCE = 0.15  # absolute keep-rate deviation vs the cumulative
-
-
-def read_keep_rate_drift(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Per-(batch, source) keep-rate drift from the count log ALONE —
-    the monitoring table a frozen-model deployment watches: each
-    batch's keep rate, the cumulative rate over all batches, and a
-    drift flag when the batch deviates by more than DRIFT_TOLERANCE
-    absolute. A drifting source means its content moved relative to
-    the training slice — the signal to retrain (a NEW artifact + a NEW
-    stream, the module's frozen-model discipline), not to mutate the
-    live one.
-
-    Scale: the log is |batches|·|sources| rows of integers; this is
-    two dimension-sized aggregates and a broadcast join — scored
-    batches are never re-read. Rates are 6-dp snapped (engine-portable
-    like every ratio in the engine)."""
-    from data_warehouse_product_mix_clustering_spark.functions.numeric import ratio_round
-
-    log = read_score_log(spark, out_dir)
-    cum = log.groupBy("source").agg(
-        ratio_round(
-            F.sum("n_keep").cast("double") / F.sum("n_docs")
-        ).alias("cum_rate")
-    )
-    per = log.select(
-        F.col(BATCH_COL).alias("batch_id"),
-        "source",
-        "n_docs",
-        "n_keep",
-        ratio_round(F.col("n_keep") / F.col("n_docs")).alias("batch_rate"),
-    )
-    return per.join(F.broadcast(cum), "source").select(
-        "batch_id",
-        "source",
-        "n_docs",
-        "n_keep",
-        "batch_rate",
-        "cum_rate",
-        (
-            F.abs(F.col("batch_rate") - F.col("cum_rate"))
-            > F.lit(DRIFT_TOLERANCE)
-        ).alias("drifted"),
-    )

@@ -165,6 +165,38 @@ def test_asof_by_keys(spark):
         assert got == {1: 5.0, 2: 8.0}, strategy
 
 
+def test_asof_bucketed_scd2_boundary_day(spark):
+    """A type-2 dimension closes the old row the day BEFORE the change
+    (non-overlapping intervals, the ``bucket=`` contract), so a fact
+    dated exactly on the change day matches only the newly opened row,
+    even on the dedup-free bucketed path."""
+    day = dt.date.fromisoformat
+    dim = spark.createDataFrame(
+        [
+            (1, "red", day("2024-01-01"), day("2024-05-31")),
+            (1, "crimson", day("2024-06-01"), None),
+            (2, "blue", day("2024-01-01"), None),
+            (3, "green", day("2023-01-01"), day("2023-12-31")),
+            (3, "lime", day("2024-01-01"), None),
+            (9, "black", day("2024-06-01"), None),
+        ],
+        "pid int, color string, StartDate date, EndDate date",
+    )
+    facts = spark.createDataFrame(
+        [(1, day("2024-03-01")), (1, day("2024-06-01")), (1, day("2024-07-01"))],
+        "pid int, d date",
+    )
+    matched = asof_join(
+        facts, dim, left_on="d", right_on="StartDate",
+        by=["pid"], end_col="EndDate", bucket="day",
+    )
+    assert sorted((r.d, r.color) for r in matched.collect()) == [
+        (day("2024-03-01"), "red"),
+        (day("2024-06-01"), "crimson"),
+        (day("2024-07-01"), "crimson"),
+    ]
+
+
 @pytest.mark.parametrize("strategy", ["broadcast", "union"])
 def test_asof_tolerance(spark, strategy):
     """merge_asof tolerance: matches older than left_on - tolerance drop."""

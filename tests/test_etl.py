@@ -1,294 +1,14 @@
-"""ETL write-path tests (S4-S9): CSV roundtrip, table overwrite/append,
-warehouse build + pipeline log."""
+"""ETL source and sink tests: the JDBC source, CSV quarantine splits,
+the versioned and snapshot sinks, MERGE, and the composed refresh
+pipeline."""
 
 from __future__ import annotations
-
-import datetime
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from data_warehouse_product_mix_clustering_spark.etl.pipeline_log import latest_run, log_run, run_warehouse_build
-from data_warehouse_product_mix_clustering_spark.sources.io import read_csv, write_csv, write_parquet_table
-
-from conftest import SF_SMOKE
-
-
-def test_csv_roundtrip(spark, tmp_path):
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
-        "doc_id", "lang", "n_chars"
-    )
-    path = str(tmp_path / "docs_csv")
-    write_csv(docs, path)
-    back = read_csv(spark, path, schema=docs.schema)
-    assert back.count() == docs.count()
-    assert {r.lang for r in back.select("lang").distinct().collect()} == {
-        r.lang for r in docs.select("lang").distinct().collect()
-    }
-
-
-def test_parquet_overwrite_then_append(spark, tmp_path):
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").limit(100)
-    path = str(tmp_path / "tbl")
-    write_parquet_table(docs, path, mode="overwrite")
-    write_parquet_table(docs, path, mode="overwrite")
-    assert spark.read.parquet(path).count() == 100  # replace, not double
-    write_parquet_table(docs, path, mode="append")
-    assert spark.read.parquet(path).count() == 200
-
-
-def test_json_roundtrip(spark, tmp_path):
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
-        "doc_id", "lang", "n_chars"
-    )
-    from data_warehouse_product_mix_clustering_spark.sources.io import read_json, write_json
-
-    path = str(tmp_path / "docs_json")
-    write_json(docs, path)
-    back = read_json(spark, path, schema=docs.schema)
-    assert back.count() == docs.count()
-    assert sorted(r.doc_id for r in back.select("doc_id").collect()) == sorted(
-        r.doc_id for r in docs.select("doc_id").collect()
-    )
-
-
-def test_orc_roundtrip_with_pruning(spark, tmp_path):
-    from data_warehouse_product_mix_clustering_spark.sources.io import read_orc, write_orc
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_shipdate"
-    )
-    path = str(tmp_path / "li_orc")
-    write_orc(li, path)
-    back = read_orc(spark, path, columns=["l_orderkey", "l_quantity"])
-    assert back.columns == ["l_orderkey", "l_quantity"]
-    assert back.count() == li.count()
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "l_shipdate" not in plan.split("ReadSchema")[-1]  # pruned at the scan
-
-
-def test_schema_evolution_merge(spark, tmp_path):
-    """Old files without the new column must read back with NULLs, not fail."""
-    from data_warehouse_product_mix_clustering_spark.sources.io import read_parquet_evolving
-
-    old = spark.range(0, 10).select(F.col("id"), F.lit("a").alias("v1"))
-    new = spark.range(10, 20).select(
-        F.col("id"), F.lit("b").alias("v1"), F.lit(1.5).alias("v2")
-    )
-    p1, p2 = str(tmp_path / "part1"), str(tmp_path / "part2")
-    old.write.parquet(p1)
-    new.write.parquet(p2)
-    merged = read_parquet_evolving(spark, p1, p2)
-    assert set(merged.columns) == {"id", "v1", "v2"}
-    assert merged.count() == 20
-    assert merged.filter(F.col("v2").isNull()).count() == 10  # old files
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    """200 tiny files → a handful of right-sized ones, same data."""
-    import glob
-
-    from data_warehouse_product_mix_clustering_spark.sources.io import compact_parquet
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    frag = str(tmp_path / "fragmented")
-    li.repartition(200).write.parquet(frag)
-    assert len(glob.glob(f"{frag}/part-*")) == 200
-    out = str(tmp_path / "compacted")
-    compact_parquet(spark, frag, out, target_file_bytes=8 * 1024 * 1024,
-                    sort_within_by=["l_orderkey"])
-    files = glob.glob(f"{out}/part-*")
-    assert len(files) < 20, f"still fragmented: {len(files)} files"
-    assert spark.read.parquet(out).count() == li.count()
-
-
-def test_scd2_merge_golden(spark):
-    """SCD2 merge: change closes + reopens, new key opens, same-attrs no-op,
-    untouched keys carry; re-applying the batch is idempotent."""
-    import datetime as dt
-
-    from data_warehouse_product_mix_clustering_spark.etl.scd2 import scd2_merge
-
-    D = lambda s: dt.date.fromisoformat(s)
-    dim = spark.createDataFrame(
-        [
-            (1, "red", D("2024-01-01"), None),     # will change -> close+open
-            (2, "blue", D("2024-01-01"), None),    # identical update -> no-op
-            (3, "green", D("2023-01-01"), D("2024-01-01")),  # history row
-            (3, "lime", D("2024-01-01"), None),    # open, no update -> carried
-        ],
-        "pid int, color string, StartDate date, EndDate date",
-    )
-    updates = spark.createDataFrame(
-        [
-            (1, "crimson", D("2024-06-01")),
-            (2, "blue", D("2024-06-01")),
-            (9, "black", D("2024-06-01")),         # brand-new key
-        ],
-        "pid int, color string, ts date",
-    )
-    merged = scd2_merge(dim, updates, key="pid", attrs=["color"], ts_col="ts")
-    got = {tuple(r) for r in merged.collect()}
-    # the old row closes the day BEFORE the change (non-overlapping
-    # intervals — review r9: closing AT ts double-matches boundary facts
-    # through inclusive-end joins)
-    want = {
-        (1, "red", D("2024-01-01"), D("2024-05-31")),
-        (1, "crimson", D("2024-06-01"), None),
-        (2, "blue", D("2024-01-01"), None),
-        (3, "green", D("2023-01-01"), D("2024-01-01")),
-        (3, "lime", D("2024-01-01"), None),
-        (9, "black", D("2024-06-01"), None),
-    }
-    assert got == want
-    # idempotence: same batch again changes nothing
-    again = scd2_merge(merged, updates, key="pid", attrs=["color"], ts_col="ts")
-    assert {tuple(r) for r in again.collect()} == want
-    # the output feeds the engine's as-of join directly — INCLUDING a
-    # fact dated exactly on the change day, which must match only the
-    # newly-opened row even on the dedup-free bucketed fast path
-    from data_warehouse_product_mix_clustering_spark.operators.asof_join import asof_join
-
-    facts = spark.createDataFrame(
-        [(1, D("2024-03-01")), (1, D("2024-06-01")), (1, D("2024-07-01"))],
-        "pid int, d date",
-    )
-    matched = asof_join(
-        facts, merged, left_on="d", right_on="StartDate",
-        by=["pid"], end_col="EndDate", bucket="day",
-    )
-    assert sorted((r.d, r.color) for r in matched.collect()) == [
-        (D("2024-03-01"), "red"),
-        (D("2024-06-01"), "crimson"),
-        (D("2024-07-01"), "crimson"),
-    ]
-
-
-def test_scd2_merge_null_business_key(spark):
-    '''A NULL business key (the unknown-member row) is first-class: it
-    carries when untouched, closes+reopens on a changed NULL-key update,
-    and never silently disappears (review r9: plain-equality joins
-    dropped it from every fate bucket).'''
-    import datetime as dt
-
-    from data_warehouse_product_mix_clustering_spark.etl.scd2 import scd2_merge
-
-    D = lambda s: dt.date.fromisoformat(s)
-    dim = spark.createDataFrame(
-        [(None, "unknown", D("2024-01-01"), None), (1, "red", D("2024-01-01"), None)],
-        "pid int, color string, StartDate date, EndDate date",
-    )
-    # no update for the NULL key: it carries
-    ups = spark.createDataFrame([(1, "red", D("2024-06-01"))], "pid int, color string, ts date")
-    got = {tuple(r) for r in scd2_merge(dim, ups, key="pid", attrs=["color"], ts_col="ts").collect()}
-    assert (None, "unknown", D("2024-01-01"), None) in got and len(got) == 2
-
-    # a changed NULL-key update closes and reopens it
-    ups2 = spark.createDataFrame(
-        [(None, "redacted", D("2024-06-01"))], "pid int, color string, ts date"
-    )
-    got2 = {tuple(r) for r in scd2_merge(dim, ups2, key="pid", attrs=["color"], ts_col="ts").collect()}
-    assert (None, "unknown", D("2024-01-01"), D("2024-05-31")) in got2
-    assert (None, "redacted", D("2024-06-01"), None) in got2
-
-
-def test_warehouse_build_and_log(spark, tmp_path):
-    wh = str(tmp_path / "wh")
-    tables = run_warehouse_build(spark, SF_SMOKE, wh)
-    assert set(tables) == {
-        "DimProduct",
-        "DimDate",
-        "DimProductPriceCostHistory",
-        "FactProductSales",
-    }
-    fact = spark.read.parquet(tables["FactProductSales"])
-    assert fact.count() > 0 and "ProductID" in fact.columns
-
-    log_run(spark, wh, "clustering", datetime.datetime(2030, 1, 2, tzinfo=datetime.timezone.utc))
-    log_run(spark, wh, "etl2", datetime.datetime(2030, 1, 3, tzinfo=datetime.timezone.utc))
-    top = latest_run(spark, wh).collect()
-    assert len(top) == 1 and top[0].PipelineName == "etl2"
-
-
-def test_bucketed_write_avoids_shuffle_on_agg(spark, tmp_path):
-    """Bucketed table: groupBy on the bucket key plans without an Exchange."""
-    docs = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    write_parquet_table(
-        docs,
-        str(tmp_path / "orders_bucketed"),
-        buckets=(4, "o_custkey"),
-        table_name="orders_bucketed_test",
-    )
-    try:
-        back = spark.table("orders_bucketed_test")
-        assert back.count() == docs.count()
-        agg = back.groupBy("o_custkey").count()
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"bucketed agg still shuffles:\n{plan[:500]}"
-    finally:
-        spark.sql("DROP TABLE IF EXISTS orders_bucketed_test")
-
-
-def test_partitioned_write_prunes_scan(spark, tmp_path):
-    """Partitioned fact table: a year filter must prune to one partition."""
-    from pyspark.sql import functions as F
-    from data_warehouse_product_mix_clustering_spark.etl.star_schema import fact_sales
-
-    fact = fact_sales(spark, SF_SMOKE).withColumn("order_year", F.year("OrderDate"))
-    path = str(tmp_path / "fact_partitioned")
-    write_parquet_table(fact, path, partition_by=["order_year"])
-    back = spark.read.parquet(path)
-    years = sorted(r.order_year for r in back.select("order_year").distinct().collect())
-    assert len(years) > 1
-    one = back.filter(F.col("order_year") == years[0])
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert f"order_year = {years[0]}" in plan or "PartitionFilters" in plan
-    # pruned row count matches the unpartitioned filter
-    expect = fact.filter(F.col("order_year") == years[0]).count()
-    assert one.count() == expect
-
-
-def test_scd2_merge_rejects_stale_updates(spark):
-    """A changed update with ts <= the open row's StartDate would invert the
-    validity interval; default raises, on_stale='drop' discards it while
-    the rest of the batch still applies."""
-    import datetime as dt
-
-    import pytest
-
-    from data_warehouse_product_mix_clustering_spark.etl.scd2 import scd2_merge
-
-    D = lambda s: dt.date.fromisoformat(s)
-    dim = spark.createDataFrame(
-        [(1, "red", D("2024-01-01"), None), (2, "blue", D("2024-01-01"), None)],
-        "pid int, color string, StartDate date, EndDate date",
-    )
-    updates = spark.createDataFrame(
-        [(1, "crimson", D("2023-12-01")), (2, "navy", D("2024-06-01"))],
-        "pid int, color string, ts date",
-    )
-    with pytest.raises(ValueError, match="inverted validity interval"):
-        scd2_merge(dim, updates, key="pid", attrs=["color"], ts_col="ts")
-    merged = scd2_merge(
-        dim, updates, key="pid", attrs=["color"], ts_col="ts", on_stale="drop"
-    )
-    got = {tuple(r) for r in merged.collect()}
-    assert got == {
-        (1, "red", D("2024-01-01"), None),           # stale update dropped
-        (2, "blue", D("2024-01-01"), D("2024-05-31")),  # closes day before
-        (2, "navy", D("2024-06-01"), None),
-    }
-    # a stale-but-identical update is a no-op, not an error
-    same = spark.createDataFrame(
-        [(1, "red", D("2023-12-01"))], "pid int, color string, ts date"
-    )
-    ok = scd2_merge(dim, same, key="pid", attrs=["color"], ts_col="ts")
-    assert ok.count() == 2
+from data_warehouse_product_mix_clustering_spark.sources.io import split_csv_quarantine
 
 
 def test_jdbc_round_trip_embedded_derby(spark, tmp_path):
@@ -341,8 +61,6 @@ def test_read_csv_quarantine_splits_clean_and_malformed(spark, tmp_path):
     lines are dropped; nothing is silently nulled or lost."""
     from pyspark.sql import types as T
 
-    from data_warehouse_product_mix_clustering_spark.sources.io import read_csv_quarantine
-
     path = str(tmp_path / "feed.csv")
     lines = [
         "id,qty,label",
@@ -363,7 +81,7 @@ def test_read_csv_quarantine_splits_clean_and_malformed(spark, tmp_path):
             T.StructField("label", T.StringType()),
         ]
     )
-    clean, quarantined = read_csv_quarantine(spark, path, schema)
+    clean, quarantined = split_csv_quarantine(spark.read.text(path), schema)
     got = {(r.id, r.qty, r.label) for r in clean.collect()}
     assert got == {(1, 10, "alpha"), (3, 30, "gamma"), (5, 50, "epsilon")}
     bad = {r.raw_line for r in quarantined.collect()}
@@ -378,7 +96,7 @@ def test_read_csv_quarantine_splits_clean_and_malformed(spark, tmp_path):
         [T.StructField("id", T.StringType()), T.StructField("label", T.StringType())]
     )
     with pytest.raises(ValueError, match="all-string schema"):
-        read_csv_quarantine(spark, path, all_str)
+        split_csv_quarantine(spark.read.text(path), all_str)
 
     # reserved-word / spaced field names survive the DDL round trip
     odd = T.StructType(
@@ -387,39 +105,9 @@ def test_read_csv_quarantine_splits_clean_and_malformed(spark, tmp_path):
     odd_path = str(tmp_path / "odd.csv")
     with open(odd_path, "w") as f:
         f.write("from,order count\n7,70\nx,y\n")
-    oc, oq = read_csv_quarantine(spark, odd_path, odd)
+    oc, oq = split_csv_quarantine(spark.read.text(odd_path), odd)
     assert [(r["from"], r["order count"]) for r in oc.collect()] == [(7, 70)]
     assert oq.count() == 1
-
-
-def test_read_json_quarantine_splits_invalid_json(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from data_warehouse_product_mix_clustering_spark.sources.io import read_json_quarantine
-
-    path = str(tmp_path / "feed.jsonl")
-    lines = [
-        '{"id": 1, "label": "alpha"}',
-        "{not json at all",  # -> quarantine
-        '{"id": 3}',         # valid, missing field -> null label (drift, not dirt)
-        "[1,2]",             # non-object -> quarantine
-        # Jackson stops at the first complete JSON value, so trailing
-        # garbage after a valid object parses CLEAN — pinned here so a
-        # parser-behavior change surfaces as a test diff, not silently.
-        '{"id": 4, "label": "delta"} trailing',
-    ]
-    with open(path, "w") as f:
-        f.write("\n".join(lines))
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("label", T.StringType())]
-    )
-    clean, quarantined = read_json_quarantine(spark, path, schema)
-    got = {(r.id, r.label) for r in clean.collect()}
-    assert got == {(1, "alpha"), (3, None), (4, "delta")}
-    assert {r.raw_line for r in quarantined.collect()} == {
-        "{not json at all",
-        "[1,2]",
-    }
 
 
 def test_versioned_table_lifecycle(spark, tmp_path):
@@ -854,8 +542,6 @@ def test_csv_quarantine_midfile_header_conserved(spark, tmp_path):
     not just line 1 (ADVICE r7)."""
     from pyspark.sql import types as T
 
-    from data_warehouse_product_mix_clustering_spark.sources.io import read_csv_quarantine
-
     path = str(tmp_path / "feed.csv")
     lines = [
         "id,qty,label",
@@ -874,7 +560,7 @@ def test_csv_quarantine_midfile_header_conserved(spark, tmp_path):
             T.StructField("label", T.StringType()),
         ]
     )
-    clean, quarantined = read_csv_quarantine(spark, path, schema)
+    clean, quarantined = split_csv_quarantine(spark.read.text(path), schema)
     assert {(r.id, r.qty, r.label) for r in clean.collect()} == {
         (1, 10, "alpha"), (2, 20, "beta"), (3, 30, "gamma")
     }
@@ -888,7 +574,7 @@ def test_csv_quarantine_midfile_header_conserved(spark, tmp_path):
     path2 = str(tmp_path / "feed2.csv")
     with open(path2, "w") as f:
         f.write("id,qty,label\n4,40,delta\n")
-    clean2, quar2 = read_csv_quarantine(spark, str(tmp_path / "feed*.csv"), schema)
+    clean2, quar2 = split_csv_quarantine(spark.read.text(str(tmp_path / "feed*.csv")), schema)
     assert clean2.count() == 4
     assert quar2.count() == 2
 
@@ -1296,103 +982,6 @@ def test_publish_snapshot_concurrent_writers(spark, tmp_path):
     for s in ids:
         snapshot_manifest(store, s)  # both manifests committed and readable
     assert current_snapshot(store) in ids
-
-
-def test_compact_snapshot_table(spark, tmp_path):
-    """Compaction INSIDE a multi-table snapshot store
-    (sources/snapshot.py::compact_snapshot_table — VERDICT r10 #7): the
-    compacted relation republishes THROUGH the manifest, so the store
-    advances atomically; rows are identical, the CDC diff across the
-    compaction is EMPTY, the sibling table carries forward untouched,
-    and the pre-compaction snapshot stays time-travelable."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_warehouse_product_mix_clustering_spark.sources.snapshot import (
-        compact_snapshot_table,
-        current_snapshot,
-        publish_snapshot,
-        read_snapshot_table,
-        snapshot_manifest,
-    )
-    from data_warehouse_product_mix_clustering_spark.sources.versioned import version_diff
-
-    store = str(tmp_path / "store")
-    fact = spark.range(200).select(
-        F.col("id"), (F.col("id") * 2).alias("v")
-    ).repartition(8)
-    sid0 = publish_snapshot(store, {"fact": fact, "dim": spark.range(5)})
-    m0 = snapshot_manifest(store, sid0)
-
-    stats = compact_snapshot_table(spark, store, "fact", target_file_bytes=1 << 30)
-    assert stats["files_before"] == 8 and stats["files_after"] == 1
-
-    sid1 = current_snapshot(store)
-    assert sid1 == stats["snapshot"] == sid0 + 1
-    m1 = snapshot_manifest(store, sid1)
-    assert m1["dim"] == m0["dim"], "untouched table carries forward"
-    assert m1["fact"] == stats["version"] > m0["fact"]
-
-    rows = lambda df: sorted((r["id"], r["v"]) for r in df.collect())  # noqa: E731
-    want = rows(fact)
-    assert rows(read_snapshot_table(spark, store, "fact")) == want
-    # empty CDC diff: incremental consumers see ZERO changes
-    assert (
-        version_diff(
-            spark, os.path.join(store, "fact"), m0["fact"], m1["fact"], key=["id"]
-        ).count()
-        == 0
-    )
-    # the pre-compaction snapshot stays time-travelable with the old layout
-    assert rows(read_snapshot_table(spark, store, "fact", sid0)) == want
-    old_dir = os.path.join(store, "fact", f"v={m0['fact']}")
-    assert (
-        len([f for f in os.listdir(old_dir) if f.startswith("part-")]) == 8
-    ), "old layout intact until vacuum_snapshots"
-    # unknown table refuses
-    import pytest as _pytest
-
-    with _pytest.raises(LookupError):
-        compact_snapshot_table(spark, store, "nope")
-
-
-def test_compact_snapshot_table_detects_concurrent_republish(spark, tmp_path):
-    """Compaction republishes rows read from a BASIS version; a rival
-    commit of the SAME table inside the read→publish window must not be
-    silently reverted by the compaction winning the pointer (review
-    r11). Pinned via expected_snapshot: compacting from a stale basis
-    must publish, detect the rival, restore the pointer to the rival's
-    commit, and raise — the rival's rows stay current."""
-    import pytest
-
-    from pyspark.sql import functions as F
-
-    from data_warehouse_product_mix_clustering_spark.sources.snapshot import (
-        compact_snapshot_table,
-        current_snapshot,
-        publish_snapshot,
-        read_snapshot_table,
-        snapshots,
-    )
-
-    store = str(tmp_path / "store")
-    fact0 = spark.range(50).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    sid0 = publish_snapshot(store, {"fact": fact0.repartition(4)})
-
-    # rival commits fresh rows while the compaction (below) is "reading"
-    fact1 = spark.range(60).select(F.col("id"), (F.col("id") * 3).alias("v"))
-    sid1 = publish_snapshot(store, {"fact": fact1})
-
-    with pytest.raises(RuntimeError, match="republished"):
-        compact_snapshot_table(spark, store, "fact", expected_snapshot=sid0)
-
-    # the rival's commit holds the pointer; its rows are current
-    assert current_snapshot(store) == sid1
-    got = sorted((r["id"], r["v"]) for r in read_snapshot_table(spark, store, "fact").collect())
-    assert got == [(i, i * 3) for i in range(60)]
-    # the stale compaction stays in HISTORY (optimistic siblings), never current
-    assert len(snapshots(store)) == 3
 
 
 def test_write_small_file_exclusive_same_process_race():

@@ -3028,33 +3028,6 @@ def test_doc_lang_classifier_shape(spark):
     assert held["agrees"].mean() > majority
 
 
-def test_softmax_model_roundtrip_and_refusals(spark, tmp_path):
-    """ml/logreg.py::save_softmax/load_softmax — bit-exact nested-dict
-    roundtrip through parquet, meta-drift refusal, torn-artifact
-    refusal (the save_logreg contract, multiclass)."""
-    import os
-
-    import pytest
-
-    from data_warehouse_product_mix_clustering_spark.ml.logreg import load_softmax, save_softmax
-    from data_warehouse_product_mix_clustering_spark.operators.ivm import COMMIT_MARKER
-
-    w = {
-        "en": {"aaa": 0.123456, "__bias": -1.5},
-        "und": {"aaa": -0.000001, "__bias": 0.75},
-    }
-    meta = {"features": "test", "n_iter": 3}
-    d = str(tmp_path / "m")
-    save_softmax(spark, w, d, meta)
-    w2, meta2 = load_softmax(spark, d, expect_meta=meta)
-    assert w2 == w and meta2 == meta
-    with pytest.raises(ValueError):
-        load_softmax(spark, d, expect_meta={"features": "other"})
-    os.remove(os.path.join(d, COMMIT_MARKER))
-    with pytest.raises(RuntimeError):
-        load_softmax(spark, d)
-
-
 def test_doc_length_equidepth_batches_matches_duckdb_twin(spark):
     """plans/pipeline::doc_length_equidepth_batches (pre-staged r15)
     ≡ its adjacent DuckDB ntile oracle at sf0.001, plus the equi-depth
@@ -3908,46 +3881,6 @@ def test_vocab_growth_matches_duckdb_twin(spark):
     assert sorted(got["decile"]) == list(range(1, VOCAB_DECILES + 1))
     assert int(got["vocab_size"].max()) == truth[0]
     assert int(got["new_word_occurrences"].sum()) == truth[1]
-
-
-def test_read_keep_rate_drift_reconciles(spark, tmp_path):
-    """streaming/model_scoring.py::read_keep_rate_drift — the drift
-    table derives from the count log alone and reconciles with directly
-    recomputed rates; a constructed drifting batch flags and a
-    conforming one does not."""
-    from pyspark.sql import functions as F
-
-    from data_warehouse_product_mix_clustering_spark.streaming.model_scoring import (
-        DRIFT_TOLERANCE,
-        _write_partition,
-        read_keep_rate_drift,
-    )
-
-    out = str(tmp_path / "out")
-    rows0 = spark.createDataFrame(
-        [("a", 100, 50), ("b", 100, 80)],
-        "source string, n_docs bigint, n_keep bigint",
-    )
-    rows1 = spark.createDataFrame(
-        [("a", 100, 50), ("b", 100, 10)],  # b crashes from 0.8 to 0.1
-        "source string, n_docs bigint, n_keep bigint",
-    )
-    import os
-
-    _write_partition(rows0, 0, os.path.join(out, "score_log"))
-    _write_partition(rows1, 1, os.path.join(out, "score_log"))
-
-    got = {
-        (r["batch_id"], r["source"]): (r["batch_rate"], r["cum_rate"], r["drifted"])
-        for r in read_keep_rate_drift(spark, out).collect()
-    }
-    assert got[(0, "a")][0] == 0.5 and not got[(0, "a")][2]
-    assert got[(1, "a")][0] == 0.5 and not got[(1, "a")][2]
-    # b: cumulative (80+10)/200 = 0.45; batch rates 0.8 and 0.1 both
-    # deviate by 0.35 > tolerance
-    assert got[(0, "b")][1] == 0.45
-    assert got[(0, "b")][2] and got[(1, "b")][2]
-    assert DRIFT_TOLERANCE < 0.35
 
 
 def test_source_vocab_overlap_matches_duckdb_twin(spark):

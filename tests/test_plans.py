@@ -211,50 +211,6 @@ def test_dynamic_partition_pruning(spark, tmp_path):
     )
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """The claimed 100 TB shuffle-free join path: lineitem + orders written
-    bucketed on the order key must join with ZERO Exchange operators."""
-    from pyspark.sql import functions as F
-
-    from data_warehouse_product_mix_clustering_spark.sources.io import write_parquet_table
-
-    li = (
-        spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-        .select("l_orderkey", "l_quantity")
-    )
-    orders = (
-        spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-        .select("o_orderkey", "o_totalprice")
-    )
-    write_parquet_table(
-        li, str(tmp_path / "li"), buckets=(4, "l_orderkey"), table_name="bkt_lineitem"
-    )
-    write_parquet_table(
-        orders,
-        str(tmp_path / "ord"),
-        buckets=(4, "o_orderkey"),
-        table_name="bkt_orders",
-    )
-    prev = _with_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
-    try:
-        j = (
-            spark.table("bkt_lineitem")
-            .join(
-                spark.table("bkt_orders"),
-                F.col("l_orderkey") == F.col("o_orderkey"),
-            )
-            .groupBy("o_orderkey")
-            .agg(F.sum("l_quantity").alias("qty"))
-        )
-        assert j.count() > 0
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan[:1200]}"
-    finally:
-        _restore_confs(spark, prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-
-
 def test_correlated_subquery_is_decorrelated(spark):
     """The correlated scalar subquery must decorrelate into one aggregate +
     one join — no per-row subquery node in the physical plan."""

@@ -241,6 +241,19 @@ def test_cluster_profile_follows_a_new_fit(spark, monkeypatch):
     assert [(r.cluster, r.n_products) for r in after] == [(0, sum(r.n_products for r in before))]
 
 
+def test_refit_keeps_served_results_that_do_not_read_the_fit(spark):
+    """``invalidate_cluster_cache`` drops only what reads the fit: the
+    served ``cluster_summary``, built from the fact alone, stays persisted
+    and is served again without re-deriving the fact."""
+    from data_warehouse_product_mix_clustering_spark.plans import ml as plans_ml
+
+    a = cluster_summary(spark, SF_SMOKE)
+    assert a.is_cached
+    plans_ml.invalidate_cluster_cache(SF_SMOKE)
+    b = cluster_summary(spark, SF_SMOKE)
+    assert b is a and b.is_cached
+
+
 @pytest.mark.parametrize("name", ["cluster_summary", "category_rollup"])
 def test_served_result_follows_a_rewritten_lineitem(spark, tmp_path, name):
     """Rewriting ``lineitem.parquet`` and invalidating that path drops the
@@ -341,14 +354,15 @@ def test_no_cache_outside_the_store():
 
 
 def test_every_package_definition_is_referenced():
-    """No top-level function or class in the package is dead: each one
-    is named somewhere outside its own body — in the package, tests/,
-    perfbench/, scripts/ or bench.py. An import or re-export alone is
-    not a use: a name must be read (``Name``/``Attribute``) somewhere. A
-    ``@register`` query counts as used (the decorator hands it to
-    ``all_queries()``); dunder module hooks are exempt. Matching is by
-    name, so a name shared with a live definition elsewhere hides a dead
-    one; the scan errs toward passing."""
+    """Every top-level function or class in the package is reachable from
+    production: a ``@register`` query, module-level package code other
+    than imports, or a name read in perfbench/, scripts/, bench.py or
+    __spark_entry__.py. Reachability walks by name through the bodies of
+    reached definitions; an ``import x as y`` alias leads to ``x``. A
+    name read only in tests/ does not count, so code that only tests
+    call fails here. Matching is by name, so a name shared with a
+    reached definition elsewhere hides a dead one; the scan errs toward
+    passing."""
     import ast
     import pathlib
 
@@ -356,36 +370,56 @@ def test_every_package_definition_is_referenced():
 
     root = pathlib.Path(pkg.__file__).parent
     repo = root.parent
-    sources = [
-        *root.rglob("*.py"),
-        *(repo / "tests").rglob("*.py"),
+
+    def reads(node):
+        return {
+            n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))
+        }
+
+    defs, aliases, roots = {}, {}, set()
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.Import, ast.ImportFrom)):
+                for a in n.names:
+                    if a.asname:
+                        aliases.setdefault(a.asname, set()).add(a.name.rsplit(".", 1)[-1])
+        for top in tree.body:
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(top.name, []).append((path, top))
+                if any(ast.unparse(getattr(x, "func", x)) == "register" for x in top.decorator_list):
+                    roots.add(top.name)
+            elif not isinstance(top, (ast.Import, ast.ImportFrom)):
+                roots |= reads(top)
+    for path in [
         *(repo / "perfbench").rglob("*.py"),
         *(repo / "scripts").rglob("*.py"),
         repo / "bench.py",
-    ]
-    defs, users = [], {}  # users: name → {(path, line) of each top-level user}
-    for path in sources:
-        for top in ast.parse(path.read_text()).body:
-            if path.is_relative_to(root) and isinstance(
-                top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                defs.append((path, top))
-            for n in ast.walk(top):
-                if isinstance(n, ast.Name):
-                    name = n.id
-                elif isinstance(n, ast.Attribute):
-                    name = n.attr
-                else:
-                    continue
-                users.setdefault(name, set()).add((path, top.lineno))
-    registered = lambda d: any(  # noqa: E731
-        ast.unparse(getattr(x, "func", x)) == "register" for x in d.decorator_list
+        repo / "__spark_entry__.py",
+    ]:
+        roots |= reads(ast.parse(path.read_text()))
+
+    reached, todo = set(), list(roots)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo.extend(aliases.get(name, ()))
+            for _, d in defs.get(name, ()):
+                todo.extend(reads(d))
+
+    def exempt(path, name):
+        return (
+            name.startswith("__")  # module hooks the runtime calls
+            or name.endswith("_py")  # Python reference twins, kept beside their parity tests
+            or path == root / "etl" / "reference_pipeline.py"  # the reference's ETL, golden-tested
+        )
+    dead = sorted(
+        f"{path.relative_to(root)}::{name}"
+        for name, found in defs.items()
+        for path, _ in found
+        if name not in reached and not exempt(path, name)
     )
-    dead = [
-        f"{path.relative_to(root)}::{d.name}"
-        for path, d in defs
-        if not d.name.startswith("__")
-        and not registered(d)
-        and not users.get(d.name, set()) - {(path, d.lineno)}
-    ]
     assert not dead, dead

@@ -47,21 +47,18 @@ def test_streaming_sessions_match_batch(spark):
 
 def test_incremental_etl_is_idempotent(spark, tmp_path):
     """Second availableNow run with an intact checkpoint ingests nothing."""
-    from data_warehouse_product_mix_clustering_spark.streaming.incremental import (
-        incremental_events_etl,
-        read_warehouse_events,
-    )
+    from data_warehouse_product_mix_clustering_spark.streaming.incremental import incremental_events_etl
     from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
     out = str(tmp_path / "wh_events")
     ckpt = str(tmp_path / "ckpt")
     n1 = incremental_events_etl(spark, SF_SMOKE, out, ckpt)
     assert n1 >= 1
-    count1 = read_warehouse_events(spark, out).count()
+    count1 = spark.read.parquet(out).count()
     assert count1 == table(spark, "events", SF_SMOKE).count()
 
     n2 = incremental_events_etl(spark, SF_SMOKE, out, ckpt)
-    count2 = read_warehouse_events(spark, out).count()
+    count2 = spark.read.parquet(out).count()
     assert count2 == count1, "re-run duplicated rows despite checkpoint"
 
 
@@ -669,53 +666,6 @@ def test_gated_ingest_zero_survivor_batch_does_not_wedge(spark, tmp_path):
     assert 3 in ids and 4 not in ids, ids
     wf2 = {r["stage"]: r["n_docs"] for r in read_gate_waterfall(spark, corpus_dir).collect()}
     assert wf2["ingested"] == 4 and wf2["deduped"] == 3
-
-
-def test_read_source_temperature_rates_matches_batch(spark, tmp_path):
-    """streaming/corpus_ingest.py::read_source_temperature_rates — the
-    temperature keep rates derived from the incrementally-maintained
-    gate log equal the batch rates over the same per-source token sums
-    (one shared _temperature_keep_rates definition; the log's sums are
-    pinned equal to the batch mixture by the audit, so this receipt
-    closes streamed-store → resample rates)."""
-    from pyspark.sql import functions as F
-
-    from data_warehouse_product_mix_clustering_spark.plans.pipeline import (
-        MIXTURE_ALPHA,
-        _per_source_tokens,
-        _temperature_keep_rates,
-    )
-    from data_warehouse_product_mix_clustering_spark.sources.registry import table
-    from data_warehouse_product_mix_clustering_spark.streaming.corpus_ingest import (
-        gated_ingest_batch,
-        read_source_temperature_rates,
-    )
-    from conftest import SF_SMOKE
-
-    corpus_dir = str(tmp_path / "corpus")
-    docs = table(spark, "documents", SF_SMOKE).select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    knobs = dict(lang="en", quality_min=0.3, tok_lo=5, tok_hi=500)
-    gated_ingest_batch(
-        spark, docs.filter(F.col("doc_id") < 200), 0, corpus_dir, **knobs
-    )
-    gated_ingest_batch(
-        spark, docs.filter(F.col("doc_id") >= 200), 1, corpus_dir, **knobs
-    )
-    got = {
-        (r["source"], r["keep_rate"])
-        for r in read_source_temperature_rates(
-            spark, corpus_dir, MIXTURE_ALPHA
-        ).collect()
-    }
-    want = {
-        (r["source"], r["keep_rate"])
-        for r in _temperature_keep_rates(
-            _per_source_tokens(spark, SF_SMOKE), MIXTURE_ALPHA
-        ).collect()
-    }
-    assert got == want
 
 
 def test_worker_kernels_import_from_any_driver_cwd():
