@@ -23,13 +23,10 @@ a corpus scan. Spark-first mapping:
   plan, so indexed and ad-hoc retrieval are value-identical and share one
   oracle.
 
-Three serving paths over the same layout (round 18):
-``search_postings_index`` (the bucket-pruned exact scan),
-``search_postings_index_wand`` (block-max WAND: additionally skips
-doc-id blocks whose score upper bound cannot reach the top-k threshold
-— exact by construction, see the function docstring), and
-``search_postings_index_batch`` (many queries against ONE scan of the
-union of their buckets, per-query top-k via WindowGroupLimit).
+Two BM25 serving paths over the same layout: ``search_postings_index``
+(the bucket-pruned exact scan) and ``search_postings_index_batch`` (many
+queries against ONE scan of the union of their buckets, per-query top-k
+via WindowGroupLimit).
 
 Reference anchor: the reference app has no search service; this is part
 of the beyond-reference training-data/retrieval surface (SURVEY §6), kept
@@ -40,64 +37,11 @@ from __future__ import annotations
 
 import hashlib
 import os
-import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 64
-
-# Block-max metadata granularity: the doc-id space is cut into GLOBAL
-# fixed-width blocks at build time (width persisted in stats/, so
-# maintenance and serving agree forever). Global doc-id ranges — not
-# per-term posting positions — so a block either contains ALL of a
-# doc's query-term postings or none of them: a pruned read never sees a
-# partial document, which is what makes the WAND prune exact.
-#
-# Width = max(DOCS_PER_BLOCK, ceil(id-range / MAX_BLOCKS)): block SIZE
-# is fixed (the block-max literature's shape — bounds tighten as the
-# corpus grows, because a small block's max_tf/min_dl describe few
-# docs), with a block-COUNT cap so the serving driver's metadata
-# collect stays ≤ |terms| × MAX_BLOCKS rows at any corpus size. Sizing
-# measured round 18 on the documents fixture (top-20, 3 terms): width 2
-# scores 63 of 2485 blocks at sf0.1 and 23 of 248 at smoke, while
-# width 8 already degenerates to no-prune — per-block maxima over even
-# a handful of docs dominate the top-20 threshold, so blocks must be
-# tiny. Past ~MAX_BLOCKS × DOCS_PER_BLOCK docs the widening cap
-# loosens bounds again — at that scale the survivor selection belongs
-# in a distributed aggregation over per-bucket metadata rather than
-# one driver fold (documented trade; the cap keeps today's path
-# honest, and the fallback is always the still-bucket-pruned exact
-# scan).
-DOCS_PER_BLOCK = 2
-MAX_BLOCKS = 4096
-
-# Access-path gate for the WAND serve (see search_postings_index_wand):
-# below this total postings volume the exact bucket scan is cheaper than
-# the prune's two fixed extra driver passes. Parameterized per deployment;
-# the default is derived from measured fixed costs (~1-1.5 s of driver
-# passes vs a vectorized scan rate of tens of millions of postings/s),
-# not from any local core count.
-_WAND_MIN_TOTAL_DL_DEFAULT = 50_000_000
-
-
-def _wand_min_total_dl() -> int:
-    raw = os.environ.get("SPARK_GRAFT_WAND_MIN_TOTAL_DL")
-    if raw is None:
-        return _WAND_MIN_TOTAL_DL_DEFAULT
-    try:
-        return int(raw)
-    except ValueError:
-        warnings.warn(
-            f"SPARK_GRAFT_WAND_MIN_TOTAL_DL={raw!r} is not an integer; "
-            f"using the default {_WAND_MIN_TOTAL_DL_DEFAULT}",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return _WAND_MIN_TOTAL_DL_DEFAULT
-
-
-WAND_MIN_TOTAL_DL = _wand_min_total_dl()
 
 # Completion-marker discipline (ADVICE r8): shared with every persisted
 # index family since r10 — the canonical definitions live in
@@ -140,14 +84,13 @@ def build_postings_index(
       file per bucket, not tasks×buckets small files — the small-file
       problem is the classic index-build failure at scale);
     - ``terms/`` — (term, df) per term, same bucketing;
-    - ``blocks/`` — per (term, doc-id block) block-max skip metadata
-      (``_write_blocks_meta``), same bucketing;
-    - ``stats/`` — the 1-row (n_docs, total_dl, avgdl, block_width)
-      corpus scalars.
+    - ``positions/`` — (term, doc_id, positions) for phrase search, same
+      bucketing and sort;
+    - ``stats/`` — the 1-row (n_docs, total_dl, avgdl) corpus scalars.
 
     One corpus scan feeds all four (the tokenized projection is reused;
-    postings aggregate (term, doc) once, df and block metadata fold the
-    postings, stats fold the docs). Incremental maintenance at scale
+    postings aggregate (term, doc) once, df folds the postings, stats
+    fold the docs). Incremental maintenance at scale
     composes with sources/versioned.py: re-index changed docs' buckets
     from a CDC diff.
     """
@@ -182,20 +125,14 @@ def _build_postings_relations(toks, index_dir: str, n_buckets: int) -> None:
     # total_dl is stored alongside so the stats row is incrementally
     # maintainable (update_postings_index adds/subtracts per-doc lengths);
     # avgdl is derived but persisted for the read path's convenience.
-    # block_width fixes the global doc-id → block mapping for the life of
-    # the index (maintenance preserves it; a different corpus would pick
-    # a different width, which is why rebuild-equality checks compare
-    # postings content, not block metadata).
     stats = toks.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.size("__t")).cast("long").alias("total_dl"),
         F.avg(F.size("__t")).alias("avgdl"),
-        F.max("doc_id").cast("long").alias("__max_id"),
     ).first()
-    width = max(DOCS_PER_BLOCK, int(stats["__max_id"] or 0) // MAX_BLOCKS + 1)
     toks.sparkSession.createDataFrame(
-        [(stats["n_docs"], stats["total_dl"], stats["avgdl"], width)],
-        "n_docs long, total_dl long, avgdl double, block_width long",
+        [(stats["n_docs"], stats["total_dl"], stats["avgdl"])],
+        "n_docs long, total_dl long, avgdl double",
     ).write.mode("overwrite").parquet(os.path.join(index_dir, "stats"))
     postings = (
         toks.select(
@@ -206,25 +143,24 @@ def _build_postings_relations(toks, index_dir: str, n_buckets: int) -> None:
         .withColumn("bucket", _term_bucket_col(F.col("term"), n_buckets))
     )
     # sorted within each bucket partition by (term, doc_id) so parquet
-    # row-group min/max stats make a (term IN ..., doc_id range) filter
-    # an actual skip — the pruned search's survivor-block ranges ride it
+    # row-group min/max stats make the searches' pushed term IN-filter
+    # an actual skip inside each bucket file
     postings.repartition("bucket").sortWithinPartitions(
         "term", "doc_id"
     ).write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(index_dir, "postings")
     )
-    # df + block-max metadata fold the just-written postings (re-read
-    # beats recompute: the scan is columnar and already bucket-partitioned)
-    written = read_postings(toks.sparkSession, index_dir)
+    # df folds the just-written postings (re-read beats recompute: the
+    # scan is columnar and already bucket-partitioned)
     (
-        written.groupBy("bucket", "term")
+        read_postings(toks.sparkSession, index_dir)
+        .groupBy("bucket", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
         .repartition("bucket")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(index_dir, "terms"))
     )
-    _write_blocks_meta(written, index_dir, width)
     # positions/ — the phrase-search relation: per (term, doc), the
     # sorted 0-based token positions. Same bucketing/sorting as
     # postings/ so a phrase query's read is the same pruned seek; one
@@ -240,33 +176,6 @@ def _build_postings_relations(toks, index_dir: str, n_buckets: int) -> None:
         .partitionBy("bucket")
         .parquet(os.path.join(index_dir, "positions"))
     )
-
-
-def _write_blocks_meta(
-    postings: DataFrame, index_dir: str, width: int, dynamic: bool = False
-) -> None:
-    """(bucket, term, block, max_tf, min_dl, n_postings) — the block-max
-    skip metadata (Broder et al. WAND / Ding & Suel block-max): per
-    (term, global doc-id block), the ingredients of a per-block score
-    upper bound. Only monotone ingredients are stored (BM25 term score
-    rises with tf, falls with dl), so the bound survives corpus-stat
-    drift — idf/avgdl are applied at query time from the live terms/ and
-    stats/ relations. ≤ |vocab-bucket| × blocks rows per bucket (blocks
-    ≤ MAX_BLOCKS by the width formula)."""
-    w = (
-        postings.withColumn("block", (F.col("doc_id") / width).cast("long"))
-        .groupBy("bucket", "term", "block")
-        .agg(
-            F.max("tf").cast("long").alias("max_tf"),
-            F.min("dl").cast("int").alias("min_dl"),
-            F.count(F.lit(1)).cast("long").alias("n_postings"),
-        )
-        .repartition("bucket")
-        .write.mode("overwrite")
-    )
-    if dynamic:
-        w = w.option("partitionOverwriteMode", "dynamic")
-    w.partitionBy("bucket").parquet(os.path.join(index_dir, "blocks"))
 
 
 def _doc_id_type(index_dir: str) -> str:
@@ -292,18 +201,6 @@ def read_terms(spark: SparkSession, index_dir: str) -> DataFrame:
         spark,
         os.path.join(index_dir, "terms"),
         "bucket int, term string, df long",
-    )
-
-
-def read_blocks(spark: SparkSession, index_dir: str) -> DataFrame:
-    from data_warehouse_product_mix_clustering_spark.operators.ivm import read_index_relation
-
-    return read_index_relation(
-        spark,
-        os.path.join(index_dir, "blocks"),
-        # partition column LAST, matching the inferred non-empty layout
-        "term string, block long, max_tf long, min_dl int, "
-        "n_postings long, bucket int",
     )
 
 
@@ -386,29 +283,14 @@ def search_phrase(
 
 
 def _bm25_term_score(k1: float, b: float):
-    """The single BM25 per-posting score expression — shared by the full
-    scan, the seed pass, and the survivor pass so indexed, pruned, and
-    ad-hoc retrieval stay value-identical by construction."""
+    """The single BM25 per-posting score expression — shared by the
+    single and batch searches so indexed and ad-hoc retrieval stay
+    value-identical by construction."""
     idf = F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
     return (
         idf
         * (F.col("tf") * (k1 + 1))
         / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-
-
-def _score_postings(
-    post: DataFrame, tdf: DataFrame, stats: DataFrame, k1: float, b: float
-) -> DataFrame:
-    return (
-        post.join(F.broadcast(tdf), "term")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.sum(_bm25_term_score(k1, b)) + F.lit(1e-9), 6).alias(
-                "bm25"
-            )
-        )
     )
 
 
@@ -453,242 +335,17 @@ def search_postings_index(
     stats = spark.read.parquet(os.path.join(index_dir, "stats")).select(
         "n_docs", "avgdl"
     )
-    scored = _score_postings(post, tdf, stats, k1, b)
+    scored = (
+        post.join(F.broadcast(tdf), "term")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(
+            F.round(F.sum(_bm25_term_score(k1, b)) + F.lit(1e-9), 6).alias(
+                "bm25"
+            )
+        )
+    )
     return scored.orderBy(F.col("bm25").desc(), "doc_id").limit(top_k)
-
-
-def search_postings_index_wand(
-    spark: SparkSession,
-    index_dir: str,
-    terms: tuple[str, ...],
-    k1: float = 1.2,
-    b: float = 0.75,
-    top_k: int = 20,
-    n_buckets: int = DEFAULT_BUCKETS,
-    min_total_dl: int | None = None,
-) -> DataFrame:
-    """Block-max WAND top-k over the postings index: EXACTLY the
-    ``search_postings_index`` result, reading only the doc-id blocks
-    whose score upper bound can still reach the top-k threshold.
-
-    The distributed re-expression of WAND's skip pointers (Broder et
-    al. 2003; block-max variant Ding & Suel 2011): instead of a
-    sequential cursor walk, two set-shaped passes —
-
-    1. SEED: from the tiny blocks/ metadata (query buckets only) compute
-       each block's joint upper bound UBΣ(B) = Σ_terms UB(term, B),
-       where UB = idf · σ(max_tf, min_dl) with σ the BM25 term score
-       (monotone ↑tf, ↓dl, so σ(max_tf, min_dl) dominates every member
-       posting; idf/avgdl come from the LIVE terms//stats/ relations, so
-       bounds stay valid under CDC maintenance). Exactly score the
-       highest-UBΣ blocks holding ≥ max(4·top_k, 64) postings. Blocks
-       are GLOBAL doc-id ranges, so every seed doc is scored COMPLETELY
-       — the k-th seed score θ is a true lower bound on the final k-th
-       score.
-    2. PRUNE + FINISH: exactly score only blocks with UBΣ ≥ θ − 1e-6
-       (the margin covers the +1e-9/6-dp rounding nudge); every other
-       block's docs score strictly below θ and cannot enter the top-k,
-       ties included. Survivor blocks land as merged doc_id RANGE
-       predicates next to the term filter, so parquet row-group min/max
-       stats skip the pruned blocks' bytes inside each bucket file (the
-       build sorts by (term, doc_id) for exactly this) — on top of the
-       bucket partition prune both passes already have.
-
-    Driver state is bounded by construction: ≤ |terms| df rows, ≤
-    |terms| × MAX_BLOCKS block-meta rows, top_k seed scores. Falls
-    back to the unpruned search for a pre-block-metadata index layout.
-
-    Cost-based access-path gate (optimization r19, VERDICT r18 #4):
-    the prune's benefit is the postings bytes it skips; its fixed cost
-    is two extra driver passes (metadata collect + seed scoring) before
-    the final scoring job. Both passes are already bucket-partition-
-    pruned, so on an index whose TOTAL postings volume is small the
-    exact single-job scan reads everything the prune would protect for
-    less than the prune's own launch cost — measured at sf0.1 AND at a
-    4× corpus: exact 0.58-0.61 s vs WAND 2.1-3.6 s, because a
-    3-term bucket scan is a few MB at any locally reachable SF. The
-    stats row's ``total_dl`` (Σ document lengths ≈ postings rows) is
-    the always-available volume proxy: below ``wand_min_total_dl``
-    (default 5e7 ≈ hundreds of MB of postings, the point where a
-    bucket scan stops being launch-dominated; override via
-    ``$SPARK_GRAFT_WAND_MIN_TOTAL_DL`` per deployment) the serve
-    routes through the exact scan — identical rows either way (both
-    paths are exact; equality pinned by tests and the WAND audit,
-    which exercises the prune machinery directly regardless of this
-    gate). ``min_total_dl`` overrides the module default (0 forces the
-    prune path — tests and the equality sweep use it).
-    """
-    if not terms:
-        raise ValueError(
-            "search_postings_index_wand requires at least one query term"
-        )
-    if not index_is_committed(index_dir):
-        raise RuntimeError(
-            f"postings index at {index_dir!r} has no {COMMIT_MARKER} marker "
-            "(torn build/update) — rebuild it before serving searches"
-        )
-    if not os.path.exists(os.path.join(index_dir, "blocks")):
-        return search_postings_index(
-            spark, index_dir, terms, k1, b, top_k, n_buckets
-        )
-    gate = WAND_MIN_TOTAL_DL if min_total_dl is None else min_total_dl
-    total_dl = int(
-        spark.read.parquet(os.path.join(index_dir, "stats")).first()["total_dl"]
-    )
-    if total_dl < gate:
-        return search_postings_index(
-            spark, index_dir, terms, k1, b, top_k, n_buckets
-        )
-    df_, info = _wand_survivor_postings(
-        spark, index_dir, terms, k1, b, top_k, n_buckets
-    )
-    return df_
-
-
-def _wand_survivor_postings(
-    spark: SparkSession,
-    index_dir: str,
-    terms: tuple[str, ...],
-    k1: float,
-    b: float,
-    top_k: int,
-    n_buckets: int,
-) -> tuple[DataFrame, dict]:
-    """(top-k DataFrame, prune receipt) — the WAND core; the receipt
-    {'blocks_total', 'blocks_seed', 'blocks_scored'} feeds the audit."""
-    import math
-
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
-    # ONE driver job for all three metadata relations (guide §5 driver
-    # consolidation; VERDICT r18 #4: the serve's fixed cost was four job
-    # launches before any scoring — stats .first(), the df collect, and
-    # the block-meta collect each paid their own). The 1-row stats, the
-    # ≤|terms| df rows, and the ≤|terms|×MAX_BLOCKS block rows are tagged,
-    # cast onto one (kind, term, x1..x4) shape, unioned, and collected in
-    # a single action; the longs round-trip through double exactly (all
-    # far below 2^53). Driver state stays bounded exactly as before.
-    stats_src = spark.read.parquet(os.path.join(index_dir, "stats")).select(
-        F.lit("stats").alias("kind"),
-        F.lit(None).cast("string").alias("term"),
-        F.col("n_docs").cast("double").alias("x1"),
-        F.col("avgdl").alias("x2"),
-        F.col("block_width").cast("double").alias("x3"),
-        F.lit(0.0).alias("x4"),
-    )
-    terms_src = (
-        read_terms(spark, index_dir)
-        .filter(F.col("bucket").isin(buckets) & F.col("term").isin(*terms))
-        .select(
-            F.lit("term").alias("kind"),
-            "term",
-            F.col("df").cast("double").alias("x1"),
-            F.lit(0.0).alias("x2"),
-            F.lit(0.0).alias("x3"),
-            F.lit(0.0).alias("x4"),
-        )
-    )
-    blocks_src = (
-        read_blocks(spark, index_dir)
-        .filter(F.col("bucket").isin(buckets) & F.col("term").isin(*terms))
-        .select(
-            F.lit("block").alias("kind"),
-            "term",
-            F.col("block").cast("double").alias("x1"),
-            F.col("max_tf").cast("double").alias("x2"),
-            F.col("min_dl").cast("double").alias("x3"),
-            F.col("n_postings").cast("double").alias("x4"),
-        )
-    )
-    collected = stats_src.unionByName(terms_src).unionByName(blocks_src).collect()
-    srow = next(r for r in collected if r["kind"] == "stats")
-    n_docs, avgdl, width = int(srow["x1"]), srow["x2"], int(srow["x3"])
-    term_df = {r["term"]: int(r["x1"]) for r in collected if r["kind"] == "term"}
-    # The scoring joins read tdf/stats from parquet (same tiny relations
-    # the exact search broadcasts), NOT from driver-local rebuilds:
-    # measured at sf0.1, a python-local relation on the scoring path
-    # costs +0.2-0.6 s per job (local-to-JVM conversion defeats the
-    # cheap parquet-broadcast plan), twice what the folded collect saves.
-    stats = spark.read.parquet(os.path.join(index_dir, "stats")).select(
-        "n_docs", "avgdl"
-    )
-    tdf = (
-        read_terms(spark, index_dir)
-        .filter(F.col("bucket").isin(buckets) & F.col("term").isin(*terms))
-        .select("term", "df")
-    )
-    idf = {
-        t: math.log(1 + (n_docs - d + 0.5) / (d + 0.5))
-        for t, d in term_df.items()
-    }
-    meta = [
-        {
-            "term": r["term"],
-            "block": int(r["x1"]),
-            "max_tf": int(r["x2"]),
-            "min_dl": int(r["x3"]),
-            "n_postings": int(r["x4"]),
-        }
-        for r in collected
-        if r["kind"] == "block"
-    ]
-    if not meta:
-        empty = _score_postings(
-            read_postings(spark, index_dir).filter(F.lit(False)), tdf, stats,
-            k1, b,
-        )
-        return empty.orderBy(F.col("bm25").desc(), "doc_id").limit(top_k), {
-            "blocks_total": 0, "blocks_seed": 0, "blocks_scored": 0,
-            "ub": {}, "width": width,
-        }
-
-    ub: dict[int, float] = {}
-    n_post: dict[int, int] = {}
-    for r in meta:
-        sigma = (r["max_tf"] * (k1 + 1)) / (
-            r["max_tf"] + k1 * (1 - b + b * r["min_dl"] / avgdl)
-        )
-        ub[r["block"]] = ub.get(r["block"], 0.0) + idf[r["term"]] * sigma
-        n_post[r["block"]] = n_post.get(r["block"], 0) + r["n_postings"]
-
-    def scored_over(blocks: list[int]) -> DataFrame:
-        post = read_postings(spark, index_dir).filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(*terms)
-        )
-        if len(blocks) < len(ub):  # only filter when it actually prunes
-            post = post.filter(_block_range_pred(blocks, width))
-        return _score_postings(post, tdf, stats, k1, b)
-
-    by_ub = sorted(ub, key=lambda blk: (-ub[blk], blk))
-    need, got, seed = max(4 * top_k, 64), 0, []
-    for blk in by_ub:
-        if got >= need:
-            break
-        seed.append(blk)
-        got += n_post[blk]
-    seed_rows = (
-        scored_over(seed)
-        .orderBy(F.col("bm25").desc(), "doc_id")
-        .limit(top_k)
-        .collect()
-    )
-    theta = seed_rows[-1]["bm25"] if len(seed_rows) == top_k else None
-    survivors = (
-        list(ub)
-        if theta is None
-        else [blk for blk in ub if ub[blk] >= theta - 1e-6]
-    )
-    out = (
-        scored_over(survivors)
-        .orderBy(F.col("bm25").desc(), "doc_id")
-        .limit(top_k)
-    )
-    return out, {
-        "blocks_total": len(ub),
-        "blocks_seed": len(seed),
-        "blocks_scored": len(survivors),
-        "ub": ub,  # per-block joint upper bounds — the audit's soundness probe
-        "width": width,
-    }
 
 
 def search_postings_index_batch(
@@ -764,29 +421,6 @@ def search_postings_index_batch(
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= top_k)
         .select("qid", "doc_id", "bm25", "rank")
-    )
-
-
-def _block_range_pred(blocks: list[int], width: int):
-    """Survivor blocks as merged doc_id range predicates — contiguous
-    blocks collapse into one BETWEEN, so the parquet pushdown sees a
-    short OR-of-ranges over the file-sort column, not a giant IN."""
-    from functools import reduce
-    from operator import or_
-
-    ranges = []
-    for blk in sorted(blocks):
-        lo, hi = blk * width, (blk + 1) * width - 1
-        if ranges and ranges[-1][1] == lo - 1:
-            ranges[-1][1] = hi
-        else:
-            ranges.append([lo, hi])
-    return reduce(
-        or_,
-        [
-            (F.col("doc_id") >= lo) & (F.col("doc_id") <= hi)
-            for lo, hi in ranges
-        ],
     )
 
 
@@ -879,7 +513,7 @@ def update_postings_index(
         updated = survivors.select("term", id_col, "dl", "tf", "bucket").unionByName(
             new_postings.select("term", id_col, "dl", "tf", "bucket")
         )
-        updated = updated.localCheckpoint(eager=True)  # feeds 3 writes + dir diff
+        updated = updated.localCheckpoint(eager=True)  # feeds 2 writes + dir diff
         (
             updated.repartition("bucket")
             .sortWithinPartitions("term", id_col)
@@ -932,24 +566,9 @@ def update_postings_index(
                 .partitionBy("bucket")
                 .parquet(os.path.join(index_dir, "positions"))
             )
-        # block-max metadata rides the same touched-bucket rewrite; the
-        # block width is FIXED at build (stats sidecar) so maintained
-        # bounds keep addressing the same doc-id ranges. A legacy index
-        # without blocks/ stays legacy (the WAND search falls back).
-        if os.path.exists(os.path.join(index_dir, "blocks")):
-            width = int(
-                spark.read.parquet(os.path.join(index_dir, "stats"))
-                .first()["block_width"]
-            )
-            _write_blocks_meta(
-                updated.withColumnRenamed(id_col, "doc_id"),
-                index_dir,
-                width,
-                dynamic=True,
-            )
         nonempty = {r.bucket for r in updated.select("bucket").distinct().collect()}
         for b in set(touched) - nonempty:
-            for rel in ("postings", "terms", "blocks", "positions"):
+            for rel in ("postings", "terms", "positions"):
                 shutil.rmtree(
                     os.path.join(index_dir, rel, f"bucket={b}"), ignore_errors=True
                 )
@@ -963,15 +582,9 @@ def update_postings_index(
     )
     n_docs = old_stats["n_docs"] + counts.get("added", 0) - counts.get("removed", 0)
     total_dl = old_stats["total_dl"] + (delta["ddl"] or 0)
-    # block_width is immutable for the life of the index (the block-max
-    # metadata addresses doc-id ranges in its units); legacy pre-block
-    # stats rows carry it forward as NULL.
-    width = (
-        old_stats["block_width"] if "block_width" in old_stats.__fields__ else None
-    )
     spark.createDataFrame(
-        [(n_docs, total_dl, (total_dl / n_docs) if n_docs else None, width)],
-        "n_docs long, total_dl long, avgdl double, block_width long",
+        [(n_docs, total_dl, (total_dl / n_docs) if n_docs else None)],
+        "n_docs long, total_dl long, avgdl double",
     ).write.mode("overwrite").parquet(os.path.join(index_dir, "stats"))
     # No explicit unpersist: Dataset.unpersist does NOT release
     # localCheckpoint blocks (review r11); d releases via ContextCleaner

@@ -1017,14 +1017,13 @@ def search_ivfpq_index(
 #
 # Re-clustering is deliberately NOT maintenance: added vectors assign to
 # the FROZEN centroids (and, for PQ, encode with the FROZEN sub-codebooks).
-# The drift criterion is returned on every update: once
-# cumulative_changes / base_n exceeds ~0.3 the frozen codebook no longer
-# represents the corpus (cells skew, recall decays) — rebuild. That number
-# rides _maint.json so the caller needs no external bookkeeping.
+# The drift is returned on every update: once cumulative_changes / base_n
+# exceeds ~0.3 the frozen codebook no longer represents the corpus (cells
+# skew, recall decays), so the caller should rebuild. That number rides
+# _maint.json so the caller needs no external bookkeeping.
 # ---------------------------------------------------------------------------
 
 _MAINT_META = "_maint.json"
-REBUILD_DRIFT = 0.3
 
 
 def _write_maint_meta(
@@ -1156,9 +1155,10 @@ def update_ivf_index(
     leaves a detectable torn index, and a torn index refuses further
     maintenance (rebuild recovers it).
 
-    Returns {'added','removed','changed','cells_touched','drift'}; when
-    ``drift`` (cumulative changed rows / built corpus size) exceeds
-    ``REBUILD_DRIFT`` the frozen codebook is stale — rebuild instead.
+    Returns {'added','removed','changed','cells_touched','drift'}, where
+    ``drift`` is cumulative changed rows / built corpus size. Whether to
+    rebuild is the caller's decision (past ~0.3 the frozen codebook is
+    stale, see the block comment above).
     """
     import os
 
@@ -1220,7 +1220,8 @@ def update_ivfpq_index(
     ``_pq_encode`` kernel as the build), and both ``cells/`` (codes) and
     ``vectors/`` (raw, cell-partitioned since r10) rewrite only their
     touched cell partitions. ``centers/`` and ``pq/`` are frozen by
-    definition — re-clustering is a rebuild (see ``REBUILD_DRIFT``).
+    definition — re-clustering is a rebuild, which the caller decides
+    from the returned ``drift``.
     """
     import os
 

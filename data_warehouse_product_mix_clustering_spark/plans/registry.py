@@ -125,17 +125,17 @@ _DRIVER_PRIORITY: list[str] = [
     "pivot_category_priority",
     "quarterly_running_revenue",
     # ---- window boundary ----
-    # Round-20 rotation order (pre-decided): the three r18-registered
-    # names without a driver row yet (bm25_wand_prune_audit,
-    # doc_bm25_batch_search, doc_phrase_search — pytest- + sweep-gated
-    # meanwhile) lead, then the four r14-cohort leftovers
-    # (quarterly_sequences, returnflag_priority_split, sequence_arrays,
-    # sequence_embeddings), then the first 43 of the 50 r15-cohort names
-    # in r15-window order (through product_pagination) — 3 + 4 + 43 fill
-    # the 50 slots exactly; (product_search, promo_revenue_pct,
-    # quarter_rollup, recent_activity, returnflag_stats,
-    # revenue_grouping_sets, semi_join_large_parts) lead r21's window.
-    "bm25_wand_prune_audit",
+    # Round-20 rotation order (pre-decided): the two r18-registered
+    # names without a driver row yet (doc_bm25_batch_search,
+    # doc_phrase_search — pytest- + sweep-gated meanwhile) lead, then the
+    # four r14-cohort leftovers (quarterly_sequences,
+    # returnflag_priority_split, sequence_arrays, sequence_embeddings),
+    # then the first 43 of the 50 r15-cohort names in r15-window order
+    # (through product_pagination) — 2 + 4 + 43 fill 49 of the 50 slots,
+    # and the 50th falls to the first unlisted query in registration
+    # order; (product_search, promo_revenue_pct, quarter_rollup,
+    # recent_activity, returnflag_stats, revenue_grouping_sets,
+    # semi_join_large_parts) lead r21's window.
     "doc_bm25_batch_search",
     "doc_phrase_search",
     "quarterly_sequences",

@@ -583,8 +583,8 @@ def ann_index_incremental_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``torn_index_refused``: maintenance refuses an index whose commit
       marker is missing (crash-mid-update detectability);
     - ``drift_exact``: the returned drift equals
-      cumulative_changes / built_corpus_size (70/400) — the documented
-      rebuild criterion (``REBUILD_DRIFT``).
+      cumulative_changes / built_corpus_size (70/400) — the number the
+      caller decides a rebuild from.
     """
     import os
     import shutil

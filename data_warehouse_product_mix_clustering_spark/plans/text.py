@@ -939,30 +939,16 @@ def doc_bm25_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``doc_bm25_search``, sharing its oracle verbatim: same query, same
     scores, same ranks, but the retrieval reads only the query terms'
     bucket partitions (PartitionFilters-pinned in test_plans.py) instead
-    of re-tokenizing the corpus — and, since round 18, only the doc-id
-    blocks whose block-max score upper bound can still reach the top-20
-    threshold (``search_postings_index_wand``: the WAND prune, exact by
-    construction, gated by ``bm25_wand_prune_audit`` and pinned by a
-    PushedFilters doc_id-range plan test).
-
-    Since round 19 the serve is COST-GATED (VERDICT r18 #4): on an index
-    whose total postings volume cannot amortize the prune's two fixed
-    extra driver passes (measured: exact bucket scan 0.58-0.61 s vs WAND
-    2.1-3.6 s at sf0.1 AND at a 4× corpus — the bucket partition prune
-    already bounds the exact scan at locally reachable SFs), the wall
-    router serves the identical result through the single-job exact
-    scan; past ``WAND_MIN_TOTAL_DL`` postings the block prune engages.
-    The prune machinery itself stays attested by the audit and the
-    forced-path tests regardless of the gate.
+    of re-tokenizing the corpus, in one exact scoring job.
 
     The index builds once per (session, corpus) — the search-service
     shape, where build cost amortizes over every query — and the seek
-    itself is O(surviving blocks' postings) bytes at any corpus size.
+    itself is O(query-term postings) bytes at any corpus size.
     """
-    from data_warehouse_product_mix_clustering_spark.operators.postings import search_postings_index_wand
+    from data_warehouse_product_mix_clustering_spark.operators.postings import search_postings_index
 
     idx = _postings_index_for(spark, sf_dir)
-    top = search_postings_index_wand(
+    top = search_postings_index(
         spark, idx, _BM25_TERMS, k1=_BM25_K1, b=_BM25_B, top_k=20
     )
     w = Window.orderBy(F.col("bm25").desc(), "doc_id")
@@ -1182,92 +1168,6 @@ def doc_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _postings_index_for(spark, sf_dir)
     return search_phrase(spark, idx, _PHRASE).orderBy(
         F.col("n_occurrences").desc(), "doc_id"
-    )
-
-
-@register(
-    "bm25_wand_prune_audit",
-    oracle="""
-        SELECT CAST(20 AS BIGINT) AS k,
-               TRUE AS matches_exact,
-               TRUE AS prune_bites,
-               TRUE AS bounds_sound
-    """,
-)
-def bm25_wand_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract audit for the block-max WAND prune behind
-    ``doc_bm25_indexed_search`` (operators/postings.py::
-    search_postings_index_wand — Broder et al. 2003; Ding & Suel 2011):
-
-    - ``k`` / ``matches_exact``: the pruned top-20 equals the unpruned
-      index scan (doc for doc, 6-dp score for score) — the prune is a
-      pure I/O optimization, rank-inert by construction; the shared
-      ``doc_bm25_search`` oracle already pins both against DuckDB;
-    - ``prune_bites``: strictly fewer doc-id blocks survive the
-      threshold than exist for the query terms — the skip does real
-      work on this corpus, not just in theory;
-    - ``bounds_sound``: for EVERY block, the true maximum per-doc BM25
-      score inside it (ground truth: the full unpruned per-doc scores,
-      bounded at audit SF — the family's bounded-audit convention) sits
-      at or below the block's advertised joint upper bound UBΣ — the
-      monotonicity argument (term score rises with tf, falls with dl)
-      checked against the engine, not assumed. An unsound bound is the
-      one failure mode that silently DROPS true top-k members; this
-      boolean makes it loud.
-
-    Scale: the audit's ground-truth full scan is audit-SF-bounded; the
-    serving path it gates reads ≤ |terms| df rows + |terms| × MAX_BLOCKS
-    block-meta rows on the driver and only surviving blocks' bytes on
-    the executors."""
-    from data_warehouse_product_mix_clustering_spark.operators.postings import (
-        _score_postings,
-        _wand_survivor_postings,
-        read_postings,
-        read_terms,
-        search_postings_index,
-        term_bucket_py,
-    )
-
-    idx = _postings_index_for(spark, sf_dir)
-    pruned_df, info = _wand_survivor_postings(
-        spark, idx, _BM25_TERMS, _BM25_K1, _BM25_B, 20, 64
-    )
-    pruned = [(r["doc_id"], r["bm25"]) for r in pruned_df.collect()]
-    exact = [
-        (r["doc_id"], r["bm25"])
-        for r in search_postings_index(
-            spark, idx, _BM25_TERMS, k1=_BM25_K1, b=_BM25_B, top_k=20
-        ).collect()
-    ]
-    matches_exact = pruned == exact
-    prune_bites = info["blocks_scored"] < info["blocks_total"]
-
-    # bounds soundness: true per-block max score vs the advertised UBΣ
-    buckets = sorted({term_bucket_py(t) for t in _BM25_TERMS})
-    post = read_postings(spark, idx).filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(*_BM25_TERMS)
-    )
-    tdf = (
-        read_terms(spark, idx)
-        .filter(F.col("bucket").isin(buckets) & F.col("term").isin(*_BM25_TERMS))
-        .select("term", "df")
-    )
-    stats = spark.read.parquet(os.path.join(idx, "stats")).select(
-        "n_docs", "avgdl"
-    )
-    block_max = (
-        _score_postings(post, tdf, stats, _BM25_K1, _BM25_B)
-        .groupBy((F.col("doc_id") / info["width"]).cast("long").alias("block"))
-        .agg(F.max("bm25").alias("true_max"))
-        .collect()  # bounded: ≤ blocks_total ≤ MAX_BLOCKS rows (width cap)
-    )
-    bounds_sound = all(
-        r["true_max"] <= info["ub"][r["block"]] + 1e-6 for r in block_max
-    )
-    return spark.createDataFrame(
-        [(len(pruned), matches_exact, prune_bites, bounds_sound)],
-        "k long, matches_exact boolean, prune_bites boolean, "
-        "bounds_sound boolean",
     )
 
 

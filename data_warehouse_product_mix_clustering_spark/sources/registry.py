@@ -1,8 +1,8 @@
 """Testdata registry: load the driver's parquet tables as DataFrames/views.
 
 Scans are plain ``spark.read.parquet`` so Catalyst gets full predicate
-pushdown + column pruning; no schema is forced on read (parquet carries it),
-but the expected schemas live in ``schemas.py`` for validation.
+pushdown + column pruning; no schema is forced on read (parquet carries it);
+tests/test_schemas.py pins the expected column types against the testdata.
 """
 
 from __future__ import annotations

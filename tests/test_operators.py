@@ -975,8 +975,11 @@ def test_zorder_api_contract_and_minmax_mode(spark, tmp_path):
 
 def test_postings_index_incremental_update(spark, tmp_path):
     """update_postings_index applies adds/changes/removes from a CDC diff
-    and leaves the index identical to a full rebuild — including clearing
-    a bucket directory whose every posting belonged to a removed doc."""
+    and leaves the index identical to a full rebuild — postings, terms,
+    positions and stats, and the exact and phrase serves over them —
+    including clearing a bucket directory whose every posting belonged
+    to a removed doc. Both indexes hold exactly the four relations, and
+    stats/ only the corpus scalars."""
     import os
 
     from pyspark.sql import functions as F
@@ -984,7 +987,10 @@ def test_postings_index_incremental_update(spark, tmp_path):
     from data_warehouse_product_mix_clustering_spark.functions.text import tokens
     from data_warehouse_product_mix_clustering_spark.operators.postings import (
         build_postings_index,
+        read_positions,
         read_postings,
+        search_phrase,
+        search_postings_index,
         term_bucket_py,
         update_postings_index,
     )
@@ -1030,36 +1036,35 @@ def test_postings_index_incremental_update(spark, tmp_path):
     sr = spark.read.parquet(os.path.join(rebuilt, "stats")).first()
     assert (sm["n_docs"], sm["total_dl"]) == (sr["n_docs"], sr["total_dl"]) == (3, 7)
     assert abs(sm["avgdl"] - sr["avgdl"]) < 1e-12
+    pm, pr = read_positions(spark, maintained), read_positions(spark, rebuilt)
+    assert pm.exceptAll(pr).isEmpty() and pr.exceptAll(pm).isEmpty()
+    for d in (maintained, rebuilt):
+        assert {"postings", "terms", "positions", "stats"} <= set(os.listdir(d))
+        assert "blocks" not in os.listdir(d)
+        assert spark.read.parquet(os.path.join(d, "stats")).columns == [
+            "n_docs", "total_dl", "avgdl"
+        ]
+
+    def served(idx):
+        return (
+            [tuple(r) for r in search_postings_index(spark, idx, ("alpha", "delta")).collect()],
+            [tuple(r) for r in search_phrase(spark, idx, ("alpha", "beta")).collect()],
+            [tuple(r) for r in search_phrase(spark, idx, ("beta", "delta")).collect()],
+        )
+
+    got = served(maintained)
+    assert got == served(rebuilt)
+    assert {d for d, _ in got[0]} == {1, 2, 4}  # alpha: 1, 4; delta: 2
+    assert got[1:] == ([(1, 1)], [(2, 1)])  # the change's phrase arrived
 
     # doc 3's removal emptied zzonlyhere's bucket: its stale partition
-    # dir must be gone, not left to resurrect the deleted posting
-    dead = os.path.join(maintained, "postings", f"bucket={term_bucket_py('zzonlyhere')}")
+    # dirs must be gone, not left to resurrect the deleted posting
     # (guard: the test corpus keeps that bucket exclusive to zzonlyhere)
     others = {term_bucket_py(t) for t in ["alpha", "beta", "gamma", "delta", "epsilon"]}
     assert term_bucket_py("zzonlyhere") not in others
-    assert not os.path.exists(dead)
-
-
-def test_wand_gate_env_malformed_falls_back_to_default(monkeypatch):
-    """A malformed SPARK_GRAFT_WAND_MIN_TOTAL_DL must not break importing
-    operators/postings.py: it warns and keeps the default gate."""
-    import importlib
-
-    from data_warehouse_product_mix_clustering_spark.operators import postings
-
-    default = postings.WAND_MIN_TOTAL_DL
-    try:
-        monkeypatch.setenv("SPARK_GRAFT_WAND_MIN_TOTAL_DL", "5e7")
-        with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_WAND_MIN_TOTAL_DL"):
-            importlib.reload(postings)
-        assert postings.WAND_MIN_TOTAL_DL == 50_000_000
-        monkeypatch.setenv("SPARK_GRAFT_WAND_MIN_TOTAL_DL", "1234")
-        importlib.reload(postings)
-        assert postings.WAND_MIN_TOTAL_DL == 1234
-    finally:
-        monkeypatch.undo()
-        importlib.reload(postings)
-    assert postings.WAND_MIN_TOTAL_DL == default
+    for rel in ("postings", "terms", "positions"):
+        dead = os.path.join(maintained, rel, f"bucket={term_bucket_py('zzonlyhere')}")
+        assert not os.path.exists(dead)
 
 
 def test_postings_index_commit_marker_and_empty_terms(spark, tmp_path):
@@ -4528,203 +4533,35 @@ def test_doc_dsir_weight_matches_independent_python(spark):
     assert not all(sel for *_, sel in want.values())
 
 
-def test_wand_search_exact_and_block_meta_survives_maintenance(spark, tmp_path):
-    """search_postings_index_wand ≡ search_postings_index on an arbitrary
-    corpus, and the block-max metadata stays CONSISTENT with the
-    postings through a CDC update: after update_postings_index, the
-    stored blocks/ relation equals a recomputation from the maintained
-    postings at the index's immutable block width, and the WAND search
-    over the maintained index still matches the unpruned scan. A stale
-    max_tf/min_dl after maintenance is the failure mode that silently
-    drops true top-k docs — this pins it at the operator level (the
-    registered bm25_wand_prune_audit pins the session-index path)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_warehouse_product_mix_clustering_spark.functions.text import tokens
-    from data_warehouse_product_mix_clustering_spark.operators.postings import (
-        build_postings_index,
-        read_blocks,
-        read_postings,
-        search_postings_index,
-        search_postings_index_wand,
-        update_postings_index,
-    )
-    from data_warehouse_product_mix_clustering_spark.sources.versioned import version_diff, write_version
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    base = docs.filter(F.col("doc_id") % 5 != 0)
-    nxt = docs.filter(F.col("doc_id") % 3 != 0).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" dup dup"))
-        ).otherwise(F.col("text")),
-    )
-    tdir = str(tmp_path / "corpus")
-    write_version(base, tdir)
-    write_version(nxt, tdir)
-    idx = str(tmp_path / "idx")
-    build_postings_index(base, idx, tokens(F.col("text")))
-    terms = ("merge", "join", "dup")
-
-    def ranked(df):
-        return [(r.doc_id, r.bm25) for r in df.collect()]
-
-    assert ranked(search_postings_index_wand(spark, idx, terms, min_total_dl=0)) == ranked(
-        search_postings_index(spark, idx, terms)
-    )
-
-    update_postings_index(
-        spark, idx, version_diff(spark, tdir, 0, 1, key=["doc_id"]),
-        lambda c: tokens(c),
-    )
-    width = int(
-        spark.read.parquet(os.path.join(idx, "stats")).first()["block_width"]
-    )
-    recomputed = (
-        read_postings(spark, idx)
-        .withColumn("block", (F.col("doc_id") / width).cast("long"))
-        .groupBy("bucket", "term", "block")
-        .agg(
-            F.max("tf").cast("long").alias("max_tf"),
-            F.min("dl").cast("int").alias("min_dl"),
-            F.count(F.lit(1)).cast("long").alias("n_postings"),
-        )
-    )
-    cols = ["bucket", "term", "block", "max_tf", "min_dl", "n_postings"]
-    stored = read_blocks(spark, idx).select(*cols)
-    recomputed = recomputed.select(*cols)
-    assert stored.exceptAll(recomputed).isEmpty()
-    assert recomputed.exceptAll(stored).isEmpty()
-    assert ranked(search_postings_index_wand(spark, idx, terms, min_total_dl=0)) == ranked(
-        search_postings_index(spark, idx, terms)
-    )
-    # positions/ survives the same CDC cycle: maintained relation equals
-    # a from-scratch rebuild of the new corpus, and the served phrase
-    # counts agree with a direct recount of the new corpus text
-    from data_warehouse_product_mix_clustering_spark.operators.postings import read_positions, search_phrase
-
-    rebuilt = str(tmp_path / "rebuilt")
-    build_postings_index(nxt, rebuilt, tokens(F.col("text")))
-    pcols = ["bucket", "term", "doc_id", "positions"]
-    pm = read_positions(spark, idx).select(*pcols)
-    pr = read_positions(spark, rebuilt).select(*pcols)
-    assert pm.exceptAll(pr).isEmpty() and pr.exceptAll(pm).isEmpty()
-    got_phrase = {
-        r.doc_id: r.n_occurrences
-        for r in search_phrase(spark, idx, ("dup", "dup")).collect()
-    }
-    got_rebuilt = {
-        r.doc_id: r.n_occurrences
-        for r in search_phrase(spark, rebuilt, ("dup", "dup")).collect()
-    }
-    assert got_phrase == got_rebuilt
-    assert got_phrase  # the %7 amendment injected "dup dup" runs
-
-
-def test_wand_falls_back_on_legacy_index_layout(spark, tmp_path):
-    """An index from before the blocks/ relation (simulated: blocks/
-    deleted, stats rewritten to the legacy 3-column row) must still be
-    servable — search_postings_index_wand falls back to the unpruned
-    bucket-pruned scan — and maintainable: update_postings_index skips
-    the blocks rewrite, carries block_width forward as NULL, and the
-    maintained legacy index keeps answering correctly."""
-    import os
-    import shutil
-
+def test_wand_edge_cases_absent_terms_and_large_k(spark, tmp_path):
+    """Exact-serve edge cases of search_postings_index: every query term
+    absent from the corpus gives an empty result (no crash on empty
+    df/postings reads); a mix of present and absent terms scores only
+    the present ones, so it equals the present-only query; and a top_k
+    above the match count returns every match."""
     from pyspark.sql import functions as F
 
     from data_warehouse_product_mix_clustering_spark.functions.text import tokens
     from data_warehouse_product_mix_clustering_spark.operators.postings import (
         build_postings_index,
         search_postings_index,
-        search_postings_index_wand,
-        update_postings_index,
     )
-    from data_warehouse_product_mix_clustering_spark.sources.versioned import version_diff, write_version
 
     docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "beta gamma"), (3, "merge join")],
+        [(1, "alpha beta"), (2, "beta gamma"), (3, "gamma delta")],
         "doc_id long, text string",
     )
     idx = str(tmp_path / "idx")
     build_postings_index(docs, idx, tokens(F.col("text")))
-    shutil.rmtree(os.path.join(idx, "blocks"))
-    legacy = spark.read.parquet(os.path.join(idx, "stats")).select(
-        "n_docs", "total_dl", "avgdl"
-    )
-    legacy.write.mode("overwrite").parquet(os.path.join(idx, "stats_tmp"))
-    shutil.rmtree(os.path.join(idx, "stats"))
-    os.rename(os.path.join(idx, "stats_tmp"), os.path.join(idx, "stats"))
 
-    def ranked(df):
-        return [(r.doc_id, r.bm25) for r in df.collect()]
+    def ranked(terms, **kw):
+        return [
+            (r.doc_id, r.bm25)
+            for r in search_postings_index(spark, idx, terms, **kw).collect()
+        ]
 
-    assert ranked(search_postings_index_wand(spark, idx, ("beta",))) == ranked(
-        search_postings_index(spark, idx, ("beta",))
-    )
-    tdir = str(tmp_path / "corpus")
-    write_version(docs, tdir)
-    write_version(
-        docs.unionByName(
-            spark.createDataFrame([(4, "delta beta")], "doc_id long, text string")
-        ),
-        tdir,
-    )
-    res = update_postings_index(
-        spark, idx, version_diff(spark, tdir, 0, 1, key=["doc_id"]),
-        lambda c: tokens(c),
-    )
-    assert res["added"] == 1
-    assert not os.path.exists(os.path.join(idx, "blocks"))  # stays legacy
-    got = ranked(search_postings_index_wand(spark, idx, ("beta",)))
-    assert got == ranked(search_postings_index(spark, idx, ("beta",)))
-    assert {d for d, _ in got} == {1, 2, 4}
-
-
-def test_wand_edge_cases_absent_terms_and_large_k(spark, tmp_path):
-    """WAND edge branches: every query term absent from the corpus takes
-    the empty-metadata path (typed-empty result, no crash); a mix of
-    present and absent terms scores like the exact scan; top_k beyond
-    the corpus disables the threshold (theta None → all blocks scored)
-    and still returns every match."""
-    from pyspark.sql import functions as F
-
-    from data_warehouse_product_mix_clustering_spark.functions.text import tokens
-    from data_warehouse_product_mix_clustering_spark.operators.postings import (
-        build_postings_index,
-        search_postings_index,
-        search_postings_index_wand,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "beta gamma")], "doc_id long, text string"
-    )
-    idx = str(tmp_path / "idx")
-    build_postings_index(docs, idx, tokens(F.col("text")))
-    assert (
-        search_postings_index_wand(
-            spark, idx, ("zzz", "qqq"), min_total_dl=0
-        ).collect()
-        == []
-    )
-    got = [
-        (r.doc_id, r.bm25)
-        for r in search_postings_index_wand(
-            spark, idx, ("beta", "zzz"), min_total_dl=0
-        ).collect()
-    ]
-    want = [
-        (r.doc_id, r.bm25)
-        for r in search_postings_index(spark, idx, ("beta", "zzz")).collect()
-    ]
-    assert got == want and len(got) == 2
-    assert {
-        r.doc_id
-        for r in search_postings_index_wand(
-            spark, idx, ("beta",), top_k=50, min_total_dl=0
-        ).collect()
-    } == {1, 2}
+    assert ranked(("zzz", "qqq")) == []
+    mixed = ranked(("beta", "zzz"))
+    assert mixed == ranked(("beta",))
+    assert [d for d, _ in mixed] == [1, 2]
+    assert {d for d, _ in ranked(("beta", "gamma"), top_k=50)} == {1, 2, 3}

@@ -727,38 +727,6 @@ def test_bm25_indexed_search_prunes_to_query_buckets(spark):
     assert "In(term, [dup,join,merge])" in plan  # pushdown inside the bucket
 
 
-def test_bm25_wand_prune_pushes_block_ranges(spark):
-    """The WAND serving path's BOTH prunes, plan-pinned (VERDICT r17
-    brief #7): bucket partition pruning AND the survivor-block upper-
-    bound skip, visible as merged doc_id range predicates in the
-    parquet PushedFilters — row-group min/max stats skip the pruned
-    blocks' bytes because the build sorts each bucket by (term,
-    doc_id). Also pins that the prune is real at this SF (fewer blocks
-    scored than exist) via the audit's own receipt."""
-    from data_warehouse_product_mix_clustering_spark.operators.postings import _wand_survivor_postings
-    from data_warehouse_product_mix_clustering_spark.plans.text import (
-        _BM25_B,
-        _BM25_K1,
-        _BM25_TERMS,
-        _postings_index_for,
-    )
-
-    idx = _postings_index_for(spark, SF_SMOKE)
-    df, info = _wand_survivor_postings(
-        spark, idx, _BM25_TERMS, _BM25_K1, _BM25_B, 20, 64
-    )
-    assert 0 < info["blocks_scored"] < info["blocks_total"]
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [bucket#" in plan
-    scan_filters = [l for l in plan.splitlines() if "PushedFilters" in l]
-    assert any(
-        "In(term, [dup,join,merge])" in l
-        and ("Or(" in l or "GreaterThanOrEqual(doc_id" in l)
-        and "doc_id" in l
-        for l in scan_filters
-    ), "\n".join(scan_filters)
-
-
 def test_bm25_batch_search_single_scan_group_limit(spark):
     """The batch search's scale contract, plan-pinned: scoring THREE
     queries takes exactly ONE postings scan (the (qid, term) map
@@ -1399,10 +1367,9 @@ def test_driver_priority_window_composition():
     ]
     assert window[4] == "stream_gated_corpus_audit"  # r14 cohort starts
     assert window[49] == "quarterly_running_revenue"  # 46th r14-cohort name
-    # the pre-decided r20 window leads the tail: the three r18-registered
+    # the pre-decided r20 window leads the tail: the two r18-registered
     # names without a driver row, then the four r14-cohort leftovers
-    assert _DRIVER_PRIORITY[50:57] == [
-        "bm25_wand_prune_audit",
+    assert _DRIVER_PRIORITY[50:56] == [
         "doc_bm25_batch_search",
         "doc_phrase_search",
         "quarterly_sequences",
@@ -1410,8 +1377,8 @@ def test_driver_priority_window_composition():
         "sequence_arrays",
         "sequence_embeddings",
     ]
-    assert _DRIVER_PRIORITY[57] == "training_batches_audit"  # r15 cohort
-    assert len(_DRIVER_PRIORITY) == 100  # r19 window + full r20 window
+    assert _DRIVER_PRIORITY[56] == "training_batches_audit"  # r15 cohort
+    assert len(_DRIVER_PRIORITY) == 99  # r19 window + 2 + 4 + 43 r20 names
     rows_only_in_window = [n for n in window if qs[n].oracle is None]
     assert not rows_only_in_window, rows_only_in_window
 
