@@ -33,11 +33,15 @@ from data_warehouse_product_mix_clustering_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Queries that memoize expensive driver-side state per (session, sf_dir) —
-# today the KMeans fit cache behind product_clusters (plans/ml.py). Their
-# best-of-3 number measures the CACHED read path (the steady-state serving
-# cost, which is what the reference's @st.cache_data dashboard pays too);
-# the bench JSON annotates them as such and reports the first, genuinely
-# cold run separately so rounds compare like with like (VERDICT r7 #3).
+# today the KMeans fit cache behind product_clusters (plans/ml.py), which
+# persists the fitted assignment as one partition, so runs 2-3 read that
+# persisted relation. Their best-of-3 number measures the CACHED read path
+# (the steady-state serving cost, which is what the reference's
+# @st.cache_data dashboard pays too); invalidate_cluster_cache before run 1
+# releases the fit and the Details base published with it, so run 1 still
+# fits cold. The bench JSON annotates them as such and reports the first,
+# genuinely cold run separately so rounds compare like with like (VERDICT
+# r7 #3).
 CACHED_FIT = {"product_clusters"}
 
 # Headline queries that start from a session-shared persisted relation

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_warehouse_product_mix_clustering_spark import state
+from data_warehouse_product_mix_clustering_spark.etl.star_schema import dim_product
 from data_warehouse_product_mix_clustering_spark.functions.numeric import ratio_round, sql_ratio_round
 from data_warehouse_product_mix_clustering_spark.ml.pipelines import (
     assign_vectors,
@@ -85,10 +86,46 @@ def features_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def invalidate_cluster_cache(sf_dir: str | None = None) -> None:
-    """Drop cached fitted clusterings for one sf_dir (or all), with the
-    persisted ``cluster_profile`` answer, the one served result that reads
-    the fit. The other served results do not depend on it and stay."""
+    """Drop cached fitted clusterings for one sf_dir (or all): the fit,
+    the Product Details base published with it and the persisted
+    ``cluster_profile`` answer, the one served result that reads the fit.
+    The other served results do not depend on it and stay."""
     state.invalidate(sf_dir, kind="clusters")
+
+
+def _release_fit(entry: tuple[DataFrame, DataFrame]) -> None:
+    fit, base = entry
+    # The base first: Spark re-plans a cached plan that reads a relation
+    # being unpersisted, which is wasted work for a base about to go too.
+    state.unpersist_quietly(base)
+    state.unpersist_quietly(fit)
+
+
+def _published_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The session's ``clusters`` entry for ``sf_dir``: the persisted fit
+    and, built on it, the persisted Product Details base (every clustered
+    product with its name and category; reference
+    pages/2_Product_Details.py loads this frame once and filters, sorts
+    and pages it in memory). Both are released together."""
+
+    def fit() -> tuple[DataFrame, DataFrame]:
+        feats = product_features(spark, sf_dir)
+        assigned = kmeans_assign(feats, MATRIX_FEATURES, order_col="product_id").select(
+            "product_id", F.col("cluster").cast("int").alias("cluster"), *MATRIX_FEATURES
+        )
+        # Bounded by kmeans_np.DRIVER_ROWS_CAP, so one partition holds it.
+        assigned = assigned.coalesce(1).persist()
+        base = assigned.join(
+            dim_product(spark, sf_dir).select(
+                F.col("ProductID").alias("product_id"),
+                F.col("Name").alias("product_name"),
+                F.col("Type").alias("category"),
+            ),
+            "product_id",
+        )
+        return assigned, base.persist()
+
+    return state.cached(spark, "clusters", sf_dir, (), fit, release=_release_fit)
 
 
 @register("product_clusters", headline=True)
@@ -100,23 +137,23 @@ def product_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the contract; rows-only driver check + silhouette/determinism unit
     tests.
 
-    The fitted assignment is cached per (session, sf_dir) — the engine-side
-    equivalent of the reference caching its clustering result with
-    ``@st.cache_data`` (reference Clustering_Analysis.py:24): fit once per
-    session, serve the labeled plan to every downstream consumer
-    (`cluster_profile`, `cluster_trajectories`, repeat dashboard loads).
+    The fitted assignment is persisted per (session, sf_dir) as one
+    partition — the engine-side equivalent of the reference caching its
+    clustering result with ``@st.cache_data`` (reference
+    Clustering_Analysis.py:24): fit once per session, serve the labeled
+    relation to every downstream consumer (`cluster_profile`,
+    `cluster_trajectories`, repeat dashboard loads). With it the entry
+    publishes the Product Details base, ``fit ⋈ dim_product`` on
+    ``product_id`` (``_published_fit``), persisted too: a page that builds
+    the same join from the same memoized DataFrames is served from it by
+    Spark's cache manager, so its count and page each read one in-memory
+    partition. A plan shaped differently still runs the join. Both leave
+    the store together (``invalidate_cluster_cache``).
     Safe because the fit is same-seed deterministic — the driver-attested
     `cluster_quality_audit` calls ``kmeans_assign`` DIRECTLY (never this
     cache), so its double-fit determinism contract stays a real double fit.
     """
-
-    def fit() -> DataFrame:
-        feats = product_features(spark, sf_dir)
-        return kmeans_assign(feats, MATRIX_FEATURES, order_col="product_id").select(
-            "product_id", F.col("cluster").cast("int").alias("cluster"), *MATRIX_FEATURES
-        )
-
-    return state.cached(spark, "clusters", sf_dir, (), fit)
+    return _published_fit(spark, sf_dir)[0]
 
 
 @register("cluster_profile")
@@ -128,8 +165,9 @@ def cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The dashboard's Overview page renders it, so the answer is persisted
     on first use like a ``state.served`` query's, but held as a
-    ``clusters`` entry: it reads the fit, so it leaves the store with the
-    fit (``invalidate_cluster_cache``).
+    ``clusters`` entry: it reads the persisted one-partition fit, so it
+    leaves the store with the fit and its published Details base
+    (``invalidate_cluster_cache``).
     """
 
     def profile() -> DataFrame:

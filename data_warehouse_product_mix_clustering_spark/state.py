@@ -3,13 +3,13 @@
 Every memo is an entry keyed ``(applicationId, kind, src, params)``:
 
 - ``kind`` names what was built: ``table`` (a resolved parquet scan),
-  ``star`` (a star-schema builder's plan), ``clusters`` (the fitted
-  product clustering and the persisted ``cluster_profile`` that reads
-  it), ``result`` (the persisted answer of a registered query that the
-  dashboard serves, see ``served``), ``shingles`` (a
-  persisted shingle relation), ``postings`` (an on-disk inverted index),
-  ``merges`` (a trained BPE merge table) or ``advice`` (a
-  broadcast-advisor decision);
+  ``star`` (a star-schema builder's plan), ``clusters`` (the persisted
+  product clustering with the Product Details base published with it,
+  and the persisted ``cluster_profile`` that reads it), ``result`` (the
+  persisted answer of a registered query that the dashboard serves, see
+  ``served``), ``shingles`` (a persisted shingle relation), ``postings``
+  (an on-disk inverted index), ``merges`` (a trained BPE merge table) or
+  ``advice`` (a broadcast-advisor decision);
 - ``src`` is the path the value was built from: a table file, or the
   sf_dir for values built from several of its tables;
 - ``params`` tells apart values of one kind built from one ``src``.
@@ -45,11 +45,11 @@ from py4j.protocol import Py4JError
 # (10 scans, 7 star plans, 4 served results, 2 clusters entries, 2 shingle
 # relations, one of each other kind), so the bound holds four corpora.
 MAX_ENTRIES = 128
-# One corpus holds eight entries that own storage (four served results,
-# the persisted cluster profile, two persisted shingle relations and one
-# postings index directory), so the bound holds two corpora before one's
-# renders evict the other's.
-MAX_HELD = 16
+# One corpus holds nine entries that own storage (four served results,
+# the fit with its published Details base, the persisted cluster profile,
+# two persisted shingle relations and one postings index directory), so
+# the bound holds two corpora before one's renders evict the other's.
+MAX_HELD = 18
 
 _entries: "OrderedDict[tuple, tuple[object, Callable | None]]" = OrderedDict()
 _lock = threading.Lock()
@@ -102,8 +102,8 @@ def unpersist_quietly(df) -> None:
     stopped (the exit hook runs after tests and scripts stop theirs)."""
     try:
         df.unpersist()
-    except Py4JError:
-        pass  # session already stopped; nothing to release
+    except (Py4JError, ConnectionError):
+        pass  # session (or its gateway) already stopped; nothing to release
 
 
 def served(fn: Callable) -> Callable:

@@ -216,6 +216,132 @@ def test_star_invalidation_clears_cluster_cache(spark):
     assert b is not a, "post-invalidate call must refit, not reuse"
 
 
+def _details(spark, flt):
+    """The Product Details relation, built as the dashboard page builds
+    it: ``product_clusters ⋈ dim_product`` on ``product_id``, then the
+    page's search, cluster or category filter."""
+    from pyspark.sql import functions as F
+
+    from data_warehouse_product_mix_clustering_spark.etl.star_schema import dim_product
+    from data_warehouse_product_mix_clustering_spark.plans import ml as ml_plans
+
+    df = ml_plans.product_clusters(spark, SF_SMOKE).join(
+        dim_product(spark, SF_SMOKE).select(
+            F.col("ProductID").alias("product_id"),
+            F.col("Name").alias("product_name"),
+            F.col("Type").alias("category"),
+        ),
+        "product_id",
+    )
+    kind, arg = flt
+    if kind == "search":
+        return df.filter(
+            F.lower("product_name").contains(arg) | F.col("product_id").cast("string").contains(arg)
+        )
+    if kind == "cluster":
+        return df.filter(F.col("cluster") == arg)
+    if kind == "category":
+        return df.filter(F.col("category") == arg)
+    return df
+
+
+def _details_widgets(df):
+    """The page's two widgets: the filtered count and one sorted page."""
+    from pyspark.sql import functions as F
+
+    from data_warehouse_product_mix_clustering_spark.operators.pagination import paginate
+
+    return (
+        df.agg(F.count(F.lit(1)).alias("n")),
+        paginate(df, [F.col("profit").desc(), F.col("product_id")], 2, 5),
+    )
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Operator class names of an executed plan, through AQE and its query
+    stages but not into a cached relation's own plan."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        ch = plan.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    return [name] + [n for k in kids for n in _plan_nodes(k)]
+
+
+def _collect_in_group(spark, df, group: str):
+    """``df.collect()`` and the number of jobs it ran, counted under a job
+    group as perfbench's spans count them."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_details_page_reads_the_persisted_base(spark):
+    """Once the fit is published, the Details page's count and page read
+    the persisted base relation: one in-memory partition, no exchange, one
+    job per collect, and the same rows as the join run without either
+    persisted relation."""
+    from data_warehouse_product_mix_clustering_spark.plans import ml as ml_plans
+
+    ml_plans.invalidate_cluster_cache(SF_SMOKE)
+    fit, base = ml_plans._published_fit(spark, SF_SMOKE)
+    category = _details(spark, ("none", None)).first().category
+    filters = [("none", None), ("search", "bolt"), ("cluster", 0), ("category", category)]
+    got = {}
+    try:
+        for flt in filters:
+            for i, df in enumerate(_details_widgets(_details(spark, flt))):
+                rows, jobs = _collect_in_group(spark, df, f"details-{flt[0]}-{i}")
+                nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+                assert "InMemoryTableScanExec" in nodes, (flt, nodes)
+                assert not [n for n in nodes if "Exchange" in n], (flt, nodes)
+                assert jobs == 1, (flt, i, jobs)
+                got[flt, i] = rows
+    finally:
+        base.unpersist()
+        fit.unpersist()
+    try:
+        for flt in filters:
+            for i, df in enumerate(_details_widgets(_details(spark, flt))):
+                assert "InMemoryTableScanExec" not in _plan_nodes(df._jdf.queryExecution().executedPlan())
+                assert df.collect() == got[flt, i], flt
+    finally:
+        ml_plans.invalidate_cluster_cache(SF_SMOKE)
+    n = {kind: got[(kind, arg), 0][0].n for kind, arg in filters}
+    assert n["none"] > n["cluster"] > 0 and n["search"] > 0 and n["category"] > 0
+
+
+def test_refit_releases_the_details_base(spark, monkeypatch):
+    """A refit (``invalidate_cluster_cache``) releases both persisted
+    relations of the old fit, and the next Details render reads the new
+    fit's labels."""
+    from pyspark.sql import functions as F
+
+    from data_warehouse_product_mix_clustering_spark.plans import ml as ml_plans
+
+    ml_plans.invalidate_cluster_cache(SF_SMOKE)
+    fit, base = ml_plans._published_fit(spark, SF_SMOKE)
+    n_products = _details(spark, ("none", None)).count()
+    assert base.is_cached and fit.is_cached
+    ml_plans.invalidate_cluster_cache(SF_SMOKE)
+    assert not base.is_cached and not fit.is_cached
+    monkeypatch.setattr(
+        ml_plans, "kmeans_assign", lambda feats, cols, order_col: feats.withColumn("cluster", F.lit(0))
+    )
+    try:
+        assert _details(spark, ("cluster", 0)).count() == n_products
+    finally:
+        ml_plans.invalidate_cluster_cache(SF_SMOKE)  # drop the one-cluster fit
+
+
 def test_kmeans_refuses_matrix_above_driver_cap(spark, monkeypatch):
     """Above kmeans_np.DRIVER_ROWS_CAP rows the fit refuses the matrix,
     naming the row count and the cap; it never switches to another

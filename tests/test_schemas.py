@@ -15,7 +15,7 @@ from data_warehouse_product_mix_clustering_spark import state
 from data_warehouse_product_mix_clustering_spark.etl.star_schema import dim_product
 from data_warehouse_product_mix_clustering_spark.operators.stats import advise_broadcast_join
 from data_warehouse_product_mix_clustering_spark.plans.dedup import shared_shingles
-from data_warehouse_product_mix_clustering_spark.plans.ml import product_clusters
+from data_warehouse_product_mix_clustering_spark.plans.ml import _published_fit
 from data_warehouse_product_mix_clustering_spark.plans.text import _postings_index_for, corpus_bpe_merges
 from data_warehouse_product_mix_clustering_spark.plans.warehouse import cluster_summary
 from data_warehouse_product_mix_clustering_spark.sources import registry
@@ -178,7 +178,9 @@ def _advice(spark, sf):
 STORE_KINDS = {
     "table": (lambda sp, sf: table(sp, "orders", sf), "orders.parquet", "nation.parquet", None),
     "star": (dim_product, "part.parquet", None, None),
-    "clusters": (product_clusters, "lineitem.parquet", None, None),
+    "clusters": (
+        _published_fit, "lineitem.parquet", None, lambda entry: not any(df.is_cached for df in entry)
+    ),
     "result": (cluster_summary, "lineitem.parquet", None, lambda df: not df.is_cached),
     "shingles": (shared_shingles, "documents.parquet", "nation.parquet", lambda df: not df.is_cached),
     "postings": (_postings_index_for, "documents.parquet", "nation.parquet", lambda d: not os.path.exists(d)),
