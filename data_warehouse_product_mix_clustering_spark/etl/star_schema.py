@@ -24,10 +24,21 @@ Every builder has a **mirrored DuckDB SQL CTE** (``SQL_CTES``) so any query
 over the star schema can be oracle-checked: the driver runs the Spark plan
 and the SQL side-by-side on the same parquet files.
 
+``build_star_schema`` is the warehouse load's publish step: it persists
+the four warehouse tables once per sf_dir, and clustering then reads the
+loaded warehouse (reference src/pipelines/clustering.py:66-136) instead of
+deriving the fact again from the OLTP source.
+
 Scale notes (100 TB design):
 - The fact build is one shuffle join on the order key; at scale both sides
   would be bucketed by orderkey to make it shuffle-free. Dimension builds are
   tiny (part × quarters) and broadcast everywhere downstream.
+- The published star is persisted at ``persist()``'s default level,
+  ``MEMORY_AND_DISK_DESER``, so a fact larger than executor memory spills
+  to local disk instead of failing. It keeps the fact's shuffle
+  partitioning on the order key (a cached plan's output partitioning is
+  not coalesced), and it is released when any table file under its
+  sf_dir is invalidated.
 - No ``collect()`` anywhere; surrogate keys use a window over a
   dimension-sized input only.
 """
@@ -71,10 +82,6 @@ class StarSchema:
     dim_date: DataFrame
     price_history: DataFrame
     fact_sales: DataFrame
-
-    def register(self, prefix: str = "") -> None:
-        for name in ("dim_product", "dim_date", "price_history", "fact_sales"):
-            getattr(self, name).createOrReplaceTempView(prefix + name)
 
 
 @_per_session
@@ -234,13 +241,38 @@ def fact_priced(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _unpersist_star(star: StarSchema) -> None:
+    for df in vars(star).values():
+        state.unpersist_quietly(df)
+
+
 def build_star_schema(spark: SparkSession, sf_dir: str) -> StarSchema:
-    return StarSchema(
-        dim_product=dim_product(spark, sf_dir),
-        dim_date=dim_date(spark, sf_dir),
-        price_history=price_history(spark, sf_dir),
-        fact_sales=fact_sales(spark, sf_dir),
-    )
+    """The warehouse load's publish step: the four warehouse tables of
+    ``sf_dir``, each persisted, held as the ``star`` entry
+    ``(sf_dir, "published")``.
+
+    The tables are the per-session builders' own DataFrames, so the first
+    action on each (the load's write) materializes it, and Spark's cache
+    manager substitutes it into every later plan built from the same
+    builders: ``fact_priced``, ``product_features`` and the fit read the
+    loaded warehouse instead of re-deriving the fact from ``lineitem`` and
+    ``orders``. The entry's release unpersists all four, so invalidating
+    any table file under ``sf_dir`` (or the bounds, another session, or
+    exit) drops them together. Read-only queries take the builders
+    directly and never publish."""
+
+    def publish() -> StarSchema:
+        star = StarSchema(
+            dim_product=dim_product(spark, sf_dir),
+            dim_date=dim_date(spark, sf_dir),
+            price_history=price_history(spark, sf_dir),
+            fact_sales=fact_sales(spark, sf_dir),
+        )
+        for df in vars(star).values():
+            df.persist()
+        return star
+
+    return state.cached(spark, "star", sf_dir, "published", publish, release=_unpersist_star)
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.ml import Pipeline
 from pyspark.ml.evaluation import ClusteringEvaluator
 from pyspark.ml.feature import StandardScaler, VectorAssembler
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from data_warehouse_product_mix_clustering_spark.ml import kmeans_np
@@ -40,14 +40,18 @@ def _fit_labels(
     """Fit k-means on the driver and append an int ``cluster`` column.
 
     localCheckpoint materializes the input once and truncates lineage, so
-    neither the size probe, the collect, nor the returned joined plan
-    recomputes the upstream multi-join. The collected rows are sorted on
+    neither the collect nor the returned joined plan recomputes the
+    upstream multi-join. The row count for the ``DRIVER_ROWS_CAP`` check is
+    an ``observe`` metric of that same checkpoint job, so sizing the input
+    costs no job of its own; the check still runs before anything is
+    collected to the driver. The collected rows are sorted on
     ``order_col`` driver-side (pandas, no Spark sort shuffle): any total
     order works, it only has to be the SAME order every run for the seeded
     fit to be reproducible.
     """
-    df = df.localCheckpoint(eager=True)
-    n, cap = df.count(), kmeans_np.DRIVER_ROWS_CAP
+    rows = Observation()
+    df = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    n, cap = rows.get["n"], kmeans_np.DRIVER_ROWS_CAP
     if n > cap:
         raise ValueError(
             f"k-means input has {n} rows, above kmeans_np.DRIVER_ROWS_CAP={cap}"

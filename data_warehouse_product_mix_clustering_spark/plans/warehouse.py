@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from data_warehouse_product_mix_clustering_spark import state
 from data_warehouse_product_mix_clustering_spark.etl.star_schema import (
-    build_star_schema,
     dim_category,
     dim_date,
     dim_product,
@@ -73,8 +72,7 @@ def cluster_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unmatched products survive via the dim-driving join; COALESCE restores
     the reference's zero defaults.
     """
-    ss = build_star_schema(spark, sf_dir)
-    per_order = ss.fact_sales.groupBy("ProductID", "SalesOrderID").agg(
+    per_order = fact_sales(spark, sf_dir).groupBy("ProductID", "SalesOrderID").agg(
         F.sum("OrderQty").alias("__qty"), F.sum("LineTotal").alias("__line")
     )
     per_product = per_order.groupBy("ProductID").agg(
@@ -83,7 +81,7 @@ def cluster_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("__line").alias("__tr"),
     )
     return (
-        ss.dim_product.select("ProductID", "Name")
+        dim_product(spark, sf_dir).select("ProductID", "Name")
         .join(F.broadcast(per_product), "ProductID", "left")
         .select(
             "ProductID",
@@ -645,9 +643,20 @@ def product_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expand (every fact row tripled — one replica per distinct group —
     before the first shuffle); the two-level shape shuffles the fact once,
     narrow, un-tripled, then shuffles the much smaller per-order rows.
+    That second shuffle is an explicit repartition on ProductID: it
+    satisfies both the distinct aggregate's (ProductID, CustomerID)
+    clustering and the per-product one, where the planner would shuffle
+    once for each. The fact arrives partitioned on its order key (the
+    join's shuffle, or the published star's cached partitioning), so the
+    per-order level needs no shuffle of its own.
     The active-window measures stay CASE-gated on the broadcast FINAL_DATE
     scalar, which comes from the cheap pre-join fact (row-preserving joins
     make the date sets identical) — no driver round-trip.
+
+    The output projection is one ``selectExpr`` of the oracle's rounding
+    expressions, the same plan as the column-function form: each PySpark
+    column function costs several py4j round trips (call-site capture),
+    and this one call halves the round trips of building this plan.
     """
     fp = fact_priced(spark, sf_dir)
     final = fact_sales(spark, sf_dir).select(
@@ -666,7 +675,7 @@ def product_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("profit").alias("o_profit"),
         )
     )
-    stats = per_order.groupBy("ProductID").agg(
+    stats = per_order.repartition("ProductID").groupBy("ProductID").agg(
         F.min("OrderDate").alias("first_sale"),
         F.sum("o_line").alias("alltime_rev"),
         F.max("final_date").alias("final_date"),
@@ -678,24 +687,17 @@ def product_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nunique_customer"
         ),
     )
-    dur = F.datediff(F.col("final_date"), F.col("first_sale"))
-    return (
-        stats.filter(F.col("order_frequency") > 0)
-        .select(
-            F.col("ProductID").alias("product_id"),
-            money_round(F.col("sum_profit")).alias("profit"),
-            ratio_round(F.col("sum_profit") / F.col("sum_line")).alias("profit_margin"),
-            ratio_round(F.col("sum_line") / F.col("sum_qty"), 4).alias("average_unit_price"),
-            ratio_round(F.col("sum_qty") / F.col("order_frequency")).alias("avg_quantity_sold"),
-            F.col("nunique_customer"),
-            ratio_round(
-                F.col("order_frequency").cast("double") / F.col("nunique_customer")
-            ).alias("customer_loyalty"),
-            ratio_round(
-                F.col("sum_line") * dur / (F.col("alltime_rev") * F.lit(365))
-            ).alias("revenue_growth"),
-            dur.cast("long").alias("selling_duration"),
-        )
+    dur = "datediff(final_date, first_sale)"
+    return stats.filter("order_frequency > 0").selectExpr(
+        "ProductID AS product_id",
+        f"{sql_money_round('sum_profit')} AS profit",
+        f"{sql_ratio_round('sum_profit / sum_line')} AS profit_margin",
+        f"{sql_ratio_round('sum_line / sum_qty', 4)} AS average_unit_price",
+        f"{sql_ratio_round('sum_qty / order_frequency')} AS avg_quantity_sold",
+        "nunique_customer",
+        f"{sql_ratio_round('CAST(order_frequency AS DOUBLE) / nunique_customer')} AS customer_loyalty",
+        f"{sql_ratio_round(f'sum_line * {dur} / (alltime_rev * 365)')} AS revenue_growth",
+        f"CAST({dur} AS BIGINT) AS selling_duration",
     )
 
 
@@ -978,9 +980,9 @@ def product_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, so page 3 is identical across engines and runs. Spark plans
     offset+limit as a global TopK of 60 rows, not a full sort.
     """
-    ss = build_star_schema(spark, sf_dir)
+    prod = dim_product(spark, sf_dir)
     revs = (
-        ss.fact_sales.join(F.broadcast(ss.dim_product), "ProductID", "right")
+        fact_sales(spark, sf_dir).join(F.broadcast(prod), "ProductID", "right")
         .groupBy("ProductID", "Name")
         .agg(money_round(F.coalesce(F.sum("LineTotal"), F.lit(0.0))).alias("revenue"))
     )

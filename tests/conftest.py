@@ -69,6 +69,40 @@ def spark():
     s.stop()
 
 
+# Queries that two tests collect at SF_SMOKE: each audit's contract test
+# and its oracle parity id, and doc_lang_classifier's rows-only run and
+# shape test. ``collected`` runs each of these once per session.
+SHARED_ANSWERS = frozenset(
+    {
+        "doc_lang_classifier",
+        "doremi_training_batches_audit",
+        "lang_classifier_audit",
+        "quality_classifier_audit",
+        "stream_model_scoring_audit",
+        "training_batches_audit",
+    }
+)
+
+
+@pytest.fixture(scope="session")
+def collected(spark):
+    """``collected(name)``: registered query ``name``'s answer at SF_SMOKE
+    as a pandas frame. A ``SHARED_ANSWERS`` query is collected on first
+    use and every reader gets its own copy of that frame."""
+    from data_warehouse_product_mix_clustering_spark.plans.registry import all_queries
+
+    queries, memo = all_queries(), {}
+
+    def get(name: str):
+        if name not in SHARED_ANSWERS:
+            return queries[name].fn(spark, SF_SMOKE).toPandas()
+        if name not in memo:
+            memo[name] = queries[name].fn(spark, SF_SMOKE).toPandas()
+        return memo[name].copy()
+
+    return get
+
+
 def make_duckdb(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TESTDATA_TABLES:

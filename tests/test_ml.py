@@ -257,9 +257,9 @@ def _details_widgets(df):
     )
 
 
-def _plan_nodes(plan) -> list[str]:
-    """Operator class names of an executed plan, through AQE and its query
-    stages but not into a cached relation's own plan."""
+def _plan_walk(plan) -> list:
+    """The operators of an executed plan, through AQE and its query stages
+    but not into a cached relation's own plan."""
     name = plan.getClass().getSimpleName()
     if name == "AdaptiveSparkPlanExec":
         kids = [plan.executedPlan()]
@@ -268,20 +268,30 @@ def _plan_nodes(plan) -> list[str]:
     else:
         ch = plan.children()
         kids = [ch.apply(i) for i in range(ch.size())]
-    return [name] + [n for k in kids for n in _plan_nodes(k)]
+    return [plan] + [n for k in kids for n in _plan_walk(k)]
 
 
-def _collect_in_group(spark, df, group: str):
-    """``df.collect()`` and the number of jobs it ran, counted under a job
+def _plan_nodes(plan) -> list[str]:
+    """Operator class names of an executed plan, as ``_plan_walk``."""
+    return [n.getClass().getSimpleName() for n in _plan_walk(plan)]
+
+
+def _run_in_group(spark, action, group: str):
+    """``action()`` and the number of jobs it ran, counted under a job
     group as perfbench's spans count them."""
     sc = spark.sparkContext
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        rows = df.collect()
+        result = action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _collect_in_group(spark, df, group: str):
+    """``df.collect()`` and the number of jobs it ran, as ``_run_in_group``."""
+    return _run_in_group(spark, df.collect, group)
 
 
 def test_details_page_reads_the_persisted_base(spark):
@@ -340,6 +350,96 @@ def test_refit_releases_the_details_base(spark, monkeypatch):
         assert _details(spark, ("cluster", 0)).count() == n_products
     finally:
         ml_plans.invalidate_cluster_cache(SF_SMOKE)  # drop the one-cluster fit
+
+
+def test_fit_reads_the_published_star(spark, tmp_path):
+    """Once the warehouse load has published the star and written its four
+    tables, the features plan reads the persisted relations, not the
+    ``lineitem``/``orders`` files; the fit runs at most 8 jobs; and its
+    partition equals the one the same plan gives from the sources."""
+    from data_warehouse_product_mix_clustering_spark import state
+    from data_warehouse_product_mix_clustering_spark.etl.star_schema import build_star_schema
+    from data_warehouse_product_mix_clustering_spark.sources.versioned import write_version
+
+    def fit(feats):
+        return kmeans_assign(feats, MATRIX_FEATURES, order_col="product_id")
+
+    def labels(assigned):
+        return sorted(tuple(r) for r in assigned.select("product_id", "cluster").collect())
+
+    def source_scans(feats):
+        return [
+            n.toString()
+            for n in _plan_walk(feats._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName() == "FileSourceScanExec"
+            and ("lineitem" in n.toString() or "orders" in n.toString())
+        ]
+
+    state.invalidate(SF_SMOKE)
+    star = build_star_schema(spark, SF_SMOKE)
+    try:
+        for name, df in vars(star).items():
+            write_version(df, str(tmp_path / name))
+        feats = product_features(spark, SF_SMOKE)
+        nodes = _plan_nodes(feats._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScanExec" in nodes, nodes
+        assert not source_scans(feats)
+        assigned, jobs = _run_in_group(spark, lambda: fit(feats), "fit-from-published-star")
+        assert jobs <= 8, jobs
+        published = labels(assigned)
+        for df in vars(star).values():
+            df.unpersist()
+        feats = product_features(spark, SF_SMOKE)
+        assert "InMemoryTableScanExec" not in _plan_nodes(feats._jdf.queryExecution().executedPlan())
+        assert source_scans(feats)
+        assert published == labels(fit(feats))
+    finally:
+        state.invalidate(SF_SMOKE)
+
+
+def test_rewrite_releases_the_published_star(spark, tmp_path):
+    """Rewriting ``lineitem.parquet`` and invalidating that path releases
+    all four published tables, and the next published fact is the
+    rewritten file's, as ``SQL_CTES`` computes it."""
+    import math
+    import os
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from data_warehouse_product_mix_clustering_spark.etl.star_schema import build_star_schema, star_sql
+    from data_warehouse_product_mix_clustering_spark.sources import registry
+
+    from conftest import make_duckdb
+
+    def held(df) -> bool:
+        level = df.storageLevel
+        return df.is_cached or level.useMemory or level.useDisk
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf)
+    try:
+        old = build_star_schema(spark, sf)
+        for df in vars(old).values():
+            df.count()
+        assert all(held(df) for df in vars(old).values())
+        li = os.path.join(sf, "lineitem.parquet")
+        full = pq.read_table(li)
+        pq.write_table(full.filter(pc.equal(pc.bit_wise_and(full["l_orderkey"], 1), 0)), li)
+        registry.invalidate(li)
+        assert not [name for name, df in vars(old).items() if held(df)]
+        got = build_star_schema(spark, sf).fact_sales.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("LineTotal").alias("revenue")
+        ).first()
+        con = make_duckdb(sf)
+        want = con.execute(star_sql("SELECT count(*), sum(LineTotal) FROM fact_sales")).fetchone()
+        con.close()
+        assert got.n == want[0] < full.num_rows
+        assert math.isclose(got.revenue, want[1], rel_tol=1e-9)
+    finally:
+        registry.invalidate(sf)
 
 
 def test_kmeans_refuses_matrix_above_driver_cap(spark, monkeypatch):

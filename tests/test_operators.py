@@ -2365,7 +2365,7 @@ def test_maxmin_coreset_edges(spark):
     assert maxmin_coreset(empty, "id", "v", 2) == []
 
 
-def test_training_batches_audit_contract(spark):
+def test_training_batches_audit_contract(collected):
     """plans/pipeline/batches.py::training_batches_audit (pre-staged r15) returns
     all-TRUE at sf0.001: the one-call corpus→batches composition
     conserves tokens corpus→windows→batches, ships exact dense-tensor
@@ -2374,9 +2374,7 @@ def test_training_batches_audit_contract(spark):
     recipe, and — the deployment-shape claim — equals the same five
     stages run as separate parquet-materialized jobs with reshuffled
     layouts. This test IS the registration's dry run."""
-    from data_warehouse_product_mix_clustering_spark.plans.pipeline import training_batches_audit
-
-    row = training_batches_audit(spark, SF_SMOKE).collect()[0]
+    row = collected("training_batches_audit").iloc[0]
     assert row["tokens_conserved"]
     assert row["batches_exact"]
     assert row["prefix_fair"]
@@ -2385,7 +2383,7 @@ def test_training_batches_audit_contract(spark):
     assert row["contract_bites"]
 
 
-def test_doremi_training_batches_audit_contract(spark):
+def test_doremi_training_batches_audit_contract(collected):
     """plans/pipeline/batches.py::doremi_training_batches_audit
     (pre-staged r16) returns all-TRUE at sf0.001: the DoReMi mixture
     enters ``training_batches`` as a recipe field, its keep rates match
@@ -2393,11 +2391,7 @@ def test_doremi_training_batches_audit_contract(spark):
     survivors, the recipe (mixture field included) rebuilds to the same
     fingerprint, and the field demonstrably changes the plan vs the
     temperature default. This test IS the registration's dry run."""
-    from data_warehouse_product_mix_clustering_spark.plans.pipeline import (
-        doremi_training_batches_audit,
-    )
-
-    row = doremi_training_batches_audit(spark, SF_SMOKE).collect()[0]
+    row = collected("doremi_training_batches_audit").iloc[0]
     assert row["rates_match_twin"]
     assert row["policy_applied"]
     assert row["fingerprint_reproducible"]
@@ -2748,15 +2742,13 @@ def test_train_logreg_py_learns_separable_toy():
     assert w == w2
 
 
-def test_quality_classifier_audit_contract(spark):
+def test_quality_classifier_audit_contract(collected):
     """plans/pipeline/classifiers.py::quality_classifier_audit (pre-staged r15) — the
     registration dry run: all five contract booleans TRUE at sf0.001
     (twin bit-equality incl. the loss trace, rerun identity, descending
     loss, held-out accuracy ≥ floor, gate separation)."""
-    from data_warehouse_product_mix_clustering_spark.plans.pipeline import quality_classifier_audit
-
-    row = quality_classifier_audit(spark, SF_SMOKE).collect()[0]
-    assert all(row.asDict().values()), row.asDict()
+    row = collected("quality_classifier_audit").iloc[0].to_dict()
+    assert all(row.values()), row
 
 
 def test_doc_quality_classifier_shape_and_holdout(spark):
@@ -2828,15 +2820,13 @@ def test_quality_model_serving_audit_contract(spark):
     assert all(row.asDict().values()), row.asDict()
 
 
-def test_stream_model_scoring_audit_contract(spark):
+def test_stream_model_scoring_audit_contract(collected):
     """plans/pipeline/classifiers.py::stream_model_scoring_audit (pre-staged r15) —
     the registration dry run: all four contract booleans TRUE at
     sf0.001 (streamed ≡ one-batch scoring under the frozen artifact,
     count log reconciles, rerun no-op, replay idempotent)."""
-    from data_warehouse_product_mix_clustering_spark.plans.pipeline import stream_model_scoring_audit
-
-    row = stream_model_scoring_audit(spark, SF_SMOKE).collect()[0]
-    assert all(row.asDict().values()), row.asDict()
+    row = collected("stream_model_scoring_audit").iloc[0].to_dict()
+    assert all(row.values()), row
 
 
 def test_benchmark_contamination_report_matches_duckdb_twin(spark):
@@ -2999,30 +2989,25 @@ def test_training_corpus_dsir_budgeted_matches_duckdb_twin(spark):
         assert kept - straddle < alloc[src]
 
 
-def test_lang_classifier_audit_contract(spark):
+def test_lang_classifier_audit_contract(collected):
     """plans/pipeline/classifiers.py::lang_classifier_audit (pre-staged r15) — the
     registration dry run: all four contract booleans TRUE at sf0.001
     (softmax twin bit-equality incl. the loss trace, rerun identity,
     descending cross-entropy, held-out accuracy strictly beating the
     majority class)."""
-    from data_warehouse_product_mix_clustering_spark.plans.pipeline import lang_classifier_audit
-
-    row = lang_classifier_audit(spark, SF_SMOKE).collect()[0]
-    assert all(row.asDict().values()), row.asDict()
+    row = collected("lang_classifier_audit").iloc[0].to_dict()
+    assert all(row.values()), row
 
 
-def test_doc_lang_classifier_shape(spark):
+def test_doc_lang_classifier_shape(spark, collected):
     """plans/pipeline/classifiers.py::doc_lang_classifier (pre-staged r15,
     rows-only): one row per nonempty doc, agrees ≡ (pred == teacher),
     p_top in (0, 1], and held-out agreement beats the held-out majority
     share."""
-    from data_warehouse_product_mix_clustering_spark.plans.pipeline import (
-        _lang_labels,
-        doc_lang_classifier,
-    )
+    from data_warehouse_product_mix_clustering_spark.plans.pipeline import _lang_labels
     from data_warehouse_product_mix_clustering_spark.sources.registry import table
 
-    got = doc_lang_classifier(spark, SF_SMOKE).toPandas()
+    got = collected("doc_lang_classifier")
     docs = table(spark, "documents", SF_SMOKE)
     n_labeled = _lang_labels(docs).count()
     assert len(got) == n_labeled

@@ -13,7 +13,7 @@ import pytest
 
 from data_warehouse_product_mix_clustering_spark.plans.registry import all_queries
 
-from conftest import SF_SMOKE, make_duckdb  # noqa: F401
+from conftest import SF_SMOKE, SHARED_ANSWERS, make_duckdb  # noqa: F401
 
 QUERIES = all_queries()
 WITH_ORACLE = sorted(n for n, q in QUERIES.items() if q.oracle is not None)
@@ -33,9 +33,9 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
-def test_oracle_parity(name, spark, duck_smoke):
+def test_oracle_parity(name, collected, duck_smoke):
     q = QUERIES[name]
-    got = normalize(q.fn(spark, SF_SMOKE).toPandas())
+    got = normalize(collected(name))
     want = normalize(duck_smoke.sql(q.oracle).df())
 
     assert list(got.columns) == list(want.columns), (
@@ -64,8 +64,13 @@ def test_oracle_parity(name, spark, duck_smoke):
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(name, spark):
+def test_rows_only_queries_run(name, spark, collected):
     """Queries without an oracle must still run and return a stable schema."""
+    if name in SHARED_ANSWERS:
+        got = collected(name)
+        assert list(got.columns)
+        assert len(got) >= 0
+        return
     df = QUERIES[name].fn(spark, SF_SMOKE)
     assert df.columns
     assert df.count() >= 0

@@ -12,7 +12,7 @@ from pyspark.sql import types as T
 
 from data_warehouse_product_mix_clustering_spark import schemas as S
 from data_warehouse_product_mix_clustering_spark import state
-from data_warehouse_product_mix_clustering_spark.etl.star_schema import dim_product
+from data_warehouse_product_mix_clustering_spark.etl.star_schema import build_star_schema
 from data_warehouse_product_mix_clustering_spark.operators.stats import advise_broadcast_join
 from data_warehouse_product_mix_clustering_spark.plans.dedup import shared_shingles
 from data_warehouse_product_mix_clustering_spark.plans.ml import _published_fit
@@ -177,7 +177,12 @@ def _advice(spark, sf):
 # released" probe or None for kinds that hold nothing to release).
 STORE_KINDS = {
     "table": (lambda sp, sf: table(sp, "orders", sf), "orders.parquet", "nation.parquet", None),
-    "star": (dim_product, "part.parquet", None, None),
+    "star": (
+        build_star_schema,
+        "part.parquet",
+        None,
+        lambda star: not any(df.is_cached for df in vars(star).values()),
+    ),
     "clusters": (
         _published_fit, "lineitem.parquet", None, lambda entry: not any(df.is_cached for df in entry)
     ),
@@ -241,11 +246,14 @@ def test_store_entry_lifecycle(spark, monkeypatch, kind):
     probe(spark, [].append)
     monkeypatch.setattr(state, "MAX_HELD", held)
     state.invalidate(kind="probe")
+    # Probed before the rebuild: a rebuilt published star persists the
+    # same builder DataFrames again.
+    evicted = released is not None and released(a)
     b, new = fetch()
     if released is None:
         assert b is a and not new, "an entry that owns nothing must survive the held bound"
     else:
-        assert new and released(a), "the held bound must evict and release the entry"
+        assert new and evicted, "the held bound must evict and release the entry"
     a = b
 
     # The LRU bound holds, and eviction releases the entry.
@@ -341,6 +349,49 @@ def test_served_result_follows_a_rewritten_lineitem(spark, tmp_path, name):
     assert new != old
     assert new == answer(fn.__wrapped__(spark, sf))
     registry.invalidate(sf)
+
+
+def test_store_builds_a_key_once_under_racing_misses():
+    """Threads that miss on one key while another thread builds it wait
+    for that build: one build, every caller gets its value, nothing is
+    released. (Two builds of one persisted plan share one cache entry, so
+    releasing the loser would uncache the winner's value.) A build that
+    raises leaves no key marked as being built."""
+    import threading
+    import time
+
+    session = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="race-app"))
+    built, released, got = [], [], []
+
+    def build():
+        time.sleep(0.05)
+        built.append(object())
+        return built[-1]
+
+    barrier = threading.Barrier(8)
+
+    def worker():
+        barrier.wait()
+        got.append(state.cached(session, "probe", "/race", (), build, released.append))
+
+    threads = [threading.Thread(target=worker) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert len(built) == 1 and not released
+        assert len(got) == 8 and all(v is built[0] for v in got)
+
+        def failing():
+            raise RuntimeError("build failed")
+
+        with pytest.raises(RuntimeError):
+            state.cached(session, "probe", "/race-failed", (), failing)
+        assert not state._building
+    finally:
+        state.invalidate(kind="probe")
 
 
 def test_store_concurrent_inserts_release_every_loser(monkeypatch):
